@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -45,8 +45,8 @@ import org.apache.spark.sql.types.DecimalType
   * true)`: one eager job per round, storing the BINARY InternalRow
   * format the next round rescans directly. The alternative —
   * `persist` + `createDataFrame(df.rdd, schema)` lineage re-wrap —
-  * measured 25-33% slower on 1M-edge deep-path graphs
-  * ([[graft.tools.CcProbe]]: the re-wrap converts every cached row
+  * measured 25-33% slower on 1M-edge deep-path graphs (local[32],
+  * 2000 paths × 512 nodes: the re-wrap converts every cached row
   * InternalRow→Row on read and back on write, every round). The cost
   * of checkpoint mode: spent rounds' blocks are reclaimed by the
   * ContextCleaner after their references are GC'd rather than
@@ -97,136 +97,87 @@ object ConnectedComponents {
     * @return (doc, cluster): every vertex of a real edge labeled with
     *         its component's minimum id (the canonical survivor) */
   def run(pairs: DataFrame, srcCol: String, dstCol: String,
-      maxIters: Int = 50): DataFrame =
-    runImpl(pairs, srcCol, dstCol, maxIters, midLoopLocalCheckpoint = true)
-
-  /** Probe seam for [[graft.tools.CcProbe]]: `midLoopLocalCheckpoint`
-    * selects per-round lineage truncation — `true` (production
-    * default; ~25-33% faster on 1M-edge deep-path graphs) checkpoints
-    * each round's binary rows; `false` keeps the persist +
-    * createDataFrame re-wrap for comparison. Package-private so the
-    * production entry point stays a single code path. */
-  private[graft] def runImpl(pairs: DataFrame, srcCol: String, dstCol: String,
-      maxIters: Int, midLoopLocalCheckpoint: Boolean): DataFrame = {
-    val spark = pairs.sparkSession
-    val raw = pairs
+      maxIters: Int = 50): DataFrame = {
+    var edges = pairs
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src") =!= col("dst"))
-    var edges =
-      if (midLoopLocalCheckpoint) raw.localCheckpoint(eager = true)
-      else raw.persist()
-    // try/finally: the non-convergence throw (or any mid-loop failure)
-    // must not leave the current round pinned in a long-lived session's
-    // block manager. (null in localCheckpoint mode — checkpoint blocks
-    // are the ContextCleaner's to reclaim, not CacheManager entries.)
-    var pinned: DataFrame = if (midLoopLocalCheckpoint) null else edges
-    // This round's persist until it is materialized and takes over from
-    // `pinned`; tracked separately so cleanup can release BOTH
-    // copies no matter where in the round a failure lands.
-    var fresh: DataFrame = null
-    try {
-      var prev: (Long, java.math.BigDecimal, java.math.BigDecimal) = null
-      var iter = 0
-      // No upfront emptiness probe: a nonempty edge set always contracts
-      // to a nonempty one (the component-minimum edge survives every
-      // rewrite), so the first round's observed count doubles as the
-      // empty-input check — one scheduler job saved per clustering.
-      var done = false
-      while (!done && iter < maxIters) {
-        // The convergence checksum rides the SAME job that materializes
-        // the round: CollectMetrics evaluates while the cache (or
-        // checkpoint) is built, so each round costs one scheduler job
-        // where it previously cost two (materialize + separate agg).
-        val obs = Observation()
-        val observed = smallStar(largeStar(edges)).observe(obs,
-          count(lit(1)).as("cnt"),
-          sum(col("src").cast(DecimalType(38, 0))).as("src_sum"),
-          sum(col("dst").cast(DecimalType(38, 0))).as("dst_sum"))
-        if (midLoopLocalCheckpoint) {
-          edges = observed.localCheckpoint(eager = true)
-        } else {
-          val next = observed.persist()
-          fresh = next
-          // Materialize `next` FIRST — it computes from the previous
-          // round's cache. Only after it holds blocks may the previous
-          // round be unpersisted: dropping it earlier would force this
-          // job to recompute the whole lineage (round 1 re-reads the
-          // source; largeStar scans its input twice).
-          next.count()
-          if (pinned != null) pinned.unpersist()
-          pinned = next
-          fresh = null
-          // Truncate lineage EXPLICITLY: persist alone leaves the
-          // logical plan nesting the previous round's plan (doubling
-          // per round). Re-wrapping the cached rows as a fresh
-          // DataFrame makes every round's plan a shallow scan of the
-          // cached data — memory stays at two edge-set copies
-          // regardless of depth.
-          edges = spark.createDataFrame(next.toDF().rdd, next.schema)
-        }
-        val m = obs.get
-        val cnt = m("cnt").asInstanceOf[Long]
-        def dec(k: String): java.math.BigDecimal = m.getOrElse(k, null) match {
-          case null => null
-          case d: java.math.BigDecimal => d
-          case d: scala.math.BigDecimal => d.bigDecimal
-        }
-        val (sSrc, sDst) = (dec("src_sum"), dec("dst_sum"))
-        if (cnt > 0 && (sSrc == null || sDst == null))
-          throw new IllegalStateException(
-            "connected components: DECIMAL(38,0) checksum overflow — " +
-            s"NULL sum over $cnt edges; cannot verify convergence")
-        done = cnt == 0 || (prev != null && prev._1 == cnt &&
-          decEq(prev._2, sSrc) && decEq(prev._3, sDst))
-        prev = (cnt, sSrc, sDst)
-        iter += 1
+      .localCheckpoint(eager = true)
+    var prev: (Long, java.math.BigDecimal, java.math.BigDecimal) = null
+    var iter = 0
+    // No upfront emptiness probe: a nonempty edge set always contracts
+    // to a nonempty one (the component-minimum edge survives every
+    // rewrite), so the first round's observed count doubles as the
+    // empty-input check — one scheduler job saved per clustering.
+    var done = false
+    while (!done && iter < maxIters) {
+      // The convergence checksum rides the SAME job that materializes
+      // the round: CollectMetrics evaluates while the checkpoint is
+      // built, so each round costs one scheduler job where it
+      // previously cost two (materialize + separate agg).
+      val obs = Observation()
+      val observed = smallStar(largeStar(edges)).observe(obs,
+        count(lit(1)).as("cnt"),
+        sum(col("src").cast(DecimalType(38, 0))).as("src_sum"),
+        sum(col("dst").cast(DecimalType(38, 0))).as("dst_sum"))
+      edges = observed.localCheckpoint(eager = true)
+      val m = obs.get
+      val cnt = m("cnt").asInstanceOf[Long]
+      def dec(k: String): java.math.BigDecimal = m.getOrElse(k, null) match {
+        case null => null
+        case d: java.math.BigDecimal => d
+        case d: scala.math.BigDecimal => d.bigDecimal
       }
-      if (!done)
+      val (sSrc, sDst) = (dec("src_sum"), dec("dst_sum"))
+      if (cnt > 0 && (sSrc == null || sDst == null))
         throw new IllegalStateException(
-          s"connected components did not converge in $maxIters rounds")
-      // Star forest → labels: children carry their root, roots carry
-      // themselves. groupBy-min collapses the duplicate root rows.
-      // localCheckpoint materializes the (small) label set into RDD
-      // blocks so the finally block can release every round cache —
-      // the result owes nothing to this operator's scratch state.
-      //
-      // Fixpoint validation rides the SAME job (a second Observation):
-      // a converged edge set must be a forest of stars — no node may be
-      // both a child (an edge src) and a parent (an edge dst), and every
-      // child must have exactly one parent (a two-parent child like
-      // {(x,r1),(x,r2)} has no chain yet still isn't a star). This
-      // guards the checksum against collisions; fused here it costs
-      // per-group flags inside the label aggregation instead of the
-      // separate self-join job it used to run.
-      val forest = Observation()
-      val labels = edges
-        .select(col("src").as("doc"), col("dst").as("cluster"),
-          lit(true).as("is_child"))
-        .unionByName(edges.select(col("dst").as("doc"), col("dst").as("cluster"),
-          lit(false).as("is_child")))
-        .groupBy(col("doc"))
-        .agg(min(col("cluster")).as("cluster"),
-          countDistinct(when(col("is_child"), col("cluster"))).as("n_parents"),
-          max(col("is_child")).as("has_child"),
-          max(!col("is_child")).as("has_parent"))
-        .observe(forest, sum(when(
-            (col("has_child") && col("has_parent")) || col("n_parents") > 1,
-            1L).otherwise(0L)).as("violations"))
-        .select(col("doc"), col("cluster"))
-        .localCheckpoint(eager = true)
-      val violations = forest.get.getOrElse("violations", null) match {
-        case null    => 0L // empty edge set: SUM over zero rows is NULL
-        case n: Long => n
-      }
-      if (violations > 0)
-        throw new IllegalStateException(
-          "connected components: checksum converged on a non-star edge " +
-          "set (checksum collision); refusing to emit wrong labels")
-      labels
-    } finally {
-      if (fresh != null) fresh.unpersist()
-      if (pinned != null) pinned.unpersist()
+          "connected components: DECIMAL(38,0) checksum overflow — " +
+          s"NULL sum over $cnt edges; cannot verify convergence")
+      done = cnt == 0 || (prev != null && prev._1 == cnt &&
+        decEq(prev._2, sSrc) && decEq(prev._3, sDst))
+      prev = (cnt, sSrc, sDst)
+      iter += 1
     }
+    if (!done)
+      throw new IllegalStateException(
+        s"connected components did not converge in $maxIters rounds")
+    // Star forest → labels: children carry their root, roots carry
+    // themselves. groupBy-min collapses the duplicate root rows.
+    // localCheckpoint materializes the (small) label set into RDD
+    // blocks, so the result owes nothing to the spent rounds.
+    //
+    // Fixpoint validation rides the SAME job (a second Observation):
+    // a converged edge set must be a forest of stars — no node may be
+    // both a child (an edge src) and a parent (an edge dst), and every
+    // child must have exactly one parent (a two-parent child like
+    // {(x,r1),(x,r2)} has no chain yet still isn't a star). This
+    // guards the checksum against collisions; fused here it costs
+    // per-group flags inside the label aggregation instead of the
+    // separate self-join job it used to run.
+    val forest = Observation()
+    val labels = edges
+      .select(col("src").as("doc"), col("dst").as("cluster"),
+        lit(true).as("is_child"))
+      .unionByName(edges.select(col("dst").as("doc"), col("dst").as("cluster"),
+        lit(false).as("is_child")))
+      .groupBy(col("doc"))
+      .agg(min(col("cluster")).as("cluster"),
+        countDistinct(when(col("is_child"), col("cluster"))).as("n_parents"),
+        max(col("is_child")).as("has_child"),
+        max(!col("is_child")).as("has_parent"))
+      .observe(forest, sum(when(
+          (col("has_child") && col("has_parent")) || col("n_parents") > 1,
+          1L).otherwise(0L)).as("violations"))
+      .select(col("doc"), col("cluster"))
+      .localCheckpoint(eager = true)
+    val violations = forest.get.getOrElse("violations", null) match {
+      case null    => 0L // empty edge set: SUM over zero rows is NULL
+      case n: Long => n
+    }
+    if (violations > 0)
+      throw new IllegalStateException(
+        "connected components: checksum converged on a non-star edge " +
+        "set (checksum collision); refusing to emit wrong labels")
+    labels
   }
 
   private def decEq(a: java.math.BigDecimal, b: java.math.BigDecimal): Boolean =

@@ -1526,32 +1526,31 @@ object SimilarityQueries {
     * whole-stage codegen and shipped m-element arrays through the
     * (q, c)-keyed exchange. The min columns are flat doubles:
     * hash-aggregable, map-side partial-combined, codegen-friendly. */
-  private def adcSum(df: DataFrame, keys: Seq[String]): DataFrame = {
+  private[graft] def adcSum(df: DataFrame, keys: Seq[String]): DataFrame = {
     val parts = (0 until PqM).map(i =>
       min(when(col("sub") === i, col("pd"))).as(s"__p$i"))
-    // Completeness ENFORCED, not narrated (r19 ADVICE; the ilog-guard
-    // rule): the flat-min extraction is only the twin's list fold when
-    // every group carries exactly one partial per subspace. Today's
-    // construction guarantees it (codes are total per (vec, sub), the
-    // LUTs cover all k codes per sub) — but a future pruned LUT or
-    // filtered code set would yield NULL partials, a NULL adc, and
-    // NULL-first asc ranking would silently corrupt the candidate set
-    // where the old fold merely degraded to a partial sum. A group
-    // with ≠ PqM rows now fails loudly instead of ranking first. The
-    // guard is a codegen branch on the group's row count — never taken
-    // in a correct build, and the count aggregate is one extra long per
-    // group in the same hash aggregate.
+    val partCols = (0 until PqM).map(i => col(s"__p$i"))
+    // Completeness ENFORCED, not narrated (the ilog-guard rule): the
+    // flat-min extraction is only the twin's list fold when every
+    // group carries a partial for EVERY subspace. Today's construction
+    // guarantees it (codes are total per (vec, sub), the LUTs cover all
+    // k codes per sub) — but a future pruned LUT or filtered code set
+    // would yield NULL partials, a NULL adc, and NULL-first asc ranking
+    // would silently corrupt the candidate set. So the guard checks
+    // each subspace's partial, not the group's row count: a group that
+    // duplicates one subspace while missing another has the right
+    // count and still a NULL partial. It fails loudly instead of
+    // ranking first — a codegen branch never taken in a correct build.
     df.groupBy(keys.map(col): _*)
-      .agg(parts.head, (parts.tail :+ count(col("sub")).as("__np")): _*)
+      .agg(parts.head, parts.tail: _*)
       .withColumn("adc",
-        when(col("__np") === PqM,
-          (0 until PqM).map(i => col(s"__p$i")).reduce(_ + _))
+        when(partCols.map(_.isNotNull).reduce(_ && _), partCols.reduce(_ + _))
           .otherwise(expr(
             "raise_error('graft.adcSum: incomplete ADC group - expected " +
               s"one partial per subspace (PqM = $PqM); a pruned LUT or " +
               "filtered code set would otherwise rank NULL-adc rows first')")
             .cast("double")))
-      .drop((0 until PqM).map(i => s"__p$i") :+ "__np": _*)
+      .drop((0 until PqM).map(i => s"__p$i"): _*)
   }
 
   /** Exact top-5 rerank of an ADC candidate set `cand(q_id, carry…,

@@ -50,22 +50,26 @@ final class ConsumerGroup private (
     // count <= 0 = unlimited, never take(negative) = silently empty.
     val limit = if (count <= 0) Int.MaxValue else count
     touch(consumer)
-    val owned = pel.valuesIterator.filter(_.consumer == consumer).map(_.msgid).toSet
-    val live = log.all.filter(m => owned.contains(m.msgid))
-    val liveIds = live.map(_.msgid).toSet
-    val ghosts = (owned -- liveIds).toSeq.sorted(MsgId.ordering)
-      .map(id => StreamMessage(id, Map.empty))
     // Redis applies COUNT to PEL re-reads too — a recovering consumer
     // paces its redelivery with the same batch size as fresh reads.
-    (live ++ ghosts).sortBy(m => MsgId.parse(m.msgid)).take(limit)
+    pendingOf(consumer, limit).map(e =>
+      log.get(e.msgid).getOrElse(StreamMessage(e.msgid, Map.empty)))
+  }
+
+  /** C5/G2: XPENDING range form — up to `count` PEL entries with id in
+    * [min, max] (`-`/`+` = open ends), optionally of one consumer, in
+    * id order (the PEL is id-ordered, so this is a seek plus a walk). */
+  def pendingRange(min: String = "-", max: String = "+", count: Int = Int.MaxValue,
+      consumer: Option[String] = None): Seq[PelEntry] = synchronized {
+    val from = if (min == "-") pel else pel.rangeFrom(min)
+    (if (max == "+") from else from.rangeTo(max)).valuesIterator
+      .filter(e => consumer.forall(_ == e.consumer)).take(count).toVector
   }
 
   /** G2/C5: XPENDING_RANGE — up to `count` PEL entries of one consumer
     * over the full id range, in id order. */
-  def pendingOf(consumer: String, count: Int = Int.MaxValue): Seq[PelEntry] = synchronized {
-    pel.valuesIterator.filter(_.consumer == consumer).toSeq
-      .sortBy(e => MsgId.parse(e.msgid)).take(count)
-  }
+  def pendingOf(consumer: String, count: Int = Int.MaxValue): Seq[PelEntry] =
+    pendingRange(count = count, consumer = Some(consumer))
 
   /** C7: XACK — remove from the group PEL; does NOT delete from the
     * stream (the v0.3.0 doc fix, reference `consumer.py:182-190`).

@@ -47,16 +47,13 @@ final class DeadLetterRouter(
     * Returns (sourceId, dlqId) per routed message. */
   def sweep(count: Int = 100): Seq[(String, String)] = {
     require(count > 0, s"sweep count must be positive, got $count")
-    val scanned = group.consumers.flatMap(c => group.pendingOf(c))
-      .sortBy(e => MsgId.parse(e.msgid)).take(count)
-    scanned.filter(_.timesDelivered >= maxDeliveries).flatMap { e =>
+    group.pendingRange(count = count).filter(_.timesDelivered >= maxDeliveries).flatMap { e =>
       // Claim-first: if the entry vanished (acked/claimed concurrently)
       // the claim returns empty and the message is NOT routed — only
       // messages we own at routing time reach the DLQ.
       if (group.claim(Seq(e.msgid), routerId, minIdleMs = 0L).isEmpty) None
       else {
-        val body = group.log.range(e.msgid, e.msgid)
-          .headOption.map(_.content.toSeq).getOrElse(Seq.empty)
+        val body = group.log.get(e.msgid).map(_.content.toSeq).getOrElse(Seq.empty)
         val dlqId = dlq.add(ListMap((body ++ DeadLetterRouter.provenance(
           e.msgid, e.consumer, e.timesDelivered)): _*))
         group.ack(e.msgid)

@@ -16,9 +16,7 @@ package graft.streaming
   * `UTF8String → String` ([[StreamLogReaderFactory]]), so the
   * defensive branch has no Scala analog; this note is its residue.
   */
-final case class StreamMessage(msgid: String, content: Map[String, String]) {
-  def msgidTuple: (Long, Long) = MsgId.parse(msgid)
-}
+final case class StreamMessage(msgid: String, content: Map[String, String])
 
 /** Message-id algebra: `"<ms>-<seq>"`, ordered by (ms, seq) — the Redis
   * stream id total order exploited by the scaler's interval arithmetic

@@ -85,7 +85,7 @@ object ProtocolDemo {
       .option("log", dstKey).option("checkpointLocation", ckpt)
       .start()
     pipe.processAllAvailable(); pipe.stop()
-    println(s"sink log after pipeline: XLEN=${dst.len}, first=${dst.all.head.content}")
+    println(s"sink log after pipeline: XLEN=${dst.len}, first=${dst.range().head.content}")
     spark.stop()
   }
 }

@@ -81,7 +81,7 @@ final class RespLoopback(clock: Clock = SystemClock) {
     * the stream — Redis answers nil fields for those (the readOwn
     * tombstone rule). */
   private def entryById(log: StreamLog, id: String): Reply =
-    log.range(id, id).headOption.map(entryReply).getOrElse(
+    log.get(id).map(entryReply).getOrElse(
       ArrayReply(Some(Vector(bulk(id), ArrayReply(None)))))
 
   private def dispatch(args: Seq[String]): Reply = args.head.toUpperCase match {
@@ -166,15 +166,9 @@ final class RespLoopback(clock: Clock = SystemClock) {
       // (`common.py:66-73`, called from `consumer.py:113-119`).
       require(args.length == 6 || args.length == 7,
         "expected XPENDING <key> <group> <min> <max> <count> [consumer]")
-      val g = groupOf(args(1), args(2))
-      val (min, max, count) = (args(3), args(4), args(5).toInt)
-      val byConsumer = args.lift(6)
+      val rows = groupOf(args(1), args(2))
+        .pendingRange(args(3), args(4), args(5).toInt, args.lift(6))
       val now = clock.nowMs
-      val rows = g.consumers.flatMap(c => g.pendingOf(c))
-        .filter(e => byConsumer.forall(_ == e.consumer))
-        .filter(e => (min == "-" || MsgId.lte(min, e.msgid)) &&
-                     (max == "+" || MsgId.lte(e.msgid, max)))
-        .sortBy(e => MsgId.parse(e.msgid)).take(count)
       ArrayReply(Some(rows.toVector.map(e => ArrayReply(Some(Vector(
         bulk(e.msgid), bulk(e.consumer),
         IntReply(e.timeSinceDelivered(now)), IntReply(e.timesDelivered.toLong)))))))
@@ -187,10 +181,16 @@ final class RespLoopback(clock: Clock = SystemClock) {
       ArrayReply(Some(claimed.toVector.map(entryById(log, _))))
 
     case "XAUTOCLAIM" =>
-      // XAUTOCLAIM s g c minIdle start COUNT n → [cursor, entries] (6.2 shape)
+      // XAUTOCLAIM s g c minIdle start [COUNT n] → [cursor, entries]
+      // (6.2 shape; COUNT defaults to 100, as in Redis)
+      require(args.length == 6 ||
+        (args.length == 8 && args(6).equalsIgnoreCase("COUNT")),
+        "expected XAUTOCLAIM <key> <group> <consumer> <min-idle> <start> [COUNT <n>]")
       val log = logOf(args(1))
-      val (cursor, ids) = groupOf(args(1), args(2))
-        .autoClaim(args(3), args(4).toLong, args(5), args(7).toInt)
+      val g = groupOf(args(1), args(2))
+      val (cursor, ids) =
+        if (args.length == 6) g.autoClaim(args(3), args(4).toLong, args(5))
+        else g.autoClaim(args(3), args(4).toLong, args(5), args(7).toInt)
       ArrayReply(Some(Vector(bulk(cursor),
         ArrayReply(Some(ids.toVector.map(entryById(log, _)))))))
 

@@ -16,13 +16,7 @@ final class Scaler(log: StreamLog, groupName: String, clock: Clock = SystemClock
     * `test_scaler.py:125-126`) computes exactly this intended value,
     * which is what we implement. Returns (backlog, pending). */
   def collectMetrics(): (Int, Int) = {
-    val pending = group.pendingCount
-    val last = group.lastDelivered
-    val backlog =
-      if (last == MsgId.Zero) log.len
-      else if (last == log.lastGeneratedId) 0
-      else log.all.count(m => MsgId.lt(last, m.msgid))
-    (backlog, pending)
+    (log.countAfter(group.lastDelivered), group.pendingCount)
   }
 
   def calculateRate(backlog: Int, pending: Int): Double =
@@ -118,14 +112,9 @@ final class StreamingScaler(logKey: String) {
     * with the PEL-based [[Scaler.collectMetrics]], whose pending is
     * tracked independently of the buffer ([[ConsumerGroup]] state). */
   def collectMetrics(deliveredUpTo: String): (Int, Int) = {
+    val backlog = log.countAfter(deliveredUpTo)
     val acked = StreamLogRegistry.committedId(logKey)
-    val backlog =
-      if (deliveredUpTo == MsgId.Zero) log.len
-      else if (deliveredUpTo == log.lastGeneratedId) 0
-      else log.all.count(m => MsgId.lt(deliveredUpTo, m.msgid))
-    val pending = log.all.count(m =>
-      MsgId.lt(acked, m.msgid) && MsgId.lte(m.msgid, deliveredUpTo))
-    (backlog, pending)
+    (backlog, math.max(0, log.countAfter(acked) - backlog))
   }
 
   /** S5 from live offsets: validate → rate → decide.

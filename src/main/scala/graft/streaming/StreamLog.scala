@@ -1,5 +1,6 @@
 package graft.streaming
 
+import scala.collection.Searching.{Found, SearchResult}
 import scala.collection.mutable
 
 /** Append-only message log with Redis-stream semantics: monotonic
@@ -17,6 +18,10 @@ import scala.collection.mutable
   */
 final class StreamLog(clock: Clock = SystemClock) {
 
+  // Always in strictly increasing id order: `add` mints monotonic ids,
+  // `trim` drops a prefix and XDEL filters in place — so every id
+  // lookup below is one binary search (`search`), and every reply is a
+  // copy of a slice, never a view of this mutable buffer.
   private val buf = mutable.ArrayBuffer.empty[StreamMessage]
   private var lastMs  = -1L
   private var lastSeq = -1L
@@ -33,6 +38,7 @@ final class StreamLog(clock: Clock = SystemClock) {
       maxlen: Option[Int] = None,
       approximate: Boolean = true,
       macroNode: Int = 16): String = synchronized {
+    maxlen.foreach(m => require(m >= 0, "MAXLEN argument must be >= 0"))
     val ms = math.max(clock.nowMs, lastMs)
     val seq0 = if (ms == lastMs) lastSeq + 1 else 0L
     // Redis forbids entry id 0-0 (the before-everything sentinel; our
@@ -55,6 +61,7 @@ final class StreamLog(clock: Clock = SystemClock) {
 
   /** XTRIM maxlen: keep only the newest `maxlen` messages. */
   def trim(maxlen: Int): Int = synchronized {
+    require(maxlen >= 0, "MAXLEN argument must be >= 0")
     val removed = math.max(buf.length - maxlen, 0)
     if (removed > 0) {
       // trimmed prefix is id-ordered: its last element is its max
@@ -80,17 +87,35 @@ final class StreamLog(clock: Clock = SystemClock) {
   private def noteDeleted(id: String): Unit =
     if (MsgId.lt(maxDeleted, id)) maxDeleted = id
 
+  /** Binary search for `id` (parsed once): `Found(i)` if present,
+    * else the index of the first greater id. */
+  private def search(id: String): SearchResult =
+    buf.view.map(m => MsgId.parse(m.msgid)).search(MsgId.parse(id))
+
+  /** Index of the first id strictly greater than `id`. */
+  private def indexAfter(id: String): Int = search(id) match {
+    case Found(i) => i + 1
+    case other    => other.insertionPoint
+  }
+
   /** XRANGE [min, max] inclusive by id order; `-`/`+` = open ends. */
   def range(min: String = "-", max: String = "+"): Seq[StreamMessage] = synchronized {
-    buf.iterator
-      .filter(m => (min == "-" || MsgId.lte(min, m.msgid)) &&
-                   (max == "+" || MsgId.lte(m.msgid, max)))
-      .toSeq
+    val lo = if (min == "-") 0 else search(min).insertionPoint
+    val hi = if (max == "+") buf.length else indexAfter(max)
+    buf.view.slice(lo, hi).toVector
   }
 
   /** Messages with id strictly greater than `after` (delivery order). */
-  def after(after: String, count: Int): Seq[StreamMessage] = synchronized {
-    buf.iterator.filter(m => MsgId.lt(after, m.msgid)).take(count).toSeq
+  def after(after: String, count: Int): Seq[StreamMessage] =
+    synchronized(buf.view.drop(indexAfter(after)).take(count).toVector)
+
+  /** How many messages have an id strictly greater than `id`: XLEN
+    * after 0-0, 0 after the last id. */
+  def countAfter(id: String): Int = synchronized(buf.length - indexAfter(id))
+
+  /** The message with exactly this id, if it is still in the log. */
+  def get(id: String): Option[StreamMessage] = synchronized {
+    search(id) match { case Found(i) => Some(buf(i)); case _ => None }
   }
 
   /** XINFO STREAM last-generated-id (`scaler.py:47-48`) — survives
@@ -110,6 +135,4 @@ final class StreamLog(clock: Clock = SystemClock) {
   /** XINFO STREAM first-entry / last-entry (None on an empty stream). */
   def firstEntry: Option[StreamMessage] = synchronized(buf.headOption)
   def lastEntry: Option[StreamMessage]  = synchronized(buf.lastOption)
-
-  def all: Seq[StreamMessage] = synchronized(buf.toSeq)
 }

@@ -178,7 +178,7 @@ class StreamLogMicroBatchStream(logKey: String, batchSize: Int)
     // Fallback re-read covers checkpoint recovery, where latestOffset
     // for this range ran in a previous process.
     val slice = planned.synchronized(planned.remove((from, until))).getOrElse(
-      log.all.filter(m => MsgId.lt(from, m.msgid) && MsgId.lte(m.msgid, until)).toArray)
+      log.range(from, until).filter(m => MsgId.lt(from, m.msgid)).toArray)
     if (slice.isEmpty) Array.empty
     else Array(StreamLogInputPartition(slice))
   }

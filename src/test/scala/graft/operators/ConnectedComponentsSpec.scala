@@ -53,22 +53,6 @@ class ConnectedComponentsSpec extends graft.streaming.SparkTestBase {
     assert(labels == Map(1L -> 1L, 2L -> 1L))
   }
 
-  test("persist mode: rounds do not leak cached RDDs (eager per-round unpersist)") {
-    // The persist seam's bookkeeping must unpersist the previous round
-    // after materializing the next (ADVICE r3): across a many-round
-    // run, the cache population may grow by at most the final-round
-    // cache (plus the input edge set) — a leak grows linearly in rounds.
-    val s = spark
-    import s.implicits._
-    val before = s.sparkContext.getPersistentRDDs.size
-    val chain = (0L until 127L).map(i => (i, i + 1))
-    ConnectedComponents.runImpl(chain.toDF("a", "b"), "a", "b", 50,
-      midLoopLocalCheckpoint = false).count()
-    val after = s.sparkContext.getPersistentRDDs.size
-    assert(after - before <= 2,
-      s"cached RDDs grew by ${after - before} across ~8 rounds — per-round unpersist broken")
-  }
-
   test("checkpoint mode (default): spent rounds are reclaimable, nothing stays pinned") {
     // The production path's documented contract is weaker than eager
     // unpersist: spent rounds' checkpoint blocks are reclaimed by the

@@ -188,4 +188,20 @@ class IvfContractSpec extends graft.streaming.SparkTestBase {
     assert(got <= IvfKCap.toLong * MaxCellPairs * MaxCellPairs,
       "pair pass exceeded the K*cap^2 worst case")
   }
+
+  test("adcSum raises on a group that duplicates one subspace and misses another") {
+    import spark.implicits._
+    // (q, c) = (1, 1) is complete; (1, 2) has PqM rows, but sub 1 twice
+    // and no sub 2 — a row-count guard passes it with a NULL adc that
+    // would rank first.
+    val complete = (0 until PqM).map(i => (1L, 1L, i, i + 1.0))
+    val adc = adcSum(complete.toDF("q_id", "c_id", "sub", "pd"), Seq("q_id", "c_id"))
+    assert(adc.collect().map(r => r.getDouble(2)).toSeq == Seq((1 to PqM).sum.toDouble))
+    val skewed = (0 until PqM).map(i => (1L, 2L, if (i == 2) 1 else i, 0.5))
+    val e = intercept[Exception] {
+      adcSum((complete ++ skewed).toDF("q_id", "c_id", "sub", "pd"), Seq("q_id", "c_id"))
+        .orderBy(col("adc")).collect()
+    }
+    assert(e.getMessage.contains("incomplete ADC group"), e.getMessage)
+  }
 }

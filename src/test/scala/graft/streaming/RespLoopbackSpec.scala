@@ -244,4 +244,57 @@ class RespLoopbackSpec extends AnyFunSuite {
     assert(consumed == wireBytes.length, "stray bytes after error reply (injection)")
     assert(reply.isInstanceOf[ErrorReply])
   }
+
+  test("negative MAXLEN is rejected before the write: XADD and XTRIM answer errors, nothing persists") {
+    val clock = new ManualClock(5)
+    val lb = new RespLoopback(clock)
+    lb.execute(StreamCommands.xadd("n", Seq("v" -> "0")))
+    def state(): (Reply, Reply) = {
+      val ArrayReply(Some(kv)) = lb.execute(StreamCommands.xinfoStream("n")): @unchecked
+      (lb.execute(StreamCommands.xlen("n")),
+        kv.grouped(2).collectFirst { case Vector(k, v) if k.text == "entries-added" => v }.get)
+    }
+    val before = state()
+    Seq(
+      Seq("XADD", "n", "MAXLEN", "-1", "*", "v", "1"),
+      Seq("XADD", "n", "MAXLEN", "~", "-1", "*", "v", "2"),
+      StreamCommands.xtrimMaxlen("n", -1, approximate = false),
+      StreamCommands.xtrimMaxlen("n", -1, approximate = true)).foreach { cmd =>
+      lb.execute(cmd) match {
+        case ErrorReply(m) => assert(m.contains("MAXLEN argument must be >= 0"), s"$cmd: $m")
+        case other         => fail(s"$cmd must answer an error, got $other")
+      }
+    }
+    assert(state() == before && before == (IntReply(1), IntReply(1)))
+  }
+
+  test("XAUTOCLAIM accepts '... start' (COUNT defaults to 100) and '... start COUNT n', nothing else") {
+    val clock = new ManualClock(0)
+    val lb = new RespLoopback(clock)
+    val ids = (1 to 105).map { i =>
+      clock.advance(1)
+      wire(lb, StreamCommands.xadd("a", Seq("i" -> i.toString))).text
+    }
+    wire(lb, StreamCommands.xgroupCreate("a", "g"))
+    wire(lb, StreamCommands.xreadgroup("g", "dead", "a", 105, 0))
+    clock.advance(10)
+    def autoclaim(args: String*): (String, Seq[String]) = {
+      val ArrayReply(Some(Vector(cursor, ArrayReply(Some(entries))))) =
+        wire(lb, Seq("XAUTOCLAIM", "a", "g", "live", "10", "0-0") ++ args): @unchecked
+      (cursor.text, entries.map(parseEntry(_).msgid))
+    }
+    // no COUNT: the Redis default of 100, cursor at the first unscanned id
+    assert(autoclaim() == (ids(100), ids.take(100)))
+    clock.advance(10)
+    assert(autoclaim("COUNT", "3") == (ids(3), ids.take(3)))
+    clock.advance(10)
+    assert(autoclaim("count", "200") == (MsgId.Zero, ids))
+    Seq(Seq("FOO", "5"), Seq("COUNT"), Seq("COUNT", "5", "JUSTID"), Seq("5")).foreach { extra =>
+      val reply = lb.execute(Seq("XAUTOCLAIM", "a", "g", "live", "0", "0-0") ++ extra)
+      reply match {
+        case ErrorReply(m) => assert(m.contains("expected XAUTOCLAIM"), s"$extra: $m")
+        case other         => fail(s"XAUTOCLAIM ... $extra must be rejected, got $other")
+      }
+    }
+  }
 }

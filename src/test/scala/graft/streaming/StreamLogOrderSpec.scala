@@ -1,0 +1,170 @@
+package graft.streaming
+
+import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.mutable
+import scala.util.Random
+
+/** Differential check of the id-ordered lookups — `StreamLog.after`,
+  * `range`, `countAfter`, `get` and `ConsumerGroup.pendingRange`,
+  * `pendingOf`, `readOwn` — against brute-force filter-and-sort
+  * reference versions over a shadow copy of the whole buffer and PEL.
+  *
+  * Each seed drives a random sequence of XADD (with and without
+  * MAXLEN, `~` and exact), XTRIM, XDEL, XREADGROUP `>`, XACK, XCLAIM
+  * and DELCONSUMER, and after every step compares every lookup at
+  * random probe ids: present, deleted, never-minted, `0-0` and past
+  * the end. */
+class StreamLogOrderSpec extends AnyFunSuite {
+
+  private val Consumers = Seq("c1", "c2", "c3")
+  private val MacroNode = 16
+
+  /** The reference model: the buffer as a plain list in append order,
+    * the PEL as an unordered map, the group cursor as a string. Every
+    * query filters the whole model and sorts by parsed id. */
+  private final class Model {
+    var buf = Vector.empty[StreamMessage]
+    val pel = mutable.Map.empty[String, PelEntry]
+    var lastDelivered = MsgId.Zero
+
+    def trim(maxlen: Int): Int = {
+      val removed = math.max(buf.length - maxlen, 0)
+      buf = buf.drop(removed)
+      removed
+    }
+    def after(id: String, count: Int): Seq[StreamMessage] =
+      buf.filter(m => MsgId.lt(id, m.msgid)).take(count)
+    def range(min: String, max: String): Seq[StreamMessage] =
+      buf.filter(m => (min == "-" || MsgId.lte(min, m.msgid)) &&
+                      (max == "+" || MsgId.lte(m.msgid, max)))
+    def countAfter(id: String): Int = buf.count(m => MsgId.lt(id, m.msgid))
+    def get(id: String): Option[StreamMessage] =
+      buf.find(m => MsgId.parse(m.msgid) == MsgId.parse(id))
+    def pendingRange(min: String, max: String, count: Int, consumer: Option[String]): Seq[PelEntry] =
+      pel.values.toSeq
+        .filter(e => consumer.forall(_ == e.consumer))
+        .filter(e => (min == "-" || MsgId.lte(min, e.msgid)) &&
+                     (max == "+" || MsgId.lte(e.msgid, max)))
+        .sortBy(e => MsgId.parse(e.msgid)).take(count)
+    def readOwn(consumer: String, count: Int): Seq[StreamMessage] = {
+      val owned = pel.valuesIterator.filter(_.consumer == consumer).map(_.msgid).toSet
+      val live = buf.filter(m => owned.contains(m.msgid))
+      val ghosts = (owned -- live.map(_.msgid)).toSeq.sorted(MsgId.ordering)
+        .map(id => StreamMessage(id, Map.empty))
+      (live ++ ghosts).sortBy(m => MsgId.parse(m.msgid))
+        .take(if (count <= 0) Int.MaxValue else count)
+    }
+  }
+
+  private def runSeed(seed: Long, steps: Int): Unit = {
+    val rnd = new Random(seed)
+    val clock = new ManualClock(1700000000000L)
+    val log = new StreamLog(clock)
+    val group = ConsumerGroup.create(log, s"order-$seed", clock)
+    val model = new Model
+    val minted = mutable.ArrayBuffer.empty[String]
+    def someId(): String = rnd.nextInt(8) match {
+      case 0 => MsgId.Zero
+      case 1 => log.lastGeneratedId
+      case 2 => // never minted: a sequence number past any in its ms
+        val (ms, _) =
+          MsgId.parse(if (minted.isEmpty) MsgId.Zero else minted(rnd.nextInt(minted.size)))
+        MsgId.format(ms, 1000 + rnd.nextInt(5))
+      case 3 => MsgId.format(clock.nowMs + 1 + rnd.nextInt(3), 0)
+      case _ => if (minted.isEmpty) MsgId.Zero else minted(rnd.nextInt(minted.size))
+    }
+    def someCount(): Int = if (rnd.nextInt(4) == 0) Int.MaxValue else rnd.nextInt(12)
+    def someConsumer(): String = Consumers(rnd.nextInt(Consumers.size))
+
+    try (1 to steps).foreach { step =>
+      if (rnd.nextInt(3) == 0) clock.advance(rnd.nextInt(3).toLong)
+      val ctx = s"seed $seed step $step"
+      rnd.nextInt(10) match {
+        case 0 | 1 | 2 =>
+          val maxlen = if (rnd.nextInt(3) == 0) Some(5 + rnd.nextInt(30)) else None
+          val approximate = rnd.nextBoolean()
+          val id = log.add(Map("s" -> step), maxlen, approximate, MacroNode)
+          minted += id
+          model.buf :+= StreamMessage(id, Map("s" -> step.toString))
+          maxlen.foreach { m =>
+            if (!approximate || model.buf.length >= m + MacroNode) model.trim(m)
+          }
+        case 3 =>
+          val m = 10 + rnd.nextInt(40)
+          assert(log.trim(m) == model.trim(m), ctx)
+        case 4 =>
+          val ids = Seq.fill(1 + rnd.nextInt(3))(someId())
+          val set = ids.toSet
+          val before = model.buf.length
+          model.buf = model.buf.filterNot(m => set.contains(m.msgid))
+          assert(log.delete(ids: _*) == before - model.buf.length, ctx)
+        case 5 | 6 =>
+          val (c, n) = (someConsumer(), 1 + rnd.nextInt(6))
+          val expected = model.after(model.lastDelivered, n)
+          assert(group.readNew(c, n) == expected, ctx)
+          expected.foreach { m =>
+            model.lastDelivered = m.msgid
+            model.pel(m.msgid) = PelEntry(m.msgid, c, clock.nowMs, 1)
+          }
+        case 7 =>
+          val id = someId()
+          assert(group.ack(id) == (if (model.pel.remove(id).isDefined) 1 else 0), ctx)
+        case 8 =>
+          val (ids, c, idle) = (Seq.fill(1 + rnd.nextInt(4))(someId()).distinct,
+            someConsumer(), rnd.nextInt(3).toLong)
+          val expected = ids.filter(id =>
+            model.pel.get(id).exists(_.timeSinceDelivered(clock.nowMs) >= idle))
+          assert(group.claim(ids, c, idle) == expected, ctx)
+          expected.foreach { id =>
+            model.pel(id) = PelEntry(id, c, clock.nowMs, model.pel(id).timesDelivered + 1)
+          }
+        case 9 =>
+          val c = someConsumer()
+          val lost = model.pel.values.filter(_.consumer == c).map(_.msgid).toSeq
+          lost.foreach(model.pel.remove)
+          assert(group.delConsumer(c) == lost.size, ctx)
+      }
+
+      assert(log.len == model.buf.length, ctx)
+      assert(log.range() == model.buf, ctx)
+      (1 to 4).foreach { _ =>
+        val (a, b, n) = (someId(), someId(), someCount())
+        val c = if (rnd.nextBoolean()) Some(someConsumer()) else None
+        val (min, max) = (if (rnd.nextInt(4) == 0) "-" else a, if (rnd.nextInt(4) == 0) "+" else b)
+        val probe = s"$ctx probe ($a, $b, $n, $c)"
+        assert(log.after(a, n) == model.after(a, n), probe)
+        assert(log.range(min, max) == model.range(min, max), probe)
+        assert(log.countAfter(a) == model.countAfter(a), probe)
+        assert(log.get(a) == model.get(a), probe)
+        assert(group.pendingRange(min, max, n, c) == model.pendingRange(min, max, n, c), probe)
+        Consumers.foreach { cc =>
+          assert(group.pendingOf(cc, n) == model.pendingRange("-", "+", n, Some(cc)), probe)
+          assert(group.readOwn(cc, n) == model.readOwn(cc, n), probe)
+        }
+      }
+      assert(group.pendingCount == model.pel.size, ctx)
+      assert(group.lastDelivered == model.lastDelivered, ctx)
+    } finally group.destroy()
+  }
+
+  test("id lookups match a brute-force filter-and-sort over the buffer and PEL (seeded)") {
+    (1L to 30L).foreach(seed => runSeed(seed, steps = 300))
+  }
+
+  test("readOwn returns id-only tombstones for owned entries that were trimmed or deleted") {
+    val clock = new ManualClock(1700000000000L)
+    val log = new StreamLog(clock)
+    val group = ConsumerGroup.create(log, "tombstones", clock)
+    try {
+      val ids = (1 to 6).map(i => log.add(Map("i" -> i)))
+      group.readNew("c", 6)
+      log.trim(4)
+      log.delete(ids(4))
+      assert(group.readOwn("c") == Seq(
+        StreamMessage(ids(0), Map.empty), StreamMessage(ids(1), Map.empty),
+        StreamMessage(ids(2), Map("i" -> "3")), StreamMessage(ids(3), Map("i" -> "4")),
+        StreamMessage(ids(4), Map.empty), StreamMessage(ids(5), Map("i" -> "6"))))
+      assert(group.readOwn("c", 2).map(_.msgid) == ids.take(2))
+    } finally group.destroy()
+  }
+}

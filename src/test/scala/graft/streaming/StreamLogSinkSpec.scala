@@ -29,10 +29,10 @@ class StreamLogSinkSpec extends SparkTestBase {
     try {
       q.processAllAvailable()
       assert(dst.len == 6, s"expected 6 sink messages, got ${dst.len}")
-      val contents = dst.all.map(_.content)
+      val contents = dst.range().map(_.content)
       assert(contents.map(_("i")).sorted == (1 to 6).map(_.toString).sorted)
       assert(contents.forall(c => c("doubled").toInt == c("i").toInt * 2))
-      val ids = dst.all.map(_.msgid)
+      val ids = dst.range().map(_.msgid)
       assert(ids == ids.sorted(MsgId.ordering), "sink must assign monotonic ids")
     } finally q.stop()
   }
