@@ -725,7 +725,7 @@ object TextQueries {
     * STEADY-STATE COST, adjudicated (r17, the s12/s13 rule): t18 is
     * the registry's slowest query (1.76 s clean at sf0.1, stable three
     * rounds), and the floor is SCHEDULER, not data. Measured
-    * ([[T18Probe]] + tools/JobCountProbe, warm session, sf0.1): the
+    * (T18Probe + tools/JobCountProbe, warm session, sf0.1): the
     * memos serve (a memo-miss guard throws — it doesn't), a bare count
     * of the cached perDoc frame costs ~0.19 s (one job's floor), the
     * full warm query runs 12 AQE jobs over a 5000-row post-memo frame

@@ -32,11 +32,10 @@ final class Consumer(
     val consumerId: String = Consumer.defaultConsumerId,
     batchSize: Int = 2,
     maxWaitTimeMs: Long = 10000L,
-    pollTimeMs: Long = 1000L,
-    clock: Clock = SystemClock) {
+    pollTimeMs: Long = 1000L) {
 
   // G1: group bootstrap in every component ctor (`common.py:12-18`).
-  val group: ConsumerGroup = ConsumerGroup.create(log, groupName, clock)
+  val group: ConsumerGroup = ConsumerGroup.create(log, groupName)
 
   private var hardStopMs = 0L
 
@@ -62,10 +61,10 @@ final class Consumer(
 
   // ---- internals, mirroring the reference call graph ----
 
-  private def setHardStopTime(): Unit = hardStopMs = clock.nowMs + maxWaitTimeMs
+  private def setHardStopTime(): Unit = hardStopMs = log.clock.nowMs + maxWaitTimeMs
 
   private def waitForMoreMessages(assigned: Int): Boolean =
-    clock.nowMs <= hardStopMs && assigned < batchSize
+    log.clock.nowMs <= hardStopMs && assigned < batchSize
 
   /** C5: count of already-owned pending items (seeds the quota). */
   private def alreadyAssigned(): Int =
@@ -77,7 +76,7 @@ final class Consumer(
   private def getNewItemsToConsumer(assigned: Int): Int = {
     val want = math.max(1, batchSize - assigned)
     val got = group.readNew(consumerId, want)
-    if (got.isEmpty) clock.sleep(pollTimeMs)            // blocking poll slice
+    if (got.isEmpty) log.clock.sleep(pollTimeMs)        // blocking poll slice
     got.size
   }
 }

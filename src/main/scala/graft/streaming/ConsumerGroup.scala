@@ -11,11 +11,11 @@ import scala.collection.mutable
   * XPENDING (`common.py:48-73`), C7 XACK (`consumer.py:180-191`),
   * M6 XCLAIM min-idle (`monitor.py:129-138`), G3 XGROUP DELCONSUMER
   * (`common.py:75-85`), G4 DESTROY (`base.py:22-23`), M1/M2 XINFO.
+  *
+  * The group belongs to its log (created by [[ConsumerGroup.create]],
+  * listed by the log) and reads the log's clock.
   */
-final class ConsumerGroup private (
-    val log: StreamLog,
-    val name: String,
-    val clock: Clock) {
+final class ConsumerGroup private[streaming] (val log: StreamLog, val name: String) {
 
   private var lastDeliveredId: String = MsgId.Zero
   // msgid → entry, ordered by msgid: XPENDING/XAUTOCLAIM scan in id
@@ -30,7 +30,7 @@ final class ConsumerGroup private (
     touch(consumer)
     if (count <= 0) return Seq.empty
     val msgs = log.after(lastDeliveredId, count)
-    val now = clock.nowMs
+    val now = log.clock.nowMs
     msgs.foreach { m =>
       lastDeliveredId = m.msgid
       pel(m.msgid) = PelEntry(m.msgid, consumer, now, 1)
@@ -87,7 +87,7 @@ final class ConsumerGroup private (
     // reads) — without the touch, a monitor that rebalanced onto a
     // fresh consumer wouldn't see the new owner in its own report.
     touch(newConsumer)
-    val now = clock.nowMs
+    val now = log.clock.nowMs
     ids.flatMap { id =>
       pel.get(id) match {
         case Some(e) if e.timeSinceDelivered(now) >= minIdleMs =>
@@ -114,7 +114,7 @@ final class ConsumerGroup private (
     // loop-until-"0-0" caller would spin forever on it.
     require(count > 0, s"autoClaim count must be positive, got $count")
     touch(newConsumer) // XAUTOCLAIM auto-creates the consumer, as XCLAIM does
-    val now = clock.nowMs
+    val now = log.clock.nowMs
     // Scan in msgid order from `start` (the PEL is a TreeMap, so the
     // seek is O(log PEL)) and stop once `count` eligible entries are
     // collected — per-call work proportional to entries SCANNED, and
@@ -145,11 +145,12 @@ final class ConsumerGroup private (
     owned.size
   }
 
-  /** G4: XGROUP DESTROY — clears state and deregisters, so the next
-    * create() starts fresh and the registry does not pin the log. */
-  def destroy(): Unit = {
+  /** G4: XGROUP DESTROY — clears state and removes the group from its
+    * log, so the next create() starts fresh. False if it was already
+    * destroyed. */
+  def destroy(): Boolean = {
     synchronized { pel.clear(); lastSeenMs.clear(); lastDeliveredId = MsgId.Zero }
-    ConsumerGroup.deregister(log, name)
+    log.removeGroup(this)
   }
 
   // ---- introspection (M1 XINFO GROUPS / M2 XINFO CONSUMERS) ----
@@ -160,32 +161,18 @@ final class ConsumerGroup private (
 
   /** M2: per-consumer (name, pending, idle-ms-since-last-fetch). */
   def consumerInfo: Seq[(String, Int, Long)] = synchronized {
-    val now = clock.nowMs
+    val now = log.clock.nowMs
     lastSeenMs.toSeq.map { case (c, seen) =>
       (c, pel.valuesIterator.count(_.consumer == c), now - seen)
     }
   }
 
-  private def touch(consumer: String): Unit = lastSeenMs(consumer) = clock.nowMs
+  private def touch(consumer: String): Unit = lastSeenMs(consumer) = log.clock.nowMs
 }
 
 object ConsumerGroup {
-  private val registry = mutable.Map.empty[(StreamLog, String), ConsumerGroup]
-
   /** G1: idempotent group creation from stream start (`0-0`), MKSTREAM
     * implied, BUSYGROUP swallowed (reference `common.py:20-41`) —
-    * repeated creation returns the existing group unchanged. Passing a
-    * DIFFERENT clock for an existing group is rejected: silently keeping
-    * the first clock would give the caller wall-clock idle times under a
-    * manual test clock. */
-  def create(log: StreamLog, name: String, clock: Clock = SystemClock): ConsumerGroup =
-    registry.synchronized {
-      val g = registry.getOrElseUpdate((log, name), new ConsumerGroup(log, name, clock))
-      require(g.clock eq clock,
-        s"consumer group '$name' already exists with a different clock")
-      g
-    }
-
-  private[streaming] def deregister(log: StreamLog, name: String): Unit =
-    registry.synchronized { registry.remove((log, name)); () }
+    * repeated creation returns the existing group unchanged. */
+  def create(log: StreamLog, name: String): ConsumerGroup = log.createGroup(name)
 }

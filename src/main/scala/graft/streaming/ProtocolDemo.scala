@@ -22,9 +22,9 @@ object ProtocolDemo {
 
     // C1-C8: two consumers collecting batches; worker-1 acks, worker-2 doesn't
     val w1 = new Consumer(log, "grp", "worker-1", batchSize = 10,
-      maxWaitTimeMs = 2000, pollTimeMs = 250, clock = clock)
+      maxWaitTimeMs = 2000, pollTimeMs = 250)
     val w2 = new Consumer(log, "grp", "worker-2", batchSize = 10,
-      maxWaitTimeMs = 2000, pollTimeMs = 250, clock = clock)
+      maxWaitTimeMs = 2000, pollTimeMs = 250)
     val b1 = w1.getItems()
     b1.foreach(m => w1.removeItemFromConsumerGroup(m.msgid))   // healthy: processes+acks
     val b2 = w2.getItems()                                     // unhealthy: never acks
@@ -40,7 +40,7 @@ object ProtocolDemo {
       s"worker-1 pending=${w1.group.pendingOf("worker-1").size}")
 
     // S1-S5: scale decision
-    val scaler = new Scaler(log, "grp", clock)
+    val scaler = new Scaler(log, "grp")
     val (backlog, pending) = scaler.collectMetrics()
     val (rate, suggestion) = scaler.getScaleDecision(scaleOutRate = 50, scaleInRate = 10)
     println(s"backlog=$backlog pending=$pending rate=$rate suggestion=$suggestion")

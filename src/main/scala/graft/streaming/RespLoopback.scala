@@ -22,34 +22,36 @@ import RespCodec._
 final class RespLoopback(clock: Clock = SystemClock) {
 
   private val logs = mutable.Map.empty[String, StreamLog]
-  private val groups = mutable.Map.empty[(String, String), ConsumerGroup]
 
   private def logOf(stream: String): StreamLog =
     synchronized(logs.getOrElseUpdate(stream, new StreamLog(clock)))
+
+  /** The log of a stream if it exists — a lookup never creates one. */
+  private def existing(stream: String): Option[StreamLog] = synchronized(logs.get(stream))
 
   /** The backing log of a stream — the handoff point to the DSv2
     * source: register it with [[StreamLogRegistry]] and wire-produced
     * entries flow straight into a Structured Streaming query. */
   def streamLog(stream: String): StreamLog = logOf(stream)
 
-  /** The live group created by a wire XGROUP CREATE, if any — the
-    * handoff point to the control plane: a [[Monitor]] built over it
-    * sweeps/rebalances the same PEL that wire XREADGROUP/XACK mutate. */
+  /** The live group of a stream, whether a wire XGROUP CREATE or an
+    * engine-side [[ConsumerGroup.create]] made it — the handoff point to
+    * the control plane: a [[Monitor]] built over it sweeps/rebalances
+    * the same PEL that wire XREADGROUP/XACK mutate. */
   def consumerGroup(stream: String, group: String): Option[ConsumerGroup] =
-    synchronized(groups.get((stream, group)))
+    existing(stream).flatMap(_.group(group))
 
   /** Only XGROUP CREATE creates; every other group command on a
     * missing group answers Redis's NOGROUP error — auto-creating here
     * would turn a typo'd group name into silent phantom state. */
-  private def groupOf(stream: String, group: String): ConsumerGroup = synchronized {
-    groups.getOrElse((stream, group),
+  private def groupOf(stream: String, group: String): ConsumerGroup =
+    consumerGroup(stream, group).getOrElse(
       sys.error(s"NOGROUP No such consumer group '$group' for key name '$stream'"))
-  }
 
-  private def createGroup(stream: String, group: String): ConsumerGroup = synchronized {
-    groups.getOrElseUpdate((stream, group),
-      ConsumerGroup.create(logOf(stream), group, clock))
-  }
+  /** Redis's arity error for a command given fewer than `n` arguments
+    * (the command name counts). */
+  private def arity(args: Seq[String], n: Int): Unit = if (args.length < n)
+    sys.error(s"wrong number of arguments for '${args.head.toLowerCase}' command")
 
   /** One request→reply exchange on wire bytes. Decode failures (unknown
     * type byte, bad lengths, non-bulk array elements) answer a RESP
@@ -115,8 +117,7 @@ final class RespLoopback(clock: Clock = SystemClock) {
         (args.length == 6 && args(4).equalsIgnoreCase("COUNT")),
         "expected XRANGE <key> <start> <end> [COUNT <n>]")
       val count = if (args.length == 6) args(5).toInt else Int.MaxValue
-      ArrayReply(Some(
-        logOf(args(1)).range(args(2), args(3)).take(count).toVector.map(entryReply)))
+      ArrayReply(Some(logOf(args(1)).range(args(2), args(3), count).toVector.map(entryReply)))
 
     case "XREADGROUP" =>
       // XREADGROUP GROUP g c [COUNT n] [BLOCK ms] STREAMS s (>|0) —
@@ -155,6 +156,7 @@ final class RespLoopback(clock: Clock = SystemClock) {
         bulk(stream), ArrayReply(Some(msgs.toVector.map(entryReply)))))))))
 
     case "XACK" =>
+      arity(args, 4)
       val g = groupOf(args(1), args(2))
       IntReply(args.drop(3).map(g.ack).sum.toLong)
 
@@ -175,6 +177,7 @@ final class RespLoopback(clock: Clock = SystemClock) {
 
     case "XCLAIM" =>
       // XCLAIM s g c minIdle id … → full entries of the claimed ids
+      arity(args, 6)
       val log = logOf(args(1))
       val claimed = groupOf(args(1), args(2))
         .claim(args.drop(5), args(3), args(4).toLong)
@@ -201,20 +204,17 @@ final class RespLoopback(clock: Clock = SystemClock) {
         // would need a from-now cursor it deliberately lacks.
         require(args(4) == "0-0" || args(4) == "0",
           s"only start id 0-0 is supported (the reference's form), got ${args(4)}")
-        createGroup(args(2), args(3)); SimpleReply("OK")
+        ConsumerGroup.create(logOf(args(2)), args(3)); SimpleReply("OK")
       case "DELCONSUMER" => IntReply(groupOf(args(2), args(3)).delConsumer(args(4)).toLong)
       case "DESTROY" =>
         // Redis replies with the number of groups destroyed: 1 or 0.
-        val removed = synchronized(groups.remove((args(2), args(3))))
-        removed.foreach(_.destroy())
-        IntReply(if (removed.isDefined) 1L else 0L)
+        IntReply(if (consumerGroup(args(2), args(3)).exists(_.destroy())) 1L else 0L)
       case other => ErrorReply(s"ERR unknown XGROUP subcommand: $other")
     }
 
     case "XINFO" => args(1).toUpperCase match {
       case "GROUPS" =>
-        val stream = args(2)
-        val gs = synchronized(groups.collect { case ((s, _), g) if s == stream => g }.toVector)
+        val gs = existing(args(2)).toVector.flatMap(_.groups)
         ArrayReply(Some(gs.map(g => ArrayReply(Some(Vector(
           bulk("name"), bulk(g.name),
           bulk("consumers"), IntReply(g.consumers.size.toLong),
@@ -237,8 +237,6 @@ final class RespLoopback(clock: Clock = SystemClock) {
         // stream is empty) so redis-py's dict parse sees the same keys
         // against either server.
         val log = logOf(args(2))
-        val stream = args(2)
-        val nGroups = synchronized(groups.keysIterator.count(_._1 == stream))
         def entryOrNil(e: Option[StreamMessage]): Reply =
           e.map(entryReply).getOrElse(BulkReply(None))
         ArrayReply(Some(Vector(
@@ -246,13 +244,15 @@ final class RespLoopback(clock: Clock = SystemClock) {
           bulk("last-generated-id"), bulk(log.lastGeneratedId),
           bulk("max-deleted-entry-id"), bulk(log.maxDeletedEntryId),
           bulk("entries-added"), IntReply(log.entriesAdded),
-          bulk("groups"), IntReply(nGroups.toLong),
+          bulk("groups"), IntReply(log.groups.size.toLong),
           bulk("first-entry"), entryOrNil(log.firstEntry),
           bulk("last-entry"), entryOrNil(log.lastEntry))))
       case other => ErrorReply(s"ERR unknown XINFO subcommand: $other")
     }
 
-    case "XDEL"  => IntReply(logOf(args(1)).delete(args.drop(2): _*).toLong)
+    case "XDEL"  =>
+      arity(args, 3)
+      IntReply(logOf(args(1)).delete(args.drop(2): _*).toLong)
 
     case "XTRIM" =>
       // XTRIM s MAXLEN [~] n — MAXLEN is the only supported strategy;

@@ -5,9 +5,9 @@ package graft.streaming
   * Returns `(rate, suggestion)` where rate is the backlog/pending
   * utilization percentage and suggestion ∈ {OUT, IN, NO_SCALE}.
   */
-final class Scaler(log: StreamLog, groupName: String, clock: Clock = SystemClock) {
+final class Scaler(log: StreamLog, groupName: String) {
 
-  val group: ConsumerGroup = ConsumerGroup.create(log, groupName, clock) // G1 bootstrap
+  val group: ConsumerGroup = ConsumerGroup.create(log, groupName) // G1 bootstrap
 
   /** S1: backlog measurement — messages not yet delivered to the group:
     * never-delivered ⇒ XLEN; caught-up ⇒ 0; else the count of ids in

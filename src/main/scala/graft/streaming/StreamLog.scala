@@ -15,8 +15,11 @@ import scala.collection.mutable
   * Operators: P1 XADD (reference `producer.py:37-51`), P2 MAXLEN~ trim
   * (`producer.py:26-35,47-48`), P3 XTRIM (`base.py:15,21`), P4 XDEL
   * (documented escape hatch, `consumer.py:185-187`).
+  *
+  * The log owns its consumer groups, as a Redis stream key does: groups
+  * read this log's clock and are released with it.
   */
-final class StreamLog(clock: Clock = SystemClock) {
+final class StreamLog(private[streaming] val clock: Clock = SystemClock) {
 
   // Always in strictly increasing id order: `add` mints monotonic ids,
   // `trim` drops a prefix and XDEL filters in place — so every id
@@ -27,6 +30,9 @@ final class StreamLog(clock: Clock = SystemClock) {
   private var lastSeq = -1L
   private var nAdded  = 0L
   private var maxDeleted = MsgId.Zero
+  // Name-ordered, the order Redis's radix tree gives XINFO GROUPS. Lock
+  // order is group → log: nothing here calls into a group.
+  private val groupsByName = mutable.TreeMap.empty[String, ConsumerGroup]
 
   /** XADD: append one field-map message; values are stringified on write
     * (`producer.py:37`); returns the assigned monotonic id. With
@@ -98,12 +104,14 @@ final class StreamLog(clock: Clock = SystemClock) {
     case other    => other.insertionPoint
   }
 
-  /** XRANGE [min, max] inclusive by id order; `-`/`+` = open ends. */
-  def range(min: String = "-", max: String = "+"): Seq[StreamMessage] = synchronized {
-    val lo = if (min == "-") 0 else search(min).insertionPoint
-    val hi = if (max == "+") buf.length else indexAfter(max)
-    buf.view.slice(lo, hi).toVector
-  }
+  /** XRANGE [min, max] inclusive by id order; `-`/`+` = open ends; at
+    * most `count` messages, the oldest first. */
+  def range(min: String = "-", max: String = "+", count: Int = Int.MaxValue): Seq[StreamMessage] =
+    synchronized {
+      val lo = if (min == "-") 0 else search(min).insertionPoint
+      val hi = if (max == "+") buf.length else indexAfter(max)
+      buf.view.slice(lo, hi).take(count).toVector
+    }
 
   /** Messages with id strictly greater than `after` (delivery order). */
   def after(after: String, count: Int): Seq[StreamMessage] =
@@ -135,4 +143,19 @@ final class StreamLog(clock: Clock = SystemClock) {
   /** XINFO STREAM first-entry / last-entry (None on an empty stream). */
   def firstEntry: Option[StreamMessage] = synchronized(buf.headOption)
   def lastEntry: Option[StreamMessage]  = synchronized(buf.lastOption)
+
+  // ---- consumer groups (G1 create, G4 destroy, M1 XINFO GROUPS) ----
+
+  private[streaming] def group(name: String): Option[ConsumerGroup] =
+    synchronized(groupsByName.get(name))
+  private[streaming] def groups: Seq[ConsumerGroup] = synchronized(groupsByName.values.toVector)
+
+  /** Idempotent: the existing group of this name, else a new one at 0-0. */
+  private[streaming] def createGroup(name: String): ConsumerGroup =
+    synchronized(groupsByName.getOrElseUpdate(name, new ConsumerGroup(this, name)))
+
+  /** Drops `g` only if its name still maps to it, so destroying a stale
+    * group cannot drop a newer one. True if `g` was removed. */
+  private[streaming] def removeGroup(g: ConsumerGroup): Boolean =
+    synchronized(groupsByName.get(g.name).exists(_ eq g) && groupsByName.remove(g.name).isDefined)
 }

@@ -14,7 +14,7 @@ class DeadLetterSpec extends AnyFunSuite {
   private def fixture(): (ManualClock, StreamLog, ConsumerGroup, StreamLog) = {
     val clock = new ManualClock(1700000000000L)
     val log = new StreamLog(clock)
-    val group = ConsumerGroup.create(log, s"dlq-grp-${System.nanoTime()}", clock)
+    val group = ConsumerGroup.create(log, s"dlq-grp-${System.nanoTime()}")
     (clock, log, group, new StreamLog(clock))
   }
 

@@ -34,7 +34,7 @@ class MonitorScalerSpec extends AnyFunSuite {
   test("idle classification after simulated sleep (test_monitor.py:69-91)") {
     val (clock, log) = fixture()
     (1 to 2).foreach(i => log.add(Map("i" -> i)))
-    val g = ConsumerGroup.create(log, "mon-idle", clock)
+    val g = ConsumerGroup.create(log, "mon-idle")
     g.readNew("c1", 1)
     clock.advance(1000)
     val m = new Monitor(Seq(g), batchSize = 2, idleTimeThresholdMs = 10)
@@ -47,7 +47,7 @@ class MonitorScalerSpec extends AnyFunSuite {
   test("auto-cleanup claims the unhealthy consumer's items for the healthy argmin target") {
     val (clock, log) = fixture()
     (1 to 4).foreach(i => log.add(Map("i" -> i)))
-    val g = ConsumerGroup.create(log, "mon-clean", clock)
+    val g = ConsumerGroup.create(log, "mon-clean")
     g.readNew("overloaded", 3)          // 3 pending > batchSize=2 → unhealthy
     g.readNew("healthy", 1)             // 1 pending → OK, argmin target
     val m = new Monitor(Seq(g), batchSize = 2, idleTimeThresholdMs = 60000)
@@ -60,7 +60,7 @@ class MonitorScalerSpec extends AnyFunSuite {
   test("report renders a grid with all four columns (test_monitor.py:44-67)") {
     val (clock, log) = fixture()
     (1 to 2).foreach(i => log.add(Map("i" -> i)))
-    val g = ConsumerGroup.create(log, "mon-render", clock)
+    val g = ConsumerGroup.create(log, "mon-render")
     g.readNew("c1", 2)
     val m = new Monitor(Seq(g))
     m.collectMonitoringData(autoCleanup = false)
@@ -81,7 +81,7 @@ class MonitorScalerSpec extends AnyFunSuite {
   test("(backlog 0, pending 2) → rate 0, NO_SCALE (test_scaler.py:11-32)") {
     val (clock, log) = fixture()
     (1 to 2).foreach(i => log.add(Map("i" -> i)))
-    val sc = new Scaler(log, "sc-1", clock)
+    val sc = new Scaler(log, "sc-1")
     sc.group.readNew("c1", 2)           // fully delivered, unacked
     assert(sc.collectMetrics() == ((0, 2)))
     assert(sc.getScaleDecision() == ((0.0, Scale.NoScale)))
@@ -90,7 +90,7 @@ class MonitorScalerSpec extends AnyFunSuite {
   test("(backlog 1, pending 2) → rate 50 → OUT at out=50 (test_scaler.py:34-58)") {
     val (clock, log) = fixture()
     (1 to 3).foreach(i => log.add(Map("i" -> i)))
-    val sc = new Scaler(log, "sc-2", clock)
+    val sc = new Scaler(log, "sc-2")
     sc.group.readNew("c1", 2)           // one message still undelivered
     assert(sc.collectMetrics() == ((1, 2)))
     assert(sc.getScaleDecision(scaleOutRate = 50, scaleInRate = 10) == ((50.0, Scale.Out)))
@@ -99,7 +99,7 @@ class MonitorScalerSpec extends AnyFunSuite {
   test("rate 50 < in=75 with 2 consumers → IN (test_scaler.py:60-99)") {
     val (clock, log) = fixture()
     (1 to 3).foreach(i => log.add(Map("i" -> i)))
-    val sc = new Scaler(log, "sc-3", clock)
+    val sc = new Scaler(log, "sc-3")
     sc.group.readNew("c1", 1)
     sc.group.readNew("c2", 1)
     assert(sc.getScaleDecision(scaleOutRate = 76, scaleInRate = 75) == ((50.0, Scale.In)))
@@ -108,20 +108,20 @@ class MonitorScalerSpec extends AnyFunSuite {
   test("pending 0 with backlog ≥ 1 → rate 0 → OUT") {
     val (clock, log) = fixture()
     (1 to 2).foreach(i => log.add(Map("i" -> i)))
-    val sc = new Scaler(log, "sc-4", clock)
+    val sc = new Scaler(log, "sc-4")
     sc.group.readNew("c1", 0)           // consumer registered, nothing delivered
     assert(sc.getScaleDecision() == ((0.0, Scale.Out)))
   }
 
   test("empty stream → (0, NO_SCALE) (test_scaler.py:138-144)") {
     val (clock, log) = fixture()
-    val sc = new Scaler(log, "sc-5", clock)
+    val sc = new Scaler(log, "sc-5")
     assert(sc.getScaleDecision() == ((0.0, Scale.NoScale)))
   }
 
   test("threshold validation errors (test_scaler.py:129-136)") {
     val (clock, log) = fixture()
-    val sc = new Scaler(log, "sc-6", clock)
+    val sc = new Scaler(log, "sc-6")
     intercept[IllegalArgumentException](sc.getScaleDecision(101, 10))
     intercept[IllegalArgumentException](sc.getScaleDecision(50, -1))
     intercept[IllegalArgumentException](sc.getScaleDecision(10, 50))
@@ -132,7 +132,7 @@ class MonitorScalerSpec extends AnyFunSuite {
 
   private val scaler = {
     val (clock, log) = fixture()
-    new Scaler(log, "sc-prop", clock)
+    new Scaler(log, "sc-prop")
   }
 
   test("property: rate is 0 or clamped to [1, 100] with 4-decimal scale") {

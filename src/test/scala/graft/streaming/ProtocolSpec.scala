@@ -38,7 +38,7 @@ class ProtocolSpec extends AnyFunSuite {
     val first = log.add(Map("i" -> "x"))
     assert(first == "0-1", s"first id of a ms=0 stream must be 0-1, got $first")
     // deliverability: a fresh group's strictly-after-0-0 cursor sees it
-    val g = ConsumerGroup.create(log, "grp-zero", new ManualClock(0L))
+    val g = ConsumerGroup.create(log, "grp-zero")
     assert(g.readNew("c", 10).map(_.msgid) == Seq(first))
   }
 
@@ -77,7 +77,7 @@ class ProtocolSpec extends AnyFunSuite {
     val (clock, log) = fixture()
     TestDataset.foreach(log.add(_))
     val c = new Consumer(log, "grp", "c1", batchSize = 2,
-      maxWaitTimeMs = 1000, pollTimeMs = 100, clock = clock)
+      maxWaitTimeMs = 1000, pollTimeMs = 100)
     val items = c.getItems()
     assert(items.map(_.content) == TestDataset)
     items.foreach(m => c.removeItemFromConsumerGroup(m.msgid))
@@ -90,7 +90,7 @@ class ProtocolSpec extends AnyFunSuite {
     val (clock, log) = fixture()
     TestDataset.foreach(log.add(_))
     val c = new Consumer(log, "grp-timeout", "c1", batchSize = TestDataset.size + 1,
-      maxWaitTimeMs = 2000, pollTimeMs = 250, clock = clock)
+      maxWaitTimeMs = 2000, pollTimeMs = 250)
     val t0 = clock.nowMs
     val items = c.getItems()
     assert(clock.nowMs - t0 >= 2000, "must block until the deadline")
@@ -103,7 +103,7 @@ class ProtocolSpec extends AnyFunSuite {
     val (clock, log) = fixture()
     (1 to 4).foreach(i => log.add(Map("i" -> i)))
     val c = new Consumer(log, "grp-retry", "c1", batchSize = 2,
-      maxWaitTimeMs = 1000, pollTimeMs = 100, clock = clock)
+      maxWaitTimeMs = 1000, pollTimeMs = 100)
     val first = c.getItems()
     assert(first.size == 2)
     // crash without ack: next call must return the SAME two items
@@ -121,7 +121,7 @@ class ProtocolSpec extends AnyFunSuite {
     val (clock, log) = fixture()
     TestDataset.foreach(log.add(_))
     val c = new Consumer(log, "grp-dep", "c1", batchSize = 2,
-      maxWaitTimeMs = 1000, pollTimeMs = 100, clock = clock)
+      maxWaitTimeMs = 1000, pollTimeMs = 100)
     val items = c.getItems()
     @annotation.nowarn("cat=deprecation")
     def legacyAck(id: String): Unit = c.removeItemFromStream(id)
@@ -135,7 +135,7 @@ class ProtocolSpec extends AnyFunSuite {
   test("pending count after fetch; DELCONSUMER loses exactly the pending count") {
     val (clock, log) = fixture()
     (1 to 3).foreach(i => log.add(Map("i" -> i)))
-    val g = ConsumerGroup.create(log, "grp-state", clock)
+    val g = ConsumerGroup.create(log, "grp-state")
     g.readNew("c1", 3)
     assert(g.pendingOf("c1").size == 3)
     assert(g.pendingOf("c1", 2).size == 2)
@@ -147,7 +147,7 @@ class ProtocolSpec extends AnyFunSuite {
   test("XCLAIM honors the min-idle guard and bumps times_delivered") {
     val (clock, log) = fixture()
     (1 to 2).foreach(i => log.add(Map("i" -> i)))
-    val g = ConsumerGroup.create(log, "grp-claim", clock)
+    val g = ConsumerGroup.create(log, "grp-claim")
     g.readNew("dead", 2)
     val ids = g.pendingOf("dead").map(_.msgid)
     assert(g.claim(ids, "alive", minIdleMs = 1000).isEmpty, "too fresh to steal")
@@ -162,7 +162,7 @@ class ProtocolSpec extends AnyFunSuite {
   test("XAUTOCLAIM sweeps idle entries in msgid order with a batching cursor") {
     val (clock, log) = fixture()
     (1 to 5).foreach(i => log.add(Map("i" -> i)))
-    val g = ConsumerGroup.create(log, "grp-autoclaim", clock)
+    val g = ConsumerGroup.create(log, "grp-autoclaim")
     g.readNew("dead", 5)
     // Too fresh: nothing claimed, cursor wraps immediately.
     assert(g.autoClaim("alive", minIdleMs = 1000) == ("0-0", Seq()))
@@ -191,7 +191,7 @@ class ProtocolSpec extends AnyFunSuite {
     for (batchSize <- Seq(1, 3, 7, 100)) {
       val (clock, log) = fixture()
       (1 to 23).foreach(i => log.add(Map("i" -> i)))
-      val g = ConsumerGroup.create(log, s"grp-ac-prop-$batchSize", clock)
+      val g = ConsumerGroup.create(log, s"grp-ac-prop-$batchSize")
       g.readNew("dead", 17)            // 17 idle-to-be entries
       clock.advance(2000)
       g.readNew("dead", 6)             // 6 fresh entries (idle 0)
@@ -215,9 +215,9 @@ class ProtocolSpec extends AnyFunSuite {
   test("group creation is idempotent (BUSYGROUP swallowed)") {
     val (clock, log) = fixture()
     log.add(Map("i" -> 1))
-    val g1 = ConsumerGroup.create(log, "grp-idem", clock)
+    val g1 = ConsumerGroup.create(log, "grp-idem")
     g1.readNew("c1", 1)
-    val g2 = ConsumerGroup.create(log, "grp-idem", clock)
+    val g2 = ConsumerGroup.create(log, "grp-idem")
     assert(g2 eq g1)
     assert(g2.pendingCount == 1, "re-create must not reset state")
   }
@@ -226,11 +226,11 @@ class ProtocolSpec extends AnyFunSuite {
 
   test("consumer id defaults to pid+thread when not given") {
     val (clock, log) = fixture()
-    val c = new Consumer(log, "grp-defid", clock = clock)
+    val c = new Consumer(log, "grp-defid")
     assert(c.consumerId ==
       s"${ProcessHandle.current().pid()}${Thread.currentThread().getId}",
       "default id must be the reference's pid+thread derivation")
     assert(c.consumerId.matches("\\d+"), "pid+thread id is all digits")
-    assert(new Consumer(log, "grp-defid", "explicit", clock = clock).consumerId == "explicit")
+    assert(new Consumer(log, "grp-defid", "explicit").consumerId == "explicit")
   }
 }

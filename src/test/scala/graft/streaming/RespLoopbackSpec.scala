@@ -297,4 +297,62 @@ class RespLoopbackSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("a stream owns its groups: engine-side destroy and create are what the wire sees") {
+    val lb = new RespLoopback(new ManualClock(10))
+    val id = wire(lb, StreamCommands.xadd("s", Seq("k" -> "v"))).text
+    def groupNames(): Seq[String] = {
+      val ArrayReply(Some(rows)) = wire(lb, StreamCommands.xinfoGroups("s")): @unchecked
+      rows.map { case ArrayReply(Some(kv)) => kv(1).text; case other => fail(s"bad row: $other") }
+    }
+    def groupCount(): Reply = {
+      val ArrayReply(Some(kv)) = wire(lb, StreamCommands.xinfoStream("s")): @unchecked
+      kv.grouped(2).collectFirst { case Vector(k, v) if k.text == "groups" => v }.get
+    }
+
+    // created over the wire, destroyed engine-side: gone from the wire too
+    wire(lb, StreamCommands.xgroupCreate("s", "g"))
+    lb.consumerGroup("s", "g").get.destroy()
+    assert(groupNames().isEmpty)
+    assert(groupCount() == IntReply(0))
+    lb.execute(StreamCommands.xreadgroup("g", "c", "s", 10, 0)) match {
+      case ErrorReply(m) => assert(m.startsWith("NOGROUP"), s"wrong error: $m")
+      case other         => fail(s"expected NOGROUP after destroy, got $other")
+    }
+
+    // created engine-side: the wire serves the same object, so a message
+    // it delivered is not delivered again over the wire
+    val g = ConsumerGroup.create(lb.streamLog("s"), "g")
+    assert(lb.consumerGroup("s", "g").get eq g)
+    assert(g.readNew("engine", 10).map(_.msgid) == Seq(id))
+    assert(wire(lb, StreamCommands.xreadgroup("g", "wire", "s", 10, 0)) == ArrayReply(None))
+    assert(groupCount() == IntReply(1))
+
+    // XINFO GROUPS lists groups by name, not by creation order
+    wire(lb, StreamCommands.xgroupCreate("s", "b"))
+    ConsumerGroup.create(lb.streamLog("s"), "a")
+    assert(groupNames() == Seq("a", "b", "g"))
+  }
+
+  test("XACK, XDEL and XCLAIM with no ids answer Redis's arity error and touch nothing") {
+    val clock = new ManualClock(10)
+    val lb = new RespLoopback(clock)
+    val id = wire(lb, StreamCommands.xadd("s", Seq("k" -> "v"))).text
+    wire(lb, StreamCommands.xgroupCreate("s", "g"))
+    wire(lb, StreamCommands.xreadgroup("g", "c", "s", 10, 0))
+    Seq(
+      "xack"   -> Seq("XACK", "s", "g"),
+      "xack"   -> Seq("XACK", "s"),
+      "xdel"   -> Seq("XDEL", "s"),
+      "xclaim" -> Seq("XCLAIM", "s", "g", "ghost", "0"),
+      "xclaim" -> Seq("XCLAIM", "s", "g", "ghost")).foreach { case (name, cmd) =>
+      assert(lb.execute(cmd) == ErrorReply(s"ERR wrong number of arguments for '$name' command"),
+        s"$cmd")
+    }
+    val ArrayReply(Some(consumers)) = wire(lb, StreamCommands.xinfoConsumers("s", "g")): @unchecked
+    val names = consumers.map { case ArrayReply(Some(kv)) => kv(1).text; case o => fail(s"$o") }
+    assert(names == Seq("c"), "an XCLAIM with no ids must not create its consumer")
+    assert(wire(lb, StreamCommands.xlen("s")) == IntReply(1))
+    assert(wire(lb, StreamCommands.xack("s", "g", Seq(id))) == IntReply(1))
+  }
 }

@@ -60,7 +60,7 @@ class StreamLogOrderSpec extends AnyFunSuite {
     val rnd = new Random(seed)
     val clock = new ManualClock(1700000000000L)
     val log = new StreamLog(clock)
-    val group = ConsumerGroup.create(log, s"order-$seed", clock)
+    val group = ConsumerGroup.create(log, s"order-$seed")
     val model = new Model
     val minted = mutable.ArrayBuffer.empty[String]
     def someId(): String = rnd.nextInt(8) match {
@@ -134,6 +134,7 @@ class StreamLogOrderSpec extends AnyFunSuite {
         val probe = s"$ctx probe ($a, $b, $n, $c)"
         assert(log.after(a, n) == model.after(a, n), probe)
         assert(log.range(min, max) == model.range(min, max), probe)
+        assert(log.range(min, max, n) == model.range(min, max).take(n), probe)
         assert(log.countAfter(a) == model.countAfter(a), probe)
         assert(log.get(a) == model.get(a), probe)
         assert(group.pendingRange(min, max, n, c) == model.pendingRange(min, max, n, c), probe)
@@ -154,7 +155,7 @@ class StreamLogOrderSpec extends AnyFunSuite {
   test("readOwn returns id-only tombstones for owned entries that were trimmed or deleted") {
     val clock = new ManualClock(1700000000000L)
     val log = new StreamLog(clock)
-    val group = ConsumerGroup.create(log, "tombstones", clock)
+    val group = ConsumerGroup.create(log, "tombstones")
     try {
       val ids = (1 to 6).map(i => log.add(Map("i" -> i)))
       group.readNew("c", 6)
