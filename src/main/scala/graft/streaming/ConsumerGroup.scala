@@ -17,11 +17,12 @@ import scala.collection.mutable
   */
 final class ConsumerGroup private[streaming] (val log: StreamLog, val name: String) {
 
-  private var lastDeliveredId: String = MsgId.Zero
-  // msgid → entry, ordered by msgid: XPENDING/XAUTOCLAIM scan in id
-  // order, and a sorted map makes autoClaim's cursor seek O(log PEL)
-  // + O(scanned) instead of sort-the-world per call.
-  private val pel = mutable.TreeMap.empty[String, PelEntry](MsgId.ordering)
+  private var lastDeliveredId = StreamId.Zero
+  // typed id → entry, ordered by id (two long compares per step, no
+  // string parsing): XPENDING/XAUTOCLAIM scan in id order, and a sorted
+  // map makes autoClaim's cursor seek O(log PEL) + O(scanned) instead
+  // of sort-the-world per call. An id string is parsed once, on entry.
+  private val pel = mutable.TreeMap.empty[StreamId, PelEntry]
   private val lastSeenMs = mutable.LinkedHashMap.empty[String, Long]       // consumer → last fetch
 
   /** C2: XREADGROUP `>` — deliver up to `count` never-delivered messages
@@ -29,13 +30,13 @@ final class ConsumerGroup private[streaming] (val log: StreamLog, val name: Stri
   def readNew(consumer: String, count: Int): Seq[StreamMessage] = synchronized {
     touch(consumer)
     if (count <= 0) return Seq.empty
-    val msgs = log.after(lastDeliveredId, count)
+    val got = log.entriesAfter(lastDeliveredId, count)
     val now = log.clock.nowMs
-    msgs.foreach { m =>
-      lastDeliveredId = m.msgid
-      pel(m.msgid) = PelEntry(m.msgid, consumer, now, 1)
+    got.foreach { e =>
+      lastDeliveredId = e.id
+      pel(e.id) = PelEntry(e.msg.msgid, consumer, now, 1)
     }
-    msgs
+    got.map(_.msg)
   }
 
   /** C4: XREADGROUP `0` — re-read everything currently owned by
@@ -52,8 +53,8 @@ final class ConsumerGroup private[streaming] (val log: StreamLog, val name: Stri
     touch(consumer)
     // Redis applies COUNT to PEL re-reads too — a recovering consumer
     // paces its redelivery with the same batch size as fresh reads.
-    pendingOf(consumer, limit).map(e =>
-      log.get(e.msgid).getOrElse(StreamMessage(e.msgid, Map.empty)))
+    pel.iterator.filter(_._2.consumer == consumer).take(limit).map { case (id, e) =>
+      log.get(id).getOrElse(StreamMessage(e.msgid, Map.empty)) }.toVector
   }
 
   /** C5/G2: XPENDING range form — up to `count` PEL entries with id in
@@ -61,8 +62,8 @@ final class ConsumerGroup private[streaming] (val log: StreamLog, val name: Stri
     * id order (the PEL is id-ordered, so this is a seek plus a walk). */
   def pendingRange(min: String = "-", max: String = "+", count: Int = Int.MaxValue,
       consumer: Option[String] = None): Seq[PelEntry] = synchronized {
-    val from = if (min == "-") pel else pel.rangeFrom(min)
-    (if (max == "+") from else from.rangeTo(max)).valuesIterator
+    val from = if (min == "-") pel else pel.rangeFrom(StreamId(min))
+    (if (max == "+") from else from.rangeTo(StreamId(max))).valuesIterator
       .filter(e => consumer.forall(_ == e.consumer)).take(count).toVector
   }
 
@@ -75,24 +76,25 @@ final class ConsumerGroup private[streaming] (val log: StreamLog, val name: Stri
     * stream (the v0.3.0 doc fix, reference `consumer.py:182-190`).
     * Returns 1 if the id was pending, else 0. */
   def ack(msgid: String): Int = synchronized {
-    if (pel.remove(msgid).isDefined) 1 else 0
+    if (pel.remove(StreamId(msgid)).isDefined) 1 else 0
   }
 
   /** M6: XCLAIM — reassign `ids` to `newConsumer` iff idle ≥ `minIdleMs`
     * (guard against stealing in-flight work, `monitor.py:65-68`); resets
     * the delivery clock and bumps `times_delivered`. Returns claimed ids. */
   def claim(ids: Seq[String], newConsumer: String, minIdleMs: Long): Seq[String] = synchronized {
+    val sids = ids.map(StreamId(_)) // every id is checked before any is claimed
     // Redis XCLAIM auto-creates the claiming consumer in the group
     // (it appears in XINFO CONSUMERS immediately, before it ever
     // reads) — without the touch, a monitor that rebalanced onto a
     // fresh consumer wouldn't see the new owner in its own report.
     touch(newConsumer)
     val now = log.clock.nowMs
-    ids.flatMap { id =>
+    sids.flatMap { id =>
       pel.get(id) match {
         case Some(e) if e.timeSinceDelivered(now) >= minIdleMs =>
-          pel(id) = PelEntry(id, newConsumer, now, e.timesDelivered + 1)
-          Some(id)
+          pel(id) = PelEntry(e.msgid, newConsumer, now, e.timesDelivered + 1)
+          Some(e.msgid)
         case _ => None
       }
     }
@@ -109,6 +111,7 @@ final class ConsumerGroup private[streaming] (val log: StreamLog, val name: Stri
     * in bounded batches instead of one unbounded XPENDING read. */
   def autoClaim(newConsumer: String, minIdleMs: Long, start: String = "0-0",
       count: Int = 100): (String, Seq[String]) = synchronized {
+    val from = StreamId(start)
     // Redis requires COUNT > 0; count = 0 here would return the scan
     // START as the next cursor without claiming — the documented
     // loop-until-"0-0" caller would spin forever on it.
@@ -121,25 +124,25 @@ final class ConsumerGroup private[streaming] (val log: StreamLog, val name: Stri
     // the cursor is the first unscanned msgid, as in Redis 6.2 (not
     // the next ELIGIBLE id, which would cost a full eligibility sweep
     // exactly when the PEL is large and mostly busy).
-    val it = pel.iteratorFrom(start)
-    val batch = Seq.newBuilder[PelEntry]
+    val it = pel.iteratorFrom(from)
+    val batch = Seq.newBuilder[(StreamId, PelEntry)]
     var taken = 0
-    var nextStart = MsgId.Zero
-    while (it.hasNext && nextStart == MsgId.Zero) {
+    var nextStart = StreamId.Zero
+    while (it.hasNext && nextStart == StreamId.Zero) {
       val (id, e) = it.next()
       if (taken == count) nextStart = id
-      else if (e.timeSinceDelivered(now) >= minIdleMs) { batch += e; taken += 1 }
+      else if (e.timeSinceDelivered(now) >= minIdleMs) { batch += id -> e; taken += 1 }
     }
     val claimed = batch.result()
-    claimed.foreach(e =>
-      pel(e.msgid) = PelEntry(e.msgid, newConsumer, now, e.timesDelivered + 1))
-    (nextStart, claimed.map(_.msgid))
+    claimed.foreach { case (id, e) =>
+      pel(id) = PelEntry(e.msgid, newConsumer, now, e.timesDelivered + 1) }
+    (nextStart.toString, claimed.map(_._2.msgid))
   }
 
   /** G3: XGROUP DELCONSUMER — destroy a consumer; unclaimed PEL entries
     * are lost. Returns the number of lost (pending) messages. */
   def delConsumer(consumer: String): Int = synchronized {
-    val owned = pel.valuesIterator.filter(_.consumer == consumer).map(_.msgid).toList
+    val owned = pel.iterator.collect { case (id, e) if e.consumer == consumer => id }.toList
     owned.foreach(pel.remove)
     lastSeenMs.remove(consumer)
     owned.size
@@ -149,13 +152,13 @@ final class ConsumerGroup private[streaming] (val log: StreamLog, val name: Stri
     * log, so the next create() starts fresh. False if it was already
     * destroyed. */
   def destroy(): Boolean = {
-    synchronized { pel.clear(); lastSeenMs.clear(); lastDeliveredId = MsgId.Zero }
+    synchronized { pel.clear(); lastSeenMs.clear(); lastDeliveredId = StreamId.Zero }
     log.removeGroup(this)
   }
 
   // ---- introspection (M1 XINFO GROUPS / M2 XINFO CONSUMERS) ----
 
-  def lastDelivered: String = synchronized(lastDeliveredId)
+  def lastDelivered: String = synchronized(lastDeliveredId.toString)
   def pendingCount: Int = synchronized(pel.size)
   def consumers: Seq[String] = synchronized(lastSeenMs.keys.toSeq)
 

@@ -18,21 +18,47 @@ package graft.streaming
   */
 final case class StreamMessage(msgid: String, content: Map[String, String])
 
-/** Message-id algebra: `"<ms>-<seq>"`, ordered by (ms, seq) — the Redis
-  * stream id total order exploited by the scaler's interval arithmetic
-  * (reference `scaler.py:56-62`). */
+/** A stream id parsed once: `(ms, seq)`, compared as two longs and
+  * printed back as `"<ms>-<seq>"`. The log and the PEL key on it, so an
+  * id string is parsed at most once, where it enters a public method. */
+final case class StreamId(ms: Long, seq: Long) extends Ordered[StreamId] {
+  def compare(o: StreamId): Int = {
+    val c = java.lang.Long.compare(ms, o.ms)
+    if (c != 0) c else java.lang.Long.compare(seq, o.seq)
+  }
+  override def toString: String = MsgId.format(ms, seq)
+}
+
+object StreamId {
+  val Zero = StreamId(0L, 0L)
+
+  /** Strict, as Redis: `<digits>-<digits>`, each within Long range. No
+    * sign, no blanks, no missing half; the `-`/`+` open ends and the
+    * XREADGROUP `>`/`0` forms are the callers' to handle first. */
+  def apply(id: String): StreamId = {
+    val dash = id.indexOf('-') // -1 leaves the ms part empty
+    def part(from: Int, until: Int): Long =
+      if (from < until && (from until until).forall(i => id.charAt(i) >= '0' && id.charAt(i) <= '9'))
+        java.lang.Long.parseLong(id, from, until, 10) // throws past Long range
+      else throw new NumberFormatException(id)
+    try StreamId(part(0, dash), part(dash + 1, id.length))
+    catch { case _: NumberFormatException =>
+      throw new IllegalArgumentException("Invalid stream ID specified as stream command argument") }
+  }
+}
+
+/** Message-id string helpers: `"<ms>-<seq>"`, ordered by (ms, seq) — the
+  * Redis stream id total order exploited by the scaler's interval
+  * arithmetic (reference `scaler.py:56-62`). Parsing and order are
+  * [[StreamId]]'s. */
 object MsgId {
   val Zero = "0-0"
 
   def format(ms: Long, seq: Long): String = s"$ms-$seq"
 
-  def parse(id: String): (Long, Long) = {
-    val i = id.indexOf('-')
-    require(i > 0, s"malformed stream id: $id")
-    (id.substring(0, i).toLong, id.substring(i + 1).toLong)
-  }
+  def parse(id: String): (Long, Long) = { val s = StreamId(id); (s.ms, s.seq) }
 
-  val ordering: Ordering[String] = Ordering.by(parse)
+  val ordering: Ordering[String] = Ordering.by(StreamId(_: String))
 
   def lt(a: String, b: String): Boolean = ordering.lt(a, b)
   def lte(a: String, b: String): Boolean = ordering.lteq(a, b)

@@ -158,6 +158,7 @@ final class RespLoopback(clock: Clock = SystemClock) {
     case "XACK" =>
       arity(args, 4)
       val g = groupOf(args(1), args(2))
+      args.drop(3).foreach(StreamId(_)) // like Redis: one bad id acks nothing
       IntReply(args.drop(3).map(g.ack).sum.toLong)
 
     case "XPENDING" =>

@@ -112,9 +112,10 @@ final class StreamingScaler(logKey: String) {
     * with the PEL-based [[Scaler.collectMetrics]], whose pending is
     * tracked independently of the buffer ([[ConsumerGroup]] state). */
   def collectMetrics(deliveredUpTo: String): (Int, Int) = {
-    val backlog = log.countAfter(deliveredUpTo)
-    val acked = StreamLogRegistry.committedId(logKey)
-    (backlog, math.max(0, log.countAfter(acked) - backlog))
+    // One snapshot: an XADD between two separate counts would skew
+    // pending by the messages it added.
+    val (backlog, sinceAck) = log.countsAfter(deliveredUpTo, StreamLogRegistry.committedId(logKey))
+    (backlog, math.max(0, sinceAck - backlog))
   }
 
   /** S5 from live offsets: validate → rate → decide.

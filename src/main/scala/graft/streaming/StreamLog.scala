@@ -23,13 +23,14 @@ final class StreamLog(private[streaming] val clock: Clock = SystemClock) {
 
   // Always in strictly increasing id order: `add` mints monotonic ids,
   // `trim` drops a prefix and XDEL filters in place — so every id
-  // lookup below is one binary search (`search`), and every reply is a
-  // copy of a slice, never a view of this mutable buffer.
-  private val buf = mutable.ArrayBuffer.empty[StreamMessage]
-  private var lastMs  = -1L
-  private var lastSeq = -1L
+  // lookup below is one binary search (`search`) over the entries'
+  // typed ids, comparing longs, and every reply is a copy of a slice,
+  // never a view of this mutable buffer. A deque, so a trim costs the
+  // entries it removes, not the entries it keeps.
+  private val buf = mutable.ArrayDeque.empty[LogEntry]
+  private var last = StreamId(-1L, -1L) // the last id minted
   private var nAdded  = 0L
-  private var maxDeleted = MsgId.Zero
+  private var maxDeleted = StreamId.Zero
   // Name-ordered, the order Redis's radix tree gives XINFO GROUPS. Lock
   // order is group → log: nothing here calls into a group.
   private val groupsByName = mutable.TreeMap.empty[String, ConsumerGroup]
@@ -45,21 +46,21 @@ final class StreamLog(private[streaming] val clock: Clock = SystemClock) {
       approximate: Boolean = true,
       macroNode: Int = 16): String = synchronized {
     maxlen.foreach(m => require(m >= 0, "MAXLEN argument must be >= 0"))
-    val ms = math.max(clock.nowMs, lastMs)
-    val seq0 = if (ms == lastMs) lastSeq + 1 else 0L
+    val ms = math.max(clock.nowMs, last.ms)
+    val seq0 = if (ms == last.ms) last.seq + 1 else 0L
     // Redis forbids entry id 0-0 (the before-everything sentinel; our
     // MsgId.Zero plays the same role, and cursors read STRICTLY after
     // it) — a clock at 0 mints 0-1 first, never an undeliverable 0-0.
     val seq = if (ms == 0L && seq0 == 0L) 1L else seq0
-    lastMs = ms; lastSeq = seq
-    val id = MsgId.format(ms, seq)
-    buf += StreamMessage(id, content.map { case (k, v) => k -> String.valueOf(v) })
+    last = StreamId(ms, seq)
+    val msg = StreamMessage(last.toString, content.map { case (k, v) => k -> String.valueOf(v) })
+    buf += LogEntry(last, msg)
     nAdded += 1
     maxlen.foreach { m =>
       if (!approximate) trim(m)
       else if (buf.length >= m + macroNode) trim(m)
     }
-    id
+    msg.msgid
   }
 
   /** XLEN. */
@@ -71,7 +72,7 @@ final class StreamLog(private[streaming] val clock: Clock = SystemClock) {
     val removed = math.max(buf.length - maxlen, 0)
     if (removed > 0) {
       // trimmed prefix is id-ordered: its last element is its max
-      noteDeleted(buf(removed - 1).msgid)
+      noteDeleted(buf(removed - 1).id)
       buf.dropInPlace(removed)
     }
     removed
@@ -79,27 +80,25 @@ final class StreamLog(private[streaming] val clock: Clock = SystemClock) {
 
   /** XDEL: physically delete acked message ids. */
   def delete(ids: String*): Int = synchronized {
-    val set = ids.toSet
+    val set = ids.map(StreamId(_)).toSet // every id is checked before any is deleted
     val before = buf.length
-    buf.iterator.filter(m => set.contains(m.msgid))
-      .foreach(m => noteDeleted(m.msgid))
-    buf.filterInPlace(m => !set.contains(m.msgid))
+    buf.iterator.filter(e => set.contains(e.id)).foreach(e => noteDeleted(e.id))
+    buf.filterInPlace(e => !set.contains(e.id))
     before - buf.length
   }
 
   // Redis's max-deleted-entry-id contract: the greatest id ever removed
   // by XDEL or trimming (only ids that existed count — unknown XDEL ids
   // never move it, hence noteDeleted fires per matched message).
-  private def noteDeleted(id: String): Unit =
-    if (MsgId.lt(maxDeleted, id)) maxDeleted = id
+  private def noteDeleted(id: StreamId): Unit =
+    if (maxDeleted < id) maxDeleted = id
 
-  /** Binary search for `id` (parsed once): `Found(i)` if present,
-    * else the index of the first greater id. */
-  private def search(id: String): SearchResult =
-    buf.view.map(m => MsgId.parse(m.msgid)).search(MsgId.parse(id))
+  /** Binary search for `id`: `Found(i)` if present, else the index of
+    * the first greater id. */
+  private def search(id: StreamId): SearchResult = buf.view.map(_.id).search(id)
 
   /** Index of the first id strictly greater than `id`. */
-  private def indexAfter(id: String): Int = search(id) match {
+  private def indexAfter(id: StreamId): Int = search(id) match {
     case Found(i) => i + 1
     case other    => other.insertionPoint
   }
@@ -108,41 +107,50 @@ final class StreamLog(private[streaming] val clock: Clock = SystemClock) {
     * most `count` messages, the oldest first. */
   def range(min: String = "-", max: String = "+", count: Int = Int.MaxValue): Seq[StreamMessage] =
     synchronized {
-      val lo = if (min == "-") 0 else search(min).insertionPoint
-      val hi = if (max == "+") buf.length else indexAfter(max)
-      buf.view.slice(lo, hi).take(count).toVector
+      val lo = if (min == "-") 0 else search(StreamId(min)).insertionPoint
+      val hi = if (max == "+") buf.length else indexAfter(StreamId(max))
+      buf.view.slice(lo, hi).take(count).map(_.msg).toVector
     }
 
   /** Messages with id strictly greater than `after` (delivery order). */
   def after(after: String, count: Int): Seq[StreamMessage] =
-    synchronized(buf.view.drop(indexAfter(after)).take(count).toVector)
+    entriesAfter(StreamId(after), count).map(_.msg)
+
+  private[streaming] def entriesAfter(id: StreamId, count: Int): Vector[LogEntry] =
+    synchronized(buf.view.drop(indexAfter(id)).take(count).toVector)
 
   /** How many messages have an id strictly greater than `id`: XLEN
     * after 0-0, 0 after the last id. */
-  def countAfter(id: String): Int = synchronized(buf.length - indexAfter(id))
+  def countAfter(id: String): Int = synchronized(buf.length - indexAfter(StreamId(id)))
+
+  /** [[countAfter]] of two ids, from one snapshot of the log. */
+  private[streaming] def countsAfter(a: String, b: String): (Int, Int) =
+    synchronized((countAfter(a), countAfter(b)))
 
   /** The message with exactly this id, if it is still in the log. */
-  def get(id: String): Option[StreamMessage] = synchronized {
-    search(id) match { case Found(i) => Some(buf(i)); case _ => None }
+  def get(id: String): Option[StreamMessage] = get(StreamId(id))
+
+  private[streaming] def get(id: StreamId): Option[StreamMessage] = synchronized {
+    search(id) match { case Found(i) => Some(buf(i).msg); case _ => None }
   }
 
   /** XINFO STREAM last-generated-id (`scaler.py:47-48`) — survives
     * trims: it tracks the last id ever assigned, not the buffer tail. */
   def lastGeneratedId: String = synchronized {
-    if (lastMs < 0) MsgId.Zero else MsgId.format(lastMs, lastSeq)
+    if (last.ms < 0) MsgId.Zero else last.toString
   }
 
   /** XINFO STREAM max-deleted-entry-id: greatest id ever removed by
     * XDEL or trim; 0-0 if nothing was ever deleted (Redis ≥7 field). */
-  def maxDeletedEntryId: String = synchronized(maxDeleted)
+  def maxDeletedEntryId: String = synchronized(maxDeleted.toString)
 
   /** XINFO STREAM entries-added: lifetime XADD count (trim/XDEL never
     * decrement it — Redis ≥7 field). */
   def entriesAdded: Long = synchronized(nAdded)
 
   /** XINFO STREAM first-entry / last-entry (None on an empty stream). */
-  def firstEntry: Option[StreamMessage] = synchronized(buf.headOption)
-  def lastEntry: Option[StreamMessage]  = synchronized(buf.lastOption)
+  def firstEntry: Option[StreamMessage] = synchronized(buf.headOption.map(_.msg))
+  def lastEntry: Option[StreamMessage]  = synchronized(buf.lastOption.map(_.msg))
 
   // ---- consumer groups (G1 create, G4 destroy, M1 XINFO GROUPS) ----
 
@@ -159,3 +167,6 @@ final class StreamLog(private[streaming] val clock: Clock = SystemClock) {
   private[streaming] def removeGroup(g: ConsumerGroup): Boolean =
     synchronized(groupsByName.get(g.name).exists(_ eq g) && groupsByName.remove(g.name).isDefined)
 }
+
+/** A log entry: the message and its typed id, made once when minted. */
+private[streaming] final case class LogEntry(id: StreamId, msg: StreamMessage)

@@ -143,8 +143,11 @@ class StreamLogMicroBatchStream(logKey: String, batchSize: Int)
   /** Messages captured at offset-resolution time, keyed by the batch's
     * (start, end] id range. A MAXLEN trim between latestOffset and
     * planInputPartitions would otherwise silently drop messages the
-    * offset range already promised. */
+    * offset range already promised. An entry whose batch never runs is
+    * dropped once a commit passes its end, and all of them on stop. */
   private val planned = mutable.Map.empty[(String, String), Array[StreamMessage]]
+
+  private[streaming] def plannedSize: Int = planned.synchronized(planned.size)
 
   override def initialOffset(): Offset = LogOffset(MsgId.Zero)
 
@@ -176,9 +179,10 @@ class StreamLogMicroBatchStream(logKey: String, batchSize: Int)
     val from = start.asInstanceOf[LogOffset].lastId
     val until = end.asInstanceOf[LogOffset].lastId
     // Fallback re-read covers checkpoint recovery, where latestOffset
-    // for this range ran in a previous process.
+    // for this range ran in a previous process; `from` itself was
+    // delivered by the batch before, and can only lead the range.
     val slice = planned.synchronized(planned.remove((from, until))).getOrElse(
-      log.range(from, until).filter(m => MsgId.lt(from, m.msgid)).toArray)
+      log.range(from, until).dropWhile(_.msgid == from).toArray)
     if (slice.isEmpty) Array.empty
     else Array(StreamLogInputPartition(slice))
   }
@@ -186,10 +190,13 @@ class StreamLogMicroBatchStream(logKey: String, batchSize: Int)
   override def createReaderFactory(): PartitionReaderFactory = StreamLogReaderFactory
 
   /** C7: epoch commit = ack boundary. */
-  override def commit(end: Offset): Unit =
-    StreamLogRegistry.markCommitted(logKey, end.asInstanceOf[LogOffset].lastId)
+  override def commit(end: Offset): Unit = {
+    val upTo = end.asInstanceOf[LogOffset].lastId
+    StreamLogRegistry.markCommitted(logKey, upTo)
+    planned.synchronized(planned.filterInPlace { case ((_, e), _) => StreamId(e) > StreamId(upTo) })
+  }
 
-  override def stop(): Unit = ()
+  override def stop(): Unit = planned.synchronized(planned.clear())
 }
 
 case class StreamLogInputPartition(messages: Array[StreamMessage]) extends InputPartition

@@ -355,4 +355,36 @@ class RespLoopbackSpec extends AnyFunSuite {
     assert(wire(lb, StreamCommands.xlen("s")) == IntReply(1))
     assert(wire(lb, StreamCommands.xack("s", "g", Seq(id))) == IntReply(1))
   }
+
+  test("malformed stream ids (signed, blank, half, past Long) answer Redis's invalid-id error and touch nothing") {
+    val clock = new ManualClock(10)
+    val lb = new RespLoopback(clock)
+    val id = wire(lb, StreamCommands.xadd("s", Seq("k" -> "v"))).text
+    wire(lb, StreamCommands.xgroupCreate("s", "g"))
+    wire(lb, StreamCommands.xreadgroup("g", "c", "s", 10, 0))
+    clock.advance(10)
+    val bad = Seq("5--3", "+5-3", "-5-3", "5-+3", " 5-3", "5-3 ", "5-3-1", "5", "5-", "-3", "",
+      "\u0665-3", "9223372036854775808-0", "0-9223372036854775808")
+    for (b <- bad; cmd <- Seq(
+        Seq("XRANGE", "s", b, "+"), Seq("XRANGE", "s", "-", b),
+        Seq("XPENDING", "s", "g", b, "+", "10"), Seq("XPENDING", "s", "g", "-", b, "10"),
+        Seq("XACK", "s", "g", id, b), Seq("XCLAIM", "s", "g", "c2", "0", id, b),
+        Seq("XAUTOCLAIM", "s", "g", "c2", "0", b), Seq("XDEL", "s", id, b))) {
+      assert(lb.execute(cmd) ==
+        ErrorReply("ERR Invalid stream ID specified as stream command argument"), s"$cmd")
+    }
+    // nothing acked, claimed or deleted, and no consumer c2 was created
+    val ArrayReply(Some(Vector(ArrayReply(Some(row))))) =
+      wire(lb, StreamCommands.xpendingRange("s", "g")): @unchecked
+    assert(row(0).text == id && row(1).text == "c" && row(3) == IntReply(1))
+    val ArrayReply(Some(consumers)) = wire(lb, StreamCommands.xinfoConsumers("s", "g")): @unchecked
+    assert(consumers.map { case ArrayReply(Some(kv)) => kv(1).text; case o => fail(s"$o") } == Seq("c"))
+    assert(wire(lb, StreamCommands.xlen("s")) == IntReply(1))
+    // the largest valid id still parses, and 9-0 orders before 10-0
+    def xrange(min: String, max: String): Seq[String] = {
+      val ArrayReply(Some(entries)) = wire(lb, Seq("XRANGE", "s", min, max)): @unchecked
+      entries.map(parseEntry(_).msgid)
+    }
+    assert(xrange("9-0", "9223372036854775807-9223372036854775807") == Seq(id))
+  }
 }

@@ -6,18 +6,29 @@ import scala.util.Random
 
 /** Differential check of the id-ordered lookups — `StreamLog.after`,
   * `range`, `countAfter`, `get` and `ConsumerGroup.pendingRange`,
-  * `pendingOf`, `readOwn` — against brute-force filter-and-sort
-  * reference versions over a shadow copy of the whole buffer and PEL.
+  * `pendingOf`, `readOwn`, `autoClaim` — against brute-force
+  * filter-and-sort reference versions over a shadow copy of the whole
+  * buffer and PEL. The model orders ids by its own split-and-compare,
+  * independent of [[StreamId]].
   *
   * Each seed drives a random sequence of XADD (with and without
-  * MAXLEN, `~` and exact), XTRIM, XDEL, XREADGROUP `>`, XACK, XCLAIM
-  * and DELCONSUMER, and after every step compares every lookup at
-  * random probe ids: present, deleted, never-minted, `0-0` and past
-  * the end. */
+  * MAXLEN, `~` and exact), XTRIM, XDEL, XREADGROUP `>`, XACK, XCLAIM,
+  * XAUTOCLAIM and DELCONSUMER, and after every step compares every
+  * lookup at random probe ids: present, deleted, never-minted, `0-0`
+  * and past the end; and the log's max-deleted id, first and last
+  * entry. */
 class StreamLogOrderSpec extends AnyFunSuite {
 
   private val Consumers = Seq("c1", "c2", "c3")
   private val MacroNode = 16
+
+  private def key(id: String): (Long, Long) = {
+    val Array(ms, seq) = id.split('-')
+    (ms.toLong, seq.toLong)
+  }
+  private val order = Ordering[(Long, Long)]
+  private def lt(a: String, b: String): Boolean = order.lt(key(a), key(b))
+  private def lte(a: String, b: String): Boolean = order.lteq(key(a), key(b))
 
   /** The reference model: the buffer as a plain list in append order,
     * the PEL as an unordered map, the group cursor as a string. Every
@@ -26,39 +37,55 @@ class StreamLogOrderSpec extends AnyFunSuite {
     var buf = Vector.empty[StreamMessage]
     val pel = mutable.Map.empty[String, PelEntry]
     var lastDelivered = MsgId.Zero
+    var maxDeleted = MsgId.Zero
 
+    def remove(gone: Seq[StreamMessage]): Unit = {
+      buf = buf.filterNot(gone.contains)
+      gone.foreach(m => if (lt(maxDeleted, m.msgid)) maxDeleted = m.msgid)
+    }
     def trim(maxlen: Int): Int = {
       val removed = math.max(buf.length - maxlen, 0)
-      buf = buf.drop(removed)
+      remove(buf.take(removed))
       removed
     }
     def after(id: String, count: Int): Seq[StreamMessage] =
-      buf.filter(m => MsgId.lt(id, m.msgid)).take(count)
+      buf.filter(m => lt(id, m.msgid)).take(count)
     def range(min: String, max: String): Seq[StreamMessage] =
-      buf.filter(m => (min == "-" || MsgId.lte(min, m.msgid)) &&
-                      (max == "+" || MsgId.lte(m.msgid, max)))
-    def countAfter(id: String): Int = buf.count(m => MsgId.lt(id, m.msgid))
+      buf.filter(m => (min == "-" || lte(min, m.msgid)) &&
+                      (max == "+" || lte(m.msgid, max)))
+    def countAfter(id: String): Int = buf.count(m => lt(id, m.msgid))
     def get(id: String): Option[StreamMessage] =
-      buf.find(m => MsgId.parse(m.msgid) == MsgId.parse(id))
+      buf.find(m => key(m.msgid) == key(id))
     def pendingRange(min: String, max: String, count: Int, consumer: Option[String]): Seq[PelEntry] =
       pel.values.toSeq
         .filter(e => consumer.forall(_ == e.consumer))
-        .filter(e => (min == "-" || MsgId.lte(min, e.msgid)) &&
-                     (max == "+" || MsgId.lte(e.msgid, max)))
-        .sortBy(e => MsgId.parse(e.msgid)).take(count)
+        .filter(e => (min == "-" || lte(min, e.msgid)) &&
+                     (max == "+" || lte(e.msgid, max)))
+        .sortBy(e => key(e.msgid)).take(count)
     def readOwn(consumer: String, count: Int): Seq[StreamMessage] = {
       val owned = pel.valuesIterator.filter(_.consumer == consumer).map(_.msgid).toSet
       val live = buf.filter(m => owned.contains(m.msgid))
-      val ghosts = (owned -- live.map(_.msgid)).toSeq.sorted(MsgId.ordering)
-        .map(id => StreamMessage(id, Map.empty))
-      (live ++ ghosts).sortBy(m => MsgId.parse(m.msgid))
+      val ghosts = (owned -- live.map(_.msgid)).toSeq.map(id => StreamMessage(id, Map.empty))
+      (live ++ ghosts).sortBy(m => key(m.msgid))
         .take(if (count <= 0) Int.MaxValue else count)
+    }
+    /** XAUTOCLAIM: the first `count` idle entries from `start` on; the
+      * cursor is the next entry scanned after them, 0-0 at the end. */
+    def autoClaim(c: String, idle: Long, start: String, count: Int, now: Long): (String, Seq[String]) = {
+      val scan = pendingRange(start, "+", Int.MaxValue, None)
+      val claimed = scan.filter(_.timeSinceDelivered(now) >= idle).take(count)
+      val cursor =
+        if (claimed.size < count) MsgId.Zero
+        else scan.find(e => lt(claimed.last.msgid, e.msgid)).fold(MsgId.Zero)(_.msgid)
+      claimed.foreach(e => pel(e.msgid) = PelEntry(e.msgid, c, now, e.timesDelivered + 1))
+      (cursor, claimed.map(_.msgid))
     }
   }
 
-  private def runSeed(seed: Long, steps: Int): Unit = {
+  /** Runs one seed; returns the clock's final ms. */
+  private def runSeed(seed: Long, steps: Int, startMs: Long = 1700000000000L): Long = {
     val rnd = new Random(seed)
-    val clock = new ManualClock(1700000000000L)
+    val clock = new ManualClock(startMs)
     val log = new StreamLog(clock)
     val group = ConsumerGroup.create(log, s"order-$seed")
     val model = new Model
@@ -79,7 +106,7 @@ class StreamLogOrderSpec extends AnyFunSuite {
     try (1 to steps).foreach { step =>
       if (rnd.nextInt(3) == 0) clock.advance(rnd.nextInt(3).toLong)
       val ctx = s"seed $seed step $step"
-      rnd.nextInt(10) match {
+      rnd.nextInt(11) match {
         case 0 | 1 | 2 =>
           val maxlen = if (rnd.nextInt(3) == 0) Some(5 + rnd.nextInt(30)) else None
           val approximate = rnd.nextBoolean()
@@ -94,10 +121,9 @@ class StreamLogOrderSpec extends AnyFunSuite {
           assert(log.trim(m) == model.trim(m), ctx)
         case 4 =>
           val ids = Seq.fill(1 + rnd.nextInt(3))(someId())
-          val set = ids.toSet
-          val before = model.buf.length
-          model.buf = model.buf.filterNot(m => set.contains(m.msgid))
-          assert(log.delete(ids: _*) == before - model.buf.length, ctx)
+          val gone = model.buf.filter(m => ids.contains(m.msgid))
+          model.remove(gone)
+          assert(log.delete(ids: _*) == gone.size, ctx)
         case 5 | 6 =>
           val (c, n) = (someConsumer(), 1 + rnd.nextInt(6))
           val expected = model.after(model.lastDelivered, n)
@@ -123,10 +149,18 @@ class StreamLogOrderSpec extends AnyFunSuite {
           val lost = model.pel.values.filter(_.consumer == c).map(_.msgid).toSeq
           lost.foreach(model.pel.remove)
           assert(group.delConsumer(c) == lost.size, ctx)
+        case 10 =>
+          val (c, idle, start, n) =
+            (someConsumer(), rnd.nextInt(3).toLong, someId(), 1 + rnd.nextInt(5))
+          assert(group.autoClaim(c, idle, start, n) == model.autoClaim(c, idle, start, n, clock.nowMs),
+            s"$ctx autoClaim($c, $idle, $start, $n)")
       }
 
       assert(log.len == model.buf.length, ctx)
       assert(log.range() == model.buf, ctx)
+      assert(log.maxDeletedEntryId == model.maxDeleted, ctx)
+      assert(log.firstEntry == model.buf.headOption, ctx)
+      assert(log.lastEntry == model.buf.lastOption, ctx)
       (1 to 4).foreach { _ =>
         val (a, b, n) = (someId(), someId(), someCount())
         val c = if (rnd.nextBoolean()) Some(someConsumer()) else None
@@ -146,10 +180,17 @@ class StreamLogOrderSpec extends AnyFunSuite {
       assert(group.pendingCount == model.pel.size, ctx)
       assert(group.lastDelivered == model.lastDelivered, ctx)
     } finally group.destroy()
+    clock.nowMs
   }
 
   test("id lookups match a brute-force filter-and-sort over the buffer and PEL (seeded)") {
     (1L to 30L).foreach(seed => runSeed(seed, steps = 300))
+  }
+
+  test("id order holds where the ms part grows a digit (9999 -> 10000): numeric, not lexicographic") {
+    (31L to 40L).foreach { seed =>
+      assert(runSeed(seed, steps = 300, startMs = 9990L) >= 10000L, s"seed $seed never crossed 10000")
+    }
   }
 
   test("readOwn returns id-only tombstones for owned entries that were trimmed or deleted") {

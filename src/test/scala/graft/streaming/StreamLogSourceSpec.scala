@@ -150,4 +150,24 @@ class StreamLogSourceSpec extends SparkTestBase {
       assert(ids == ids.sorted(MsgId.ordering), "delivery must follow id order")
     } finally q2.stop()
   }
+
+  test("a planned slice whose batch never runs is dropped by the commit past it, the rest by stop") {
+    val log = new StreamLog(new ManualClock(1700000000000L))
+    (1 to 6).foreach(i => log.add(Map("i" -> i)))
+    val key = StreamLogRegistry.register(log)
+    try {
+      val stream = new StreamLogMicroBatchStream(key, batchSize = 2)
+      val limit = stream.getDefaultReadLimit
+      val first = stream.latestOffset(stream.initialOffset(), limit)
+      val second = stream.latestOffset(first, limit)
+      assert(stream.plannedSize == 2) // no planInputPartitions ran for either
+      stream.commit(first)
+      assert(stream.plannedSize == 1, "the slice past the commit is still to run")
+      stream.commit(second)
+      assert(stream.plannedSize == 0)
+      stream.latestOffset(second, limit)
+      stream.stop()
+      assert(stream.plannedSize == 0)
+    } finally StreamLogRegistry.unregister(key)
+  }
 }
