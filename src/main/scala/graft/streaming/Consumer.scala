@@ -26,57 +26,55 @@ object Consumer {
     s"${ProcessHandle.current().pid()}${Thread.currentThread().getId}"
 }
 
-final class Consumer(
-    log: StreamLog,
-    groupName: String,
-    val consumerId: String = Consumer.defaultConsumerId,
-    batchSize: Int = 2,
-    maxWaitTimeMs: Long = 10000L,
-    pollTimeMs: Long = 1000L) {
+/** C1-C8 over a [[GroupPort]]: the reference Consumer's get_items loop
+  * (`consumer.py:36-162`), written once for [[Consumer]] and
+  * [[WireConsumer]]. */
+abstract class ConsumerRole private[streaming] (
+    val consumerId: String,
+    batchSize: Int,
+    maxWaitTimeMs: Long,
+    pollTimeMs: Long) {
 
-  // G1: group bootstrap in every component ctor (`common.py:12-18`).
-  val group: ConsumerGroup = ConsumerGroup.create(log, groupName)
-
-  private var hardStopMs = 0L
+  private[streaming] def port: GroupPort
 
   /** C1: the count-OR-time batch collection window. */
   def getItems(): Seq[StreamMessage] = {
-    setHardStopTime()                                   // consumer.py:87-90
-    var assigned = alreadyAssigned()                    // C5, consumer.py:113-119
-    while (waitForMoreMessages(assigned)) {             // consumer.py:75-85
-      assigned += getNewItemsToConsumer(assigned)       // C3, consumer.py:105-111
+    val clock = port.clock
+    val hardStopMs = clock.nowMs + maxWaitTimeMs                        // consumer.py:87-90
+    var assigned = port.pending(batchSize, Some(consumerId)).size       // C5, consumer.py:113-119
+    while (clock.nowMs <= hardStopMs && assigned < batchSize) {         // consumer.py:75-85
+      // C2+C3: request only the deficit, never over-fetch ownership
+      // (`consumer.py:96`); an empty read sleeps one poll slice, the
+      // reference's BLOCK timer (`consumer.py:151`).
+      val got = port.read(consumerId, math.max(1, batchSize - assigned), pollTimeMs, newOnly = true)
+      if (got.isEmpty) clock.sleep(pollTimeMs)
+      assigned += got.size
     }
-    group.readOwn(consumerId)                           // C4 final re-read, consumer.py:101-103
+    // C4 final re-read (`consumer.py:101-103`), COUNT batchSize: Redis
+    // applies COUNT to PEL re-reads too.
+    port.read(consumerId, batchSize, pollTimeMs, newOnly = false)
   }
 
-  /** C7: XACK one processed item (does not delete from the stream). */
-  def removeItemFromConsumerGroup(itemId: String): Unit = {
-    group.ack(itemId)                                   // consumer.py:180-191
-  }
+  /** C7: XACK one processed item (does not delete from the stream,
+    * `consumer.py:180-191`). */
+  def removeItemFromConsumerGroup(itemId: String): Unit = port.ack(itemId)
+}
+
+/** [[ConsumerRole]] on the in-process engine. */
+final class Consumer(
+    log: StreamLog,
+    groupName: String,
+    consumerId: String = Consumer.defaultConsumerId,
+    batchSize: Int = 2,
+    maxWaitTimeMs: Long = 10000L,
+    pollTimeMs: Long = 1000L) extends ConsumerRole(consumerId, batchSize, maxWaitTimeMs, pollTimeMs) {
+
+  // G1: group bootstrap in every component ctor (`common.py:12-18`).
+  val group: ConsumerGroup = ConsumerGroup.create(log, groupName)
+  private[streaming] val port: GroupPort = new EnginePort(group)
 
   /** Deprecated alias kept for API parity (reference `consumer.py:193-207`
     * raises DeprecationWarning and forwards). */
   @deprecated("use removeItemFromConsumerGroup; XACK does not delete from the stream", "0.1.0")
   def removeItemFromStream(itemId: String): Unit = removeItemFromConsumerGroup(itemId)
-
-  // ---- internals, mirroring the reference call graph ----
-
-  private def setHardStopTime(): Unit = hardStopMs = log.clock.nowMs + maxWaitTimeMs
-
-  private def waitForMoreMessages(assigned: Int): Boolean =
-    log.clock.nowMs <= hardStopMs && assigned < batchSize
-
-  /** C5: count of already-owned pending items (seeds the quota). */
-  private def alreadyAssigned(): Int =
-    group.pendingOf(consumerId, batchSize).size
-
-  /** C2+C3: incremental top-up — request only the deficit, never
-    * over-fetch ownership (`consumer.py:96`); the blocking poll doubles
-    * as the wait timer (`consumer.py:151`). */
-  private def getNewItemsToConsumer(assigned: Int): Int = {
-    val want = math.max(1, batchSize - assigned)
-    val got = group.readNew(consumerId, want)
-    if (got.isEmpty) log.clock.sleep(pollTimeMs)        // blocking poll slice
-    got.size
-  }
 }

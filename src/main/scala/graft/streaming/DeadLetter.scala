@@ -33,13 +33,17 @@ import scala.collection.immutable.ListMap
   * A message trimmed from the source stream after delivery routes as
   * provenance-only (the readOwn tombstone rule: its PEL entry must
   * still reach a terminal state, and the DLQ is that state).
+  *
+  * Written once over a [[GroupPort]], for [[DeadLetterRouter]] and
+  * [[WireDlq]].
   */
-final class DeadLetterRouter(
-    group: ConsumerGroup,
-    dlq: StreamLog,
-    maxDeliveries: Int = 3,
-    routerId: String = "dlq-router") {
+abstract class DeadLetterRole private[streaming] (maxDeliveries: Int, routerId: String) {
   require(maxDeliveries >= 1, s"maxDeliveries must be >= 1, got $maxDeliveries")
+
+  private[streaming] def port: GroupPort
+
+  /** XADD one dead letter to the DLQ stream; its id. */
+  private[streaming] def append(fields: Seq[(String, String)]): String
 
   /** One sweep over the group PEL in id order, bounded to `count`
     * scanned entries (the XAUTOCLAIM pacing discipline — a sweep's
@@ -47,28 +51,33 @@ final class DeadLetterRouter(
     * Returns (sourceId, dlqId) per routed message. */
   def sweep(count: Int = 100): Seq[(String, String)] = {
     require(count > 0, s"sweep count must be positive, got $count")
-    group.pendingRange(count = count).filter(_.timesDelivered >= maxDeliveries).flatMap { e =>
+    port.pending(count).filter(_.timesDelivered >= maxDeliveries).flatMap { e =>
       // Claim-first: if the entry vanished (acked/claimed concurrently)
       // the claim returns empty and the message is NOT routed — only
       // messages we own at routing time reach the DLQ.
-      if (group.claim(Seq(e.msgid), routerId, minIdleMs = 0L).isEmpty) None
-      else {
-        val body = group.log.get(e.msgid).map(_.content.toSeq).getOrElse(Seq.empty)
-        val dlqId = dlq.add(ListMap((body ++ DeadLetterRouter.provenance(
-          e.msgid, e.consumer, e.timesDelivered)): _*))
-        group.ack(e.msgid)
-        Some(e.msgid -> dlqId)
+      port.claim(routerId, 0L, Seq(e.id)).headOption.map { m =>
+        val dlqId = append(m.content.toSeq ++ DeadLetterRouter.provenance(e.id, e.consumer, e.timesDelivered))
+        port.ack(e.id)
+        e.id -> dlqId
       }
     }
   }
 }
 
+/** [[DeadLetterRole]] on the in-process engine: dead letters go to `dlq`. */
+final class DeadLetterRouter(
+    group: ConsumerGroup,
+    dlq: StreamLog,
+    maxDeliveries: Int = 3,
+    routerId: String = "dlq-router") extends DeadLetterRole(maxDeliveries, routerId) {
+  private[streaming] val port: GroupPort = new EnginePort(group)
+  private[streaming] def append(fields: Seq[(String, String)]): String = dlq.add(ListMap(fields: _*))
+}
+
 object DeadLetterRouter {
   val Reason = "max-deliveries"
 
-  /** The provenance field block shared verbatim by the engine router
-    * and [[WireDlq]] — one definition, so the two transports cannot
-    * drift on what a dead letter looks like. */
+  /** The provenance field block every dead letter carries. */
   def provenance(sourceId: String, consumer: String, timesDelivered: Int): Seq[(String, String)] =
     Seq(
       "dlq-source-id"        -> sourceId,

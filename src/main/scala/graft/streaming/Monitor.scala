@@ -2,47 +2,66 @@ package graft.streaming
 
 import scala.collection.mutable
 
-/** Consumer-group health monitor: classification, sweep, failure
-  * rebalance, report rendering — reference `monitor.py` (M1-M7, R1).
+/** M4-M6 + R1 over [[GroupPort]]s: the reference Monitor's sweep and
+  * cleanup loop (`monitor.py:141-209`), written once for [[Monitor]]
+  * and [[WireMonitor]]. Classification (M3) and the report grid (R1)
+  * are the pure functions of the [[Monitor]] companion.
   */
-final class Monitor(
-    groups: Seq[ConsumerGroup],
-    batchSize: Int = 2,               // pending-warn threshold, monitor.py:53-54
-    idleTimeThresholdMs: Long = 30000L, // idle-warn threshold, monitor.py:55
-    minWaitTimeMs: Long = 0L) {       // XCLAIM min-idle guard, monitor.py:65-68
+abstract class MonitorRole private[streaming] (
+    batchSize: Int,               // pending-warn threshold, monitor.py:53-54
+    idleTimeThresholdMs: Long,    // idle-warn threshold, monitor.py:55
+    minWaitTimeMs: Long) {        // XCLAIM min-idle guard, monitor.py:65-68
+
+  /** The groups one sweep visits, in sweep order (M1). */
+  private[streaming] def watched: Seq[GroupPort]
+
+  /** The one rule the two monitors differ on, fixed by each constructor:
+    *
+    *  - `None` ([[Monitor]]): each group's healthy consumer with the
+    *    least pending is that group's target, and each dead consumer is
+    *    cleaned in its own group (the clean argmin, SURVEY §7.3).
+    *  - `Some(own)` ([[WireMonitor]]), the reference rule: the last
+    *    healthy consumer seen in any group is the one target
+    *    (`monitor.py:161-166`: the zeroed comparison always passes),
+    *    and cleanup runs in `own` for every dead consumer
+    *    (`common.py:48-85` hard-codes the monitor's group).
+    */
+  private[streaming] val targetRule: Option[GroupPort]
 
   private val metrics = mutable.ArrayBuffer.empty[ConsumerMetrics]
-  private val unhealthy = mutable.Map.empty[ConsumerGroup, List[String]]
-  private val targets = mutable.Map.empty[ConsumerGroup, (String, Int)]
+  // (group cleanup runs in, dead consumer, its pending) in sweep order,
+  // so cleanup rows come out in the order the groups were swept.
+  private val unhealthy = mutable.ArrayBuffer.empty[(GroupPort, String, Int)]
+  private val targets = mutable.Map.empty[GroupPort, (String, Int)] // by the group cleanup runs in
+  private var lastCleanupResults: Seq[(String, Int, Int)] = Nil
 
   /** M3: pure health classification — pending-warning wins over
     * idle-warning (reference `monitor.py:85-91`). */
   def statusByMetrics(pending: Int, idleMs: Long): String =
     Monitor.statusByMetrics(pending, idleMs, batchSize, idleTimeThresholdMs)
 
-  /** M4: the monitoring sweep — classify every consumer of every group
-    * with consumers > 0, remember unhealthy ones, and pick PER GROUP the
-    * healthy consumer with minimum pending as reassignment target (the
-    * clean argmin; the reference's first-healthy seeding quirk at
-    * `monitor.py:163-164` is documented in SURVEY §7.3 as a deviation —
-    * a single cross-group target would leave other groups uncleaned).
-    * With `autoCleanup`, rebalances failures before returning. */
+  /** M4 (`monitor.py:141-185`): classify every consumer of every
+    * watched group, remember the unhealthy ones, pick the claim target
+    * by [[targetRule]]. With `autoCleanup`, rebalances (M5) before
+    * returning. */
   def collectMonitoringData(autoCleanup: Boolean = true): Seq[ConsumerMetrics] = {
     metrics.clear(); unhealthy.clear(); targets.clear()
-    groups.filter(_.consumers.nonEmpty).foreach { g =>
-      g.consumerInfo.foreach { case (cid, pending, idleMs) =>
+    watched.foreach { p =>
+      val home = targetRule.getOrElse(p)
+      p.consumerInfo.foreach { case (cid, pending, idleMs) =>
         val status = statusByMetrics(pending, idleMs)
         metrics += ConsumerMetrics(cid, pending, idleMs, status)
-        if (status == ConsumerStatus.Ok) {
-          if (targets.get(g).forall { case (_, p) => pending < p }) targets(g) = (cid, pending)
-        } else {
-          unhealthy(g) = cid :: unhealthy.getOrElse(g, Nil)
-        }
+        if (status != ConsumerStatus.Ok) unhealthy += ((home, cid, pending))
+        else if (targetRule.isDefined || targets.get(home).forall(pending < _._2))
+          targets(home) = cid -> pending
       }
     }
     if (autoCleanup) cleanup()
     metrics.toSeq
   }
+
+  /** The claim target the last sweep picked for cleanups in `home`. */
+  private[streaming] def target(home: GroupPort): Option[String] = targets.get(home).map(_._1)
 
   /** Outcome of the last [[cleanup]] pass: (deadConsumer, claimed,
     * lost) per rebalanced consumer. `lost > 0` is the reference's
@@ -50,34 +69,26 @@ final class Monitor(
     * no logging dependency, so the loss is surfaced as DATA instead of
     * silently discarded: operators read it here or from cleanup()'s
     * return value. */
-  private var lastCleanupResults: Seq[(String, Int, Int)] = Nil
   def lastCleanup: Seq[(String, Int, Int)] = lastCleanupResults
 
-  /** M5 driver loop (reference `monitor.py:186-193`); returns one
-    * (deadConsumer, claimed, lost) row per rebalanced consumer. */
+  /** M5 driver loop (`monitor.py:186-194`): every unhealthy consumer
+    * that has a target, in sweep order; no target, no cleanup
+    * (`monitor.py:182-185`). */
   def cleanup(): Seq[(String, Int, Int)] = {
-    val results = for {
-      (g, consumers) <- unhealthy.toSeq
-      (tc, _) <- targets.get(g).toSeq
-      dead <- consumers.reverse
-    } yield {
-      val (claimed, lost) = cleanupUnhealthyConsumer(g, dead, tc)
-      (dead, claimed, lost)
-    }
-    lastCleanupResults = results
-    results
+    lastCleanupResults = for ((home, dead, pending) <- unhealthy.toSeq; tc <- target(home))
+      yield cleanupUnhealthyConsumer(home, dead, pending, tc)
+    lastCleanupResults
   }
 
-  /** M5: failure rebalance — list the dead consumer's PEL (G2), claim
-    * for the target (M6), then delete the consumer (G3); lost>0 is the
-    * reference's logged-error condition (`monitor.py:93-127`). Returns
-    * (claimed, lost). */
-  def cleanupUnhealthyConsumer(
-      g: ConsumerGroup, dead: String, targetConsumer: String): (Int, Int) = {
-    val ids = g.pendingOf(dead).map(_.msgid)
-    val claimed = g.claim(ids, targetConsumer, minWaitTimeMs)        // M6
-    val lost = g.delConsumer(dead)                                   // G3
-    (claimed.size, lost)
+  /** M5/M6/G2/G3 (`monitor.py:93-127`): list the dead consumer's PEL,
+    * as many entries as the sweep saw pending; claim them for the
+    * target with min-idle `minWaitTimeMs`; delete the consumer.
+    * Returns (dead, claimed, lost). */
+  private[streaming] def cleanupUnhealthyConsumer(
+      home: GroupPort, dead: String, pending: Int, targetConsumer: String): (String, Int, Int) = {
+    val ids = home.pending(pending, Some(dead)).map(_.id)
+    val claimed = if (ids.isEmpty) 0 else home.claim(targetConsumer, minWaitTimeMs, ids).size
+    (dead, claimed, home.delConsumer(dead))
   }
 
   /** R1: grid-style report (reference `monitor.py:195-209`). */
@@ -89,10 +100,17 @@ final class Monitor(
   }
 }
 
-/** The M3 classification table and R1 rendering as pure functions —
-  * ONE definition shared by the engine-side [[Monitor]] and the
-  * wire-speaking [[WireMonitor]], so the two roles can never disagree
-  * on what "unhealthy" means or how the report reads. */
+/** [[MonitorRole]] on the in-process engine, over the given groups. */
+final class Monitor(
+    groups: Seq[ConsumerGroup],
+    batchSize: Int = 2,
+    idleTimeThresholdMs: Long = 30000L,
+    minWaitTimeMs: Long = 0L) extends MonitorRole(batchSize, idleTimeThresholdMs, minWaitTimeMs) {
+  private[streaming] val watched: Seq[GroupPort] = groups.map(new EnginePort(_))
+  private[streaming] val targetRule: Option[GroupPort] = None
+}
+
+/** The M3 classification table and R1 rendering as pure functions. */
 object Monitor {
   /** M3 (reference `monitor.py:85-91`): pending-warning wins. */
   def statusByMetrics(pending: Int, idleMs: Long,

@@ -1,23 +1,31 @@
 package graft.streaming
 
-/** Utilization-based scaling advisor — reference `scaler.py` (S1-S5).
-  *
-  * Returns `(rate, suggestion)` where rate is the backlog/pending
-  * utilization percentage and suggestion ∈ {OUT, IN, NO_SCALE}.
+/** S1-S5 over a [[GroupPort]]: the reference Scaler (`scaler.py:36-117`),
+  * written once for [[Scaler]] and [[WireScaler]]. Returns `(rate,
+  * suggestion)` where rate is the backlog/pending utilization
+  * percentage and suggestion ∈ {OUT, IN, NO_SCALE}.
   */
-final class Scaler(log: StreamLog, groupName: String) {
+abstract class ScalerRole private[streaming] {
+
+  private[streaming] def port: GroupPort
+
+  /** S1 (`scaler.py:36-63`): (backlog, pending) — backlog is the
+    * messages not yet delivered to the group, as the adapter counts it. */
+  def collectMetrics(): (Int, Int) = port.scalerSignals match { case (backlog, pending, _) => (backlog, pending) }
+
+  /** S5 (`scaler.py:99-117`, defaults out=50, in=10) on freshly
+    * collected signals: an advisor must not decide on stale values. */
+  def getScaleDecision(scaleOutRate: Int = 50, scaleInRate: Int = 10): (Double, String) =
+    port.scalerSignals match { case (b, p, c) => Scaler.decide(b, p, c, scaleOutRate, scaleInRate) }
+}
+
+/** [[ScalerRole]] on the in-process engine. Its S1 backlog is the
+  * count of ids in (last-delivered, last-generated]: the value the
+  * reference's inclusive XRANGE minus 1 intends (`scaler.py:49-62`). */
+final class Scaler(log: StreamLog, groupName: String) extends ScalerRole {
 
   val group: ConsumerGroup = ConsumerGroup.create(log, groupName) // G1 bootstrap
-
-  /** S1: backlog measurement — messages not yet delivered to the group:
-    * never-delivered ⇒ XLEN; caught-up ⇒ 0; else the count of ids in
-    * (last-delivered, last-generated]. The reference's inclusive XRANGE
-    * minus 1 (`scaler.py:49-62`, acknowledged off-by-one at
-    * `test_scaler.py:125-126`) computes exactly this intended value,
-    * which is what we implement. Returns (backlog, pending). */
-  def collectMetrics(): (Int, Int) = {
-    (log.countAfter(group.lastDelivered), group.pendingCount)
-  }
+  private[streaming] val port: GroupPort = new EnginePort(group)
 
   def calculateRate(backlog: Int, pending: Int): Double =
     Scaler.calculateRate(backlog, pending)
@@ -29,21 +37,19 @@ final class Scaler(log: StreamLog, groupName: String) {
       rate: Double, backlog: Int, consumers: Int,
       scaleOutRate: Int, scaleInRate: Int): String =
     Scaler.calculateScale(rate, backlog, consumers, scaleOutRate, scaleInRate)
-
-  /** S5: validate → rate → decide (defaults out=50, in=10,
-    * reference `scaler.py:99-117`). */
-  def getScaleDecision(scaleOutRate: Int = 50, scaleInRate: Int = 10): (Double, String) = {
-    validateScalingParams(scaleOutRate, scaleInRate)
-    val (backlog, pending) = collectMetrics()
-    val rate = calculateRate(backlog, pending)
-    val suggestion = calculateScale(rate, backlog, group.consumers.size, scaleOutRate, scaleInRate)
-    (rate, suggestion)
-  }
 }
 
-/** The pure S2-S4 arithmetic, shared by the batch advisor above and the
-  * streaming-offset twin below (same decision tables, one definition). */
+/** The pure S2-S5 arithmetic, shared by [[ScalerRole]] and the
+  * streaming-offset [[StreamingScaler]] below. */
 object Scaler {
+
+  /** S5 (`scaler.py:99-117`): validate → rate → decide. */
+  def decide(backlog: Int, pending: Int, consumers: Int,
+      scaleOutRate: Int, scaleInRate: Int): (Double, String) = {
+    validateScalingParams(scaleOutRate, scaleInRate)
+    val rate = calculateRate(backlog, pending)
+    (rate, calculateScale(rate, backlog, consumers, scaleOutRate, scaleInRate))
+  }
 
   /** S2: utilization rate = round(clamp(backlog/pending·100, 1, 100), 4);
     * 0 when EITHER backlog or pending is 0 — the reference's
@@ -118,14 +124,12 @@ final class StreamingScaler(logKey: String) {
     (backlog, math.max(0, sinceAck - backlog))
   }
 
-  /** S5 from live offsets: validate → rate → decide.
+  /** S5 from live offsets ([[Scaler.decide]]).
     * @param consumers the running query's delivery parallelism (the
     *        consumer-count analog in the S3 table) */
   def getScaleDecision(deliveredUpTo: String, consumers: Int,
       scaleOutRate: Int = 50, scaleInRate: Int = 10): (Double, String) = {
-    Scaler.validateScalingParams(scaleOutRate, scaleInRate)
     val (backlog, pending) = collectMetrics(deliveredUpTo)
-    val rate = Scaler.calculateRate(backlog, pending)
-    (rate, Scaler.calculateScale(rate, backlog, consumers, scaleOutRate, scaleInRate))
+    Scaler.decide(backlog, pending, consumers, scaleOutRate, scaleInRate)
   }
 }

@@ -1,30 +1,85 @@
 package graft.streaming
 
+import scala.collection.immutable.ListMap
 import RespCodec._
 
-/** Wire-speaking counterparts of [[Scaler]] and [[Consumer]] — the
-  * reference's actual deployment topology. The reference library is a
-  * CLIENT: its Scaler and Consumer compute everything from RESP
-  * replies over a socket (`common.py:13-18`), while our engine-side
-  * [[Scaler]]/[[Consumer]] operate on in-process [[StreamLog]] state.
-  * These classes close that gap: the same S1-S5 / C1-C8 logic driven
-  * exclusively through wire commands, so a user of the reference can
-  * point them at [[RespServer]] (or any RESP endpoint) and run the
-  * loops they run today.
+/** The group port: the stream commands the reference roles issue, one
+  * trait with two adapters. Each role ([[ConsumerRole]] C1-C8,
+  * [[MonitorRole]] M4-M6, [[ScalerRole]] S1-S5, [[DeadLetterRole]]) is
+  * written once against [[GroupPort]], and the named classes are thin
+  * constructors that pick an adapter:
   *
-  * Both are parameterized by `call: Seq[String] => Reply` — one
-  * command in, one reply out — so they run identically over a real
-  * socket ([[RespClient.call]]) and transport-free ([[RespLoopback
-  * .execute]]). An [[ErrorReply]] from the transport is surfaced as an
-  * exception EXCEPT where the reference deliberately swallows it
-  * (BUSYGROUP on group create, `common.py:33-37`).
+  *  - [[EnginePort]] calls a [[ConsumerGroup]] directly ([[Consumer]],
+  *    [[Monitor]], [[Scaler]], [[DeadLetterRouter]]). Its S1 backlog is
+  *    the intended strictly-after count.
+  *  - [[RespPort]] speaks `Seq[String] => Reply`, so the same roles run
+  *    over a socket ([[RespClient.call]]) or transport-free
+  *    ([[RespLoopback.execute]]) — the reference's deployment: a client
+  *    library computing everything from RESP replies (`common.py:13-18`).
+  *    It owns all reply parsing and the G1 bootstrap. Its one quirk is
+  *    the reference's S1 backlog, inclusive `XRANGE` − 1
+  *    (`scaler.py:49-62`), which undercounts by one when the
+  *    last-delivered entry is not in the range: a fresh `0-0` cursor, or
+  *    a trimmed entry (`test_scaler.py:124-127` pins it).
+  *
+  * The wire constructors below carry no other quirk, except
+  * [[WireMonitor]]'s target rule (see [[MonitorRole.targetRule]]).
+  * The DLQ append goes to another stream, so each DLQ constructor gives
+  * its own: a [[StreamLog]] add, or the adapter's XADD.
   */
+private[streaming] trait GroupPort {
+  def clock: Clock
+  /** XREADGROUP: C2 `>` when `newOnly`, else C4 `0`, where a trimmed
+    * entry comes back with empty content. The engine answers at once;
+    * `blockMs` rides the wire. */
+  def read(consumer: String, count: Int, blockMs: Long, newOnly: Boolean): Seq[StreamMessage]
+  /** C5/G2: XPENDING range, id order, optionally of one consumer. */
+  def pending(count: Int, consumer: Option[String] = None): Seq[PendingRow]
+  /** C7: XACK of one id; 1 if it was pending. */
+  def ack(id: String): Int
+  /** M6: XCLAIM; the claimed messages with their bodies, empty where trimmed. */
+  def claim(consumer: String, minIdleMs: Long, ids: Seq[String]): Seq[StreamMessage]
+  /** G3: XGROUP DELCONSUMER; the pending entries lost. */
+  def delConsumer(consumer: String): Int
+  /** M2: XINFO CONSUMERS of this group: (name, pending, idle ms). */
+  def consumerInfo: Seq[(String, Int, Long)]
+  /** S1: (backlog, pending, consumers) of this group. */
+  def scalerSignals: (Int, Int, Int)
+}
+
+/** One XPENDING range row, without the idle time no role reads. */
+private[streaming] final case class PendingRow(id: String, consumer: String, timesDelivered: Int)
+
+/** One XINFO GROUPS row. */
+private[streaming] final case class GroupRow(name: String, consumers: Int, pending: Int, lastDelivered: String)
+
+private[streaming] final class EnginePort(g: ConsumerGroup) extends GroupPort {
+  def clock: Clock = g.log.clock
+  def read(consumer: String, count: Int, blockMs: Long, newOnly: Boolean): Seq[StreamMessage] =
+    if (newOnly) g.readNew(consumer, count) else g.readOwn(consumer, count)
+  def pending(count: Int, consumer: Option[String]): Seq[PendingRow] =
+    g.pendingRange(count = count, consumer = consumer).map(e => PendingRow(e.msgid, e.consumer, e.timesDelivered))
+  def ack(id: String): Int = g.ack(id)
+  def claim(consumer: String, minIdleMs: Long, ids: Seq[String]): Seq[StreamMessage] =
+    g.claim(ids, consumer, minIdleMs).map(id => g.log.get(id).getOrElse(StreamMessage(id, Map.empty)))
+  def delConsumer(consumer: String): Int = g.delConsumer(consumer)
+  def consumerInfo: Seq[(String, Int, Long)] = g.consumerInfo
+  def scalerSignals: (Int, Int, Int) =
+    g.synchronized((g.log.countAfter(g.lastDelivered), g.pendingCount, g.consumers.size))
+}
+
 private[streaming] object WireReplies {
   /** Raise wire errors; the reference's redis-py raises ResponseError
     * the same way and each caller decides what to absorb. */
   def ok(r: Reply): Reply = r match {
     case ErrorReply(m) => sys.error(m)
     case other         => other
+  }
+
+  /** The elements of an array reply. */
+  def rows(r: Reply): Vector[Reply] = ok(r) match {
+    case ArrayReply(Some(items)) => items
+    case other                   => sys.error(s"not an array reply: $other")
   }
 
   /** A flat `[k1, v1, k2, v2, …]` info reply as a map — redis-py's
@@ -43,137 +98,92 @@ private[streaming] object WireReplies {
   }
 }
 
-/** S1-S5 computed from wire replies only — a faithful port of the
-  * reference Scaler's client-side loop (`scaler.py:36-117`), including
-  * its acknowledged backlog off-by-one: the inclusive
-  * `XRANGE last-delivered last-generated` counts the last delivered
-  * entry too, so the reference subtracts 1 — which undercounts by one
-  * whenever the last-delivered entry is no longer in the range (fresh
-  * group cursor `0-0`, or the entry trimmed), exactly as its own test
-  * pins (`test_scaler.py:124-127`: "lenght is always lower than
-  * actual TODO: Fix"). The engine-side [[Scaler]] computes the
-  * intended strictly-after count instead; this class reproduces the
-  * wire protocol the reference actually runs, quirk included, because
-  * that is what "switch the library, keep the ops loop" means.
-  */
-final class WireScaler(call: Seq[String] => Reply, stream: String, group: String) {
+private[streaming] final class RespPort(
+    call: Seq[String] => Reply,
+    stream: String,
+    val group: String,
+    val clock: Clock = SystemClock) extends GroupPort {
   import WireReplies._
 
-  // G1 bootstrap: every reference component creates the group in its
-  // ctor, swallowing BUSYGROUP (`common.py:12-37`).
-  call(StreamCommands.xgroupCreate(stream, group)) match {
+  /** G1: every reference component creates its group in its ctor,
+    * swallowing BUSYGROUP (`common.py:12-37`). */
+  def create(): RespPort = call(StreamCommands.xgroupCreate(stream, group)) match {
     case ErrorReply(m) if !m.contains("BUSYGROUP") => sys.error(m)
-    case _ => ()
+    case _ => this
   }
 
-  private var streamLength = 0
-  private var streamPending = 0
-  private var consumersOfGroup = 0
+  def read(consumer: String, count: Int, blockMs: Long, newOnly: Boolean): Seq[StreamMessage] =
+    parseXRead(ok(call(StreamCommands.xreadgroup(group, consumer, stream, count, blockMs, newOnly))))
+      .toMap.getOrElse(stream, Seq.empty)
 
-  /** S1 over the wire (`scaler.py:36-63`): XINFO GROUPS for the
-    * group's pending/consumers/last-delivered-id, XINFO STREAM for
-    * last-generated-id, then XLEN (group missing), 0 (caught up) or
-    * len(XRANGE)-1. Returns (backlog, pending). */
-  def collectMetrics(): (Int, Int) = {
-    val groupRow = ok(call(StreamCommands.xinfoGroups(stream))) match {
-      case ArrayReply(Some(rows)) =>
-        rows.map(pairMap).find(_.get("name").exists(_.text == group))
-      case other => sys.error(s"bad XINFO GROUPS reply: $other")
+  def pending(count: Int, consumer: Option[String]): Seq[PendingRow] =
+    rows(call(StreamCommands.xpendingRange(stream, group, count = count, consumer = consumer))).map {
+      case ArrayReply(Some(Vector(id, owner, _, IntReply(times)))) => PendingRow(id.text, owner.text, times.toInt)
+      case other => sys.error(s"bad XPENDING row: $other")
     }
-    val lastDelivered = groupRow.flatMap(_.get("last-delivered-id")).map(_.text)
-    streamPending = groupRow.flatMap(_.get("pending")).map(int(_).toInt).getOrElse(0)
-    consumersOfGroup = groupRow.flatMap(_.get("consumers")).map(int(_).toInt).getOrElse(0)
-    val lastGenerated =
-      pairMap(ok(call(StreamCommands.xinfoStream(stream))))("last-generated-id").text
-    streamLength = lastDelivered match {
-      case None => int(ok(call(StreamCommands.xlen(stream)))).toInt
-      case Some(ld) if ld == lastGenerated => 0
+
+  def ack(id: String): Int = int(ok(call(StreamCommands.xack(stream, group, Seq(id))))).toInt
+
+  // Field order kept as sent: a dead letter re-adds the body verbatim.
+  def claim(consumer: String, minIdleMs: Long, ids: Seq[String]): Seq[StreamMessage] =
+    rows(call(StreamCommands.xclaim(stream, group, consumer, minIdleMs, ids))).map {
+      case ArrayReply(Some(Vector(id, ArrayReply(Some(fv))))) =>
+        StreamMessage(id.text, ListMap(fv.grouped(2).map { case Vector(k, v) => k.text -> v.text }.toSeq: _*))
+      case ArrayReply(Some(Vector(id, _))) => StreamMessage(id.text, Map.empty) // trimmed: nil fields
+      case other => sys.error(s"bad XCLAIM entry: $other")
+    }
+
+  def delConsumer(consumer: String): Int =
+    int(ok(call(StreamCommands.xgroupDelConsumer(stream, group, consumer)))).toInt
+
+  /** M1: XINFO GROUPS. Only the reference's rules read it, so the
+    * engine adapter has no twin of it. */
+  def groups: Seq[GroupRow] = rows(call(StreamCommands.xinfoGroups(stream))).map(pairMap).map(g =>
+    GroupRow(g("name").text, int(g("consumers")).toInt, int(g("pending")).toInt, g("last-delivered-id").text))
+
+  def consumerInfo: Seq[(String, Int, Long)] =
+    rows(call(StreamCommands.xinfoConsumers(stream, group))).map(pairMap).map(c =>
+      (c("name").text, int(c("pending")).toInt, int(c("idle"))))
+
+  /** S1 as the reference computes it (`scaler.py:36-63`): XINFO GROUPS
+    * and XINFO STREAM, then XLEN (group missing), 0 (caught up) or
+    * len(XRANGE last-delivered last-generated) − 1 — the header's quirk. */
+  def scalerSignals: (Int, Int, Int) = {
+    val row = groups.find(_.name == group)
+    val lastGenerated = pairMap(ok(call(StreamCommands.xinfoStream(stream))))("last-generated-id").text
+    val backlog = row.map(_.lastDelivered) match {
+      case None                             => int(ok(call(StreamCommands.xlen(stream)))).toInt
+      case Some(ld) if ld == lastGenerated  => 0
       case Some(ld) =>
-        val n = ok(call(StreamCommands.xrange(stream, min = ld, max = lastGenerated))) match {
-          case ArrayReply(Some(entries)) => entries.length
-          case other                     => sys.error(s"bad XRANGE reply: $other")
-        }
-        math.max(0, n - 1) // inclusive range counts the delivered entry
+        math.max(0, rows(call(StreamCommands.xrange(stream, min = ld, max = lastGenerated))).length - 1)
     }
-    (streamLength, streamPending)
+    (backlog, row.fold(0)(_.pending), row.fold(0)(_.consumers))
   }
 
-  /** S5 (`scaler.py:99-117`): validate → rate → decide, on the LAST
-    * collected metrics; re-collects first unless both are nonzero —
-    * the reference's `all([pending, length])` re-probe
-    * (`scaler.py:74-76`). Rate/decision reuse the exact S2/S3 tables
-    * shared with the engine-side [[Scaler]]. */
-  def getScaleDecision(scaleOutRate: Int = 50, scaleInRate: Int = 10): (Double, String) = {
-    Scaler.validateScalingParams(scaleOutRate, scaleInRate)
-    if (streamPending == 0 || streamLength == 0) collectMetrics()
-    val rate = Scaler.calculateRate(streamLength, streamPending)
-    (rate, Scaler.calculateScale(
-      rate, streamLength, consumersOfGroup, scaleOutRate, scaleInRate))
-  }
+  /** XADD to any stream; the server-assigned id. */
+  def add(to: String, fields: Seq[(String, String)]): String =
+    ok(call(StreamCommands.xadd(to, fields))).text
 }
 
-/** C1-C8 driven exclusively through wire commands — the reference
-  * Consumer's get_items loop (`consumer.py:36-162`) as a RESP client:
-  * XPENDING (consumer-filtered) seeds the quota, XREADGROUP `>` tops
-  * up the deficit, and the final XREADGROUP `0` returns everything
-  * owned. One deliberate adaptation: the reference leans on server-side
-  * BLOCK as its poll timer (`consumer.py:151`); [[RespLoopback]]
-  * answers immediately (BLOCK accepted, ignored), so an empty read
-  * sleeps `pollTimeMs` client-side — same cadence, same count-OR-time
-  * contract, identical batch results.
-  */
+/** [[ScalerRole]] over the wire, backlog quirk included: what "switch
+  * the library, keep the ops loop" means. */
+final class WireScaler(call: Seq[String] => Reply, stream: String, group: String) extends ScalerRole {
+  private[streaming] val port: GroupPort = new RespPort(call, stream, group).create()
+}
+
+/** [[ConsumerRole]] over the wire. Each XREADGROUP sends `BLOCK
+  * pollTimeMs`; [[RespLoopback]] answers at once, so the poll slice
+  * still sleeps on `clock`. */
 final class WireConsumer(
     call: Seq[String] => Reply,
     stream: String,
     group: String,
-    val consumerId: String = Consumer.defaultConsumerId,
+    consumerId: String = Consumer.defaultConsumerId,
     batchSize: Int = 2,
     maxWaitTimeMs: Long = 10000L,
     pollTimeMs: Long = 1000L,
-    clock: Clock = SystemClock) {
-  import WireReplies._
-
-  call(StreamCommands.xgroupCreate(stream, group)) match { // G1, common.py:12-37
-    case ErrorReply(m) if !m.contains("BUSYGROUP") => sys.error(m)
-    case _ => ()
-  }
-
-  private var hardStopMs = 0L
-
-  /** C1: the count-OR-time batch window, wire edition
-    * (`consumer.py:93-103`). */
-  def getItems(): Seq[StreamMessage] = {
-    hardStopMs = clock.nowMs + maxWaitTimeMs                // consumer.py:87-90
-    var assigned = alreadyAssigned()                        // C5, consumer.py:113-119
-    while (clock.nowMs <= hardStopMs && assigned < batchSize) { // consumer.py:75-85
-      val want = math.max(1, batchSize - assigned)          // consumer.py:96
-      val got = readWire(newOnly = true, count = want)      // C2/C3
-      if (got.isEmpty) clock.sleep(pollTimeMs)              // poll slice (see header)
-      assigned += got.size
-    }
-    readWire(newOnly = false, count = batchSize)            // C4, consumer.py:101-103
-  }
-
-  /** C7: XACK one processed item (`consumer.py:180-191`). */
-  def removeItemFromConsumerGroup(itemId: String): Unit = {
-    ok(call(StreamCommands.xack(stream, group, Seq(itemId)))); ()
-  }
-
-  /** C5: count of already-owned items via the consumer-filtered
-    * XPENDING range (`common.py:66-73`), capped at batchSize like the
-    * reference's item_count. */
-  private def alreadyAssigned(): Int =
-    ok(call(StreamCommands.xpendingRange(
-      stream, group, count = batchSize, consumer = Some(consumerId)))) match {
-      case ArrayReply(Some(rows)) => rows.length
-      case other                  => sys.error(s"bad XPENDING reply: $other")
-    }
-
-  private def readWire(newOnly: Boolean, count: Int): Seq[StreamMessage] =
-    parseXRead(ok(call(StreamCommands.xreadgroup(
-      group, consumerId, stream, count, pollTimeMs, newOnly))))
-      .collectFirst { case (s, msgs) if s == stream => msgs }
-      .getOrElse(Seq.empty)
+    clock: Clock = SystemClock) extends ConsumerRole(consumerId, batchSize, maxWaitTimeMs, pollTimeMs) {
+  private[streaming] val port: GroupPort = new RespPort(call, stream, group, clock).create()
 }
 
 /** P1/P2 as a RESP client — the reference Producer (`producer.py:16-51`):
@@ -196,209 +206,37 @@ final class WireProducer(
     s"WireProducer(stream=$stream,maxlen=${maxlen.getOrElse("None")})"
 }
 
-/** Dead-letter routing over wire commands only — the client-side twin
-  * of [[DeadLetterRouter]] (see its header for the policy and why the
-  * reference names DLQ but never ships it, `common.py:61-64`). The
-  * whole route is expressible in the four commands the reference
-  * already uses: XPENDING's range rows carry `times_delivered`, XCLAIM
-  * answers the claimed entries WITH their bodies (so routing needs no
-  * extra XRANGE round-trip), XADD appends to the DLQ stream, XACK
-  * retires the source entry. Provenance is the shared
-  * [[DeadLetterRouter.provenance]] block, so wire-routed and
-  * engine-routed dead letters are field-for-field identical.
-  */
+/** [[DeadLetterRole]] over the wire: XCLAIM answers the bodies, so a
+  * route needs no extra XRANGE; dead letters go to `dlqStream` by XADD. */
 final class WireDlq(
     call: Seq[String] => Reply,
     stream: String,
     group: String,
     dlqStream: String,
     maxDeliveries: Int = 3,
-    routerId: String = "dlq-router") {
-  import WireReplies._
-  require(maxDeliveries >= 1, s"maxDeliveries must be >= 1, got $maxDeliveries")
-
-  call(StreamCommands.xgroupCreate(stream, group)) match { // G1, common.py:12-37
-    case ErrorReply(m) if !m.contains("BUSYGROUP") => sys.error(m)
-    case _ => ()
-  }
-
-  /** One sweep: scan up to `count` PEL entries (id order — the
-    * XPENDING range contract), route every one whose delivery budget
-    * is exhausted. Returns (sourceId, dlqId) per routed message. */
-  def sweep(count: Int = 100): Seq[(String, String)] = {
-    require(count > 0, s"sweep count must be positive, got $count")
-    val rows = ok(call(StreamCommands.xpendingRange(stream, group, count = count))) match {
-      case ArrayReply(Some(rs)) => rs.map {
-        case ArrayReply(Some(Vector(id, owner, _, IntReply(times)))) =>
-          (id.text, owner.text, times.toInt)
-        case other => sys.error(s"bad XPENDING row: $other")
-      }
-      case other => sys.error(s"bad XPENDING reply: $other")
-    }
-    rows.filter(_._3 >= maxDeliveries).flatMap { case (id, owner, times) =>
-      // Claim-first, as in the engine router: an empty XCLAIM reply
-      // means the entry vanished (acked concurrently) — skip, don't
-      // route a message nobody owns.
-      ok(call(StreamCommands.xclaim(stream, group, routerId, 0L, Seq(id)))) match {
-        case ArrayReply(Some(entries)) if entries.nonEmpty =>
-          val body: Seq[(String, String)] = entries.head match {
-            case ArrayReply(Some(Vector(_, ArrayReply(Some(fv))))) =>
-              fv.grouped(2).map { case Vector(k, v) => k.text -> v.text }.toSeq
-            case _ => Seq.empty // trimmed tombstone: nil fields, provenance-only route
-          }
-          val dlqId = ok(call(StreamCommands.xadd(
-            dlqStream, body ++ DeadLetterRouter.provenance(id, owner, times)))).text
-          ok(call(StreamCommands.xack(stream, group, Seq(id))))
-          Some(id -> dlqId)
-        case _ => None
-      }
-    }
-  }
+    routerId: String = "dlq-router") extends DeadLetterRole(maxDeliveries, routerId) {
+  private[streaming] val port: RespPort = new RespPort(call, stream, group).create()
+  private[streaming] def append(fields: Seq[(String, String)]): String = port.add(dlqStream, fields)
 }
 
-/** M1-M7 + R1 driven exclusively through wire commands — the reference
-  * Monitor's sweep/cleanup loop (`monitor.py:141-209`) as a RESP
-  * client, completing the quartet: every reference role (producer,
-  * consumer, scaler, monitor) now runs against [[RespServer]] over TCP.
-  * Classification (M3) and the report grid (R1) are the SHARED pure
-  * functions in the [[Monitor]] companion, so wire and engine monitors
-  * cannot disagree on what "unhealthy" means.
-  *
-  * Two reference quirks are reproduced faithfully (the engine-side
-  * [[Monitor]] implements the clean per-group argmin instead — the
-  * deviation SURVEY §7.3 documents):
-  *
-  *  - '''last-healthy-wins target''' (`monitor.py:161-166`): the seed
-  *    `if not consumer_to_assign_pending_items` overwrites the local
-  *    pending count with the accumulator (always 0), so the comparison
-  *    always passes and the LAST healthy consumer seen — across ALL
-  *    groups — becomes the single global claim target.
-  *  - '''own-group cleanup''' (`common.py:48-85`): the sweep collects
-  *    unhealthy consumers per group, but `get_pending_items_of_consumer`
-  *    / `xclaim` / `remove_consumer` all hard-code
-  *    `self.consumer_group`, so cleanup only ever moves messages within
-  *    the monitor's OWN group; an unhealthy consumer of another group
-  *    is DELCONSUMER'd from the monitor's group (a no-op there).
-  */
+/** [[MonitorRole]] over the wire, with the reference's target rule:
+  * the sweep visits every group of the stream that has consumers
+  * (XINFO GROUPS), the last healthy consumer seen becomes the one
+  * target, and cleanup runs in this monitor's own group. */
 final class WireMonitor(
     call: Seq[String] => Reply,
     stream: String,
     group: String,
-    batchSize: Int = 2,                  // monitor.py:53
-    minWaitTimeMs: Long = 1000L,         // monitor.py:54
-    idleTimeThresholdMs: Long = 30000L) { // monitor.py:55
-  import WireReplies._
-  import scala.collection.mutable
+    batchSize: Int = 2,
+    minWaitTimeMs: Long = 1000L,
+    idleTimeThresholdMs: Long = 30000L)
+    extends MonitorRole(batchSize, idleTimeThresholdMs, minWaitTimeMs) {
+  private val own = new RespPort(call, stream, group).create()
+  private[streaming] val targetRule: Option[GroupPort] = Some(own)
+  private[streaming] def watched: Seq[GroupPort] =
+    own.groups.filter(_.consumers > 0).map(r => new RespPort(call, stream, r.name))
 
-  call(StreamCommands.xgroupCreate(stream, group)) match { // G1, common.py:20-38
-    case ErrorReply(m) if !m.contains("BUSYGROUP") => sys.error(m)
-    case _ => ()
-  }
-
-  private val collected = mutable.ArrayBuffer.empty[ConsumerMetrics]
-  private val unhealthy = mutable.LinkedHashMap.empty[String, mutable.LinkedHashMap[String, Int]]
-  private var consumerToAssign = ""
-  private var lastCleanupResults: Seq[(String, Int, Int)] = Nil
-
-  /** The single global claim target after the last sweep (empty = no
-    * healthy consumer anywhere) — `monitor.py:144`. */
-  def targetConsumer: String = consumerToAssign
-
-  /** (deadConsumer, claimed, lost) per consumer removed by the last
-    * cleanup; lost > 0 is the reference's logged-error condition
-    * (`monitor.py:125-127`), surfaced as data like the engine monitor. */
-  def lastCleanup: Seq[(String, Int, Int)] = lastCleanupResults
-
-  /** M4 over the wire (`monitor.py:141-185`): XINFO GROUPS, then for
-    * every group with consumers > 0, XINFO CONSUMERS; classify each
-    * (M1/M2/M3), remember unhealthy ones, pick the claim target, and —
-    * with `autoCleanup`, when a target exists AND something is
-    * unhealthy (`monitor.py:178-181`) — rebalance (M5). */
-  def collectMonitoringData(autoCleanup: Boolean = true): Seq[ConsumerMetrics] = {
-    collected.clear(); unhealthy.clear(); consumerToAssign = ""
-    var targetPending = 0 // monitor.py:145; stays 0 (see header quirk)
-    val groupRows = ok(call(StreamCommands.xinfoGroups(stream))) match {
-      case ArrayReply(Some(rows)) => rows.map(pairMap)
-      case other                  => sys.error(s"bad XINFO GROUPS reply: $other")
-    }
-    groupRows.foreach { g =>
-      val gName = g("name").text
-      if (int(g("consumers")) > 0) {
-        val consumerRows = ok(call(StreamCommands.xinfoConsumers(stream, gName))) match {
-          case ArrayReply(Some(rows)) => rows.map(pairMap)
-          case other                  => sys.error(s"bad XINFO CONSUMERS reply: $other")
-        }
-        consumerRows.foreach { c =>
-          val cid = c("name").text
-          val pending = int(c("pending")).toInt
-          val idle = int(c("idle"))
-          val status = Monitor.statusByMetrics(pending, idle, batchSize, idleTimeThresholdMs)
-          if (status != ConsumerStatus.Ok) {
-            unhealthy.getOrElseUpdate(gName, mutable.LinkedHashMap.empty)(cid) = pending
-          } else {
-            // monitor.py:161-166 verbatim: when the accumulator is 0 the
-            // candidate's pending is overwritten with it, so `<=` always
-            // holds and the last healthy consumer wins.
-            val cmp = if (targetPending == 0) targetPending else pending
-            if (cmp <= targetPending) { consumerToAssign = cid; targetPending = cmp }
-          }
-          collected += ConsumerMetrics(cid, pending, idle, status)
-        }
-      }
-    }
-    if (autoCleanup) {
-      if (consumerToAssign.nonEmpty && unhealthy.nonEmpty) cleanup()
-      else lastCleanupResults = Nil // no target or nothing unhealthy, monitor.py:182-185
-    }
-    collected.toSeq
-  }
-
-  /** M5 driver loop (`monitor.py:187-194`): every unhealthy consumer of
-    * every group, rebalanced via [[cleanupUnhealthyConsumer]]. */
-  def cleanup(): Seq[(String, Int, Int)] = {
-    val results = for {
-      (_, consumers)   <- unhealthy.toSeq
-      (dead, pending)  <- consumers.toSeq
-    } yield {
-      val (claimed, lost) = cleanupUnhealthyConsumer(pending, dead)
-      (dead, claimed, lost)
-    }
-    lastCleanupResults = results
-    results
-  }
-
-  /** M5/M6/G2/G3 over the wire (`monitor.py:93-127`): XPENDING range
-    * filtered to the dead consumer (count = its pending), XCLAIM the
-    * ids to the target with min-idle `minWaitTimeMs`, then XGROUP
-    * DELCONSUMER — all against the monitor's OWN group (header quirk).
-    * Returns (claimed, lost). */
-  def cleanupUnhealthyConsumer(pendingCount: Int, consumerToDelete: String): (Int, Int) = {
-    val ids = ok(call(StreamCommands.xpendingRange(
-      stream, group, count = pendingCount, consumer = Some(consumerToDelete)))) match {
-      case ArrayReply(Some(rows)) => rows.map {
-        case ArrayReply(Some(fields)) => fields.head.text
-        case other                    => sys.error(s"bad XPENDING row: $other")
-      }
-      case other => sys.error(s"bad XPENDING reply: $other")
-    }
-    val claimed =
-      if (ids.isEmpty) 0
-      else ok(call(StreamCommands.xclaim(
-        stream, group, consumerToAssign, minWaitTimeMs, ids))) match {
-        case ArrayReply(Some(entries)) => entries.length
-        case other                     => sys.error(s"bad XCLAIM reply: $other")
-      }
-    val lost = int(ok(call(
-      StreamCommands.xgroupDelConsumer(stream, group, consumerToDelete)))).toInt
-    (claimed, lost)
-  }
-
-  /** R1 (`monitor.py:195-209`) — the shared grid renderer over the last
-    * sweep's metrics. */
-  def renderTable(): String = Monitor.renderTable(collected.toSeq)
-
-  def printMonitoringData(out: Appendable = System.out): Unit = {
-    out.append(renderTable()).append("\n")
-    ()
-  }
+  /** The single claim target of the last sweep (empty = no healthy
+    * consumer anywhere) — `monitor.py:144`. */
+  def targetConsumer: String = target(own).getOrElse("")
 }

@@ -57,6 +57,21 @@ class MonitorScalerSpec extends AnyFunSuite {
     assert(g.pendingOf("healthy").map(_.timesDelivered).max == 2)
   }
 
+  test("cleanup rows follow the order the groups were passed") {
+    val (clock, log) = fixture()
+    (1 to 2).foreach(i => log.add(Map("i" -> i)))
+    // created in one order, passed in another, neither of them name order
+    val groups = Seq("mon-b", "mon-c", "mon-a").map(ConsumerGroup.create(log, _))
+    groups.foreach(g => g.readNew(s"${g.name}-dead", 1))
+    clock.advance(5000)
+    groups.foreach(g => g.readNew(s"${g.name}-live", 1))
+    val passed = Seq(groups(2), groups(0), groups(1))
+    val m = new Monitor(passed, batchSize = 2, idleTimeThresholdMs = 1000)
+    m.collectMonitoringData()
+    assert(m.lastCleanup == passed.map(g => (s"${g.name}-dead", 1, 0)))
+    assert(passed.forall(g => g.consumers == Seq(s"${g.name}-live") && g.pendingOf(s"${g.name}-live").size == 2))
+  }
+
   test("report renders a grid with all four columns (test_monitor.py:44-67)") {
     val (clock, log) = fixture()
     (1 to 2).foreach(i => log.add(Map("i" -> i)))

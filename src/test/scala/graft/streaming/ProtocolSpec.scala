@@ -115,6 +115,21 @@ class ProtocolSpec extends AnyFunSuite {
     assert(third.map(_.content.apply("i")) == Seq("3", "4"))
   }
 
+  // --- C4 re-read is paced by COUNT batchSize, as Redis paces PEL re-reads ---
+
+  test("a consumer owning batchSize + 1 entries gets batchSize of them, then the rest plus new work") {
+    val (clock, log) = fixture()
+    val ids = (1 to 5).map(i => log.add(Map("i" -> i)))
+    val c = new Consumer(log, "grp-c4", "c1", batchSize = 2,
+      maxWaitTimeMs = 1000, pollTimeMs = 100)
+    c.group.readNew("c0", 3)
+    assert(c.group.claim(ids.take(3), "c1", minIdleMs = 0L) == ids.take(3))
+    val first = c.getItems()
+    assert(first.map(_.msgid) == ids.take(2), "the oldest batchSize owned entries, in id order")
+    first.foreach(m => c.removeItemFromConsumerGroup(m.msgid))
+    assert(c.getItems().map(_.msgid) == Seq(ids(2), ids(3)), "the remaining entry, topped up with new work")
+  }
+
   // --- Deprecated alias (test_consumer.py:45-61) ---
 
   test("remove_item_from_stream alias acks but does not delete from the stream") {

@@ -15,8 +15,9 @@ import scala.util.Random
   * MAXLEN, `~` and exact), XTRIM, XDEL, XREADGROUP `>`, XACK, XCLAIM,
   * XAUTOCLAIM and DELCONSUMER, and after every step compares every
   * lookup at random probe ids: present, deleted, never-minted, `0-0`
-  * and past the end; and the log's max-deleted id, first and last
-  * entry. */
+  * and past the end; the log's max-deleted id, first and last entry;
+  * and XINFO CONSUMERS (`consumerInfo`): the consumer set, each
+  * consumer's pending count and idle time. */
 class StreamLogOrderSpec extends AnyFunSuite {
 
   private val Consumers = Seq("c1", "c2", "c3")
@@ -38,6 +39,10 @@ class StreamLogOrderSpec extends AnyFunSuite {
     val pel = mutable.Map.empty[String, PelEntry]
     var lastDelivered = MsgId.Zero
     var maxDeleted = MsgId.Zero
+    val lastSeen = mutable.Map.empty[String, Long] // every command naming a consumer creates it
+
+    def consumerInfo(now: Long): Set[(String, Int, Long)] = lastSeen.map { case (c, seen) =>
+      (c, pel.valuesIterator.count(_.consumer == c), now - seen) }.toSet
 
     def remove(gone: Seq[StreamMessage]): Unit = {
       buf = buf.filterNot(gone.contains)
@@ -128,6 +133,7 @@ class StreamLogOrderSpec extends AnyFunSuite {
           val (c, n) = (someConsumer(), 1 + rnd.nextInt(6))
           val expected = model.after(model.lastDelivered, n)
           assert(group.readNew(c, n) == expected, ctx)
+          model.lastSeen(c) = clock.nowMs
           expected.foreach { m =>
             model.lastDelivered = m.msgid
             model.pel(m.msgid) = PelEntry(m.msgid, c, clock.nowMs, 1)
@@ -141,6 +147,7 @@ class StreamLogOrderSpec extends AnyFunSuite {
           val expected = ids.filter(id =>
             model.pel.get(id).exists(_.timeSinceDelivered(clock.nowMs) >= idle))
           assert(group.claim(ids, c, idle) == expected, ctx)
+          model.lastSeen(c) = clock.nowMs
           expected.foreach { id =>
             model.pel(id) = PelEntry(id, c, clock.nowMs, model.pel(id).timesDelivered + 1)
           }
@@ -148,13 +155,19 @@ class StreamLogOrderSpec extends AnyFunSuite {
           val c = someConsumer()
           val lost = model.pel.values.filter(_.consumer == c).map(_.msgid).toSeq
           lost.foreach(model.pel.remove)
+          model.lastSeen.remove(c)
           assert(group.delConsumer(c) == lost.size, ctx)
         case 10 =>
           val (c, idle, start, n) =
             (someConsumer(), rnd.nextInt(3).toLong, someId(), 1 + rnd.nextInt(5))
           assert(group.autoClaim(c, idle, start, n) == model.autoClaim(c, idle, start, n, clock.nowMs),
             s"$ctx autoClaim($c, $idle, $start, $n)")
+          model.lastSeen(c) = clock.nowMs
       }
+
+      // Before the probes below, whose readOwn names every consumer.
+      val info = group.consumerInfo
+      assert(info.size == model.lastSeen.size && info.toSet == model.consumerInfo(clock.nowMs), ctx)
 
       assert(log.len == model.buf.length, ctx)
       assert(log.range() == model.buf, ctx)
@@ -175,6 +188,7 @@ class StreamLogOrderSpec extends AnyFunSuite {
         Consumers.foreach { cc =>
           assert(group.pendingOf(cc, n) == model.pendingRange("-", "+", n, Some(cc)), probe)
           assert(group.readOwn(cc, n) == model.readOwn(cc, n), probe)
+          model.lastSeen(cc) = clock.nowMs
         }
       }
       assert(group.pendingCount == model.pel.size, ctx)

@@ -176,6 +176,24 @@ class WireE2ESpec extends AnyFunSuite {
     }
   }
 
+  test("wire consumer: owning batchSize + 1 entries gets batchSize of them, then the rest plus new work") {
+    val clock = new ManualClock(1000)
+    withWire(clock, preload = 5) { client =>
+      val consumer = new WireConsumer(client.call, Stream, Group,
+        consumerId = "c1", batchSize = 2, maxWaitTimeMs = 100, pollTimeMs = 10, clock = clock)
+      val ids = parseXRead(WireReplies.ok(client.call(StreamCommands.xreadgroup(
+        Group, "c0", Stream, count = 3, blockMs = 0)))).head._2.map(_.msgid)
+      assert(ids.size == 3)
+      WireReplies.ok(client.call(StreamCommands.xclaim(Stream, Group, "c1", 0L, ids)))
+      val first = consumer.getItems()
+      assert(first.map(_.msgid) == ids.take(2), "the oldest batchSize owned entries, in id order")
+      first.foreach(m => consumer.removeItemFromConsumerGroup(m.msgid))
+      val second = consumer.getItems()
+      assert(second.map(_.msgid).head == ids(2) && second.size == 2, "the remaining entry, topped up with new work")
+      assert(second(1).content == Map("test" -> "data4"))
+    }
+  }
+
   test("wire producer: add returns a server-assigned id and grows XLEN (test_producer.py:9-29)") {
     val clock = new ManualClock(1000)
     withWire(clock) { client =>
