@@ -6,11 +6,16 @@ import java.nio.charset.StandardCharsets.UTF_8
   * this library and the wire (the reference speaks TCP via redis-py,
   * `redis_streams/common.py:13-18`; [[RespServer]] is our server half,
   * [[RespClient]] the client half). The codec is transport-agnostic:
-  * bytes in, bytes out, incremental decode over partial buffers (TCP
-  * delivers fragments), so it is fully unit-tested against the public
+  * bytes in, bytes out, so it is fully unit-tested against the public
   * protocol spec's golden byte sequences (redis.io protocol-spec;
   * RESP2, which every server version speaks) and then reused verbatim
   * by the socket loop.
+  *
+  * Every byte of RESP is read by the one incremental [[RespReader]]
+  * below (TCP delivers fragments; it consumes each byte once). Its
+  * users add only their own rule: [[RespCommandFramer]] the server's
+  * inbound shape check and command cap, [[RespClient]] its reply cap,
+  * and [[decode]] a one-reply wrapper over a fresh reader.
   *
   * Commands are RESP arrays of bulk strings; replies are the five
   * RESP2 types. [[StreamCommands]] builds exactly the command set the
@@ -93,65 +98,24 @@ object RespCodec {
   /** A bulk-string reply from text. */
   def bulk(s: String): Reply = BulkReply(Some(s.getBytes(UTF_8)))
 
-  /** Nesting bound for [[decode]]: a buffer of repeated `*1\r\n`
-    * frames would otherwise recurse once per level and overflow the
-    * stack — a remote-crash vector once the codec sits behind a real
-    * socket. Redis's own protocol nests at most a few levels; 64 is
-    * generous for every legal Streams reply. */
+  /** Nesting bound for [[RespReader]]: open arrays sit on a heap stack,
+    * and this bounds it — a buffer of repeated `*1\r\n` frames must not
+    * grow reader state one level per four bytes. Redis's own protocol
+    * nests at most a few levels; 64 is generous for every legal Streams
+    * reply. */
   val MaxDepth = 64
 
-  /** Incremental decode: one reply starting at `from`. Returns the
-    * reply and the index just past it, or None when the buffer does
-    * not yet hold a complete reply (read more bytes and retry — the
-    * TCP-fragmentation contract). Malformed input throws. */
-  def decode(buf: Array[Byte], from: Int = 0): Option[(Reply, Int)] =
-    decodeBounded(buf, from, 0)
-
-  private def decodeBounded(buf: Array[Byte], from: Int, depth: Int): Option[(Reply, Int)] = {
-    require(depth < MaxDepth, s"RESP nesting exceeds $MaxDepth levels")
-    if (from >= buf.length) return None
-    def line(start: Int): Option[(String, Int)] = {
-      var i = start
-      while (i + 1 < buf.length && !(buf(i) == '\r' && buf(i + 1) == '\n')) i += 1
-      if (i + 1 >= buf.length) None
-      else Some((new String(buf, start, i - start, UTF_8), i + 2))
-    }
-    buf(from) match {
-      case '+' => line(from + 1).map { case (s, next) => (SimpleReply(s), next) }
-      case '-' => line(from + 1).map { case (s, next) => (ErrorReply(s), next) }
-      case ':' => line(from + 1).map { case (s, next) => (IntReply(s.toLong), next) }
-      case '$' =>
-        line(from + 1).flatMap { case (lenStr, next) =>
-          val len = lenStr.toInt
-          require(len >= -1, s"malformed bulk length: $len")
-          if (len == -1) Some((BulkReply(None), next))
-          else if (next + len + 2 > buf.length) None // payload + CRLF not yet arrived
-          else {
-            require(buf(next + len) == '\r' && buf(next + len + 1) == '\n',
-              "bulk string not CRLF-terminated")
-            Some((BulkReply(Some(java.util.Arrays.copyOfRange(buf, next, next + len))), next + len + 2))
-          }
-        }
-      case '*' =>
-        line(from + 1).flatMap { case (nStr, next0) =>
-          val n = nStr.toInt
-          require(n >= -1, s"malformed array length: $n")
-          if (n == -1) Some((ArrayReply(None), next0))
-          else {
-            var at = next0
-            val items = Vector.newBuilder[Reply]
-            var i = 0
-            while (i < n) {
-              decodeBounded(buf, at, depth + 1) match {
-                case Some((r, nxt)) => items += r; at = nxt; i += 1
-                case None           => return None // an element is incomplete
-              }
-            }
-            Some((ArrayReply(Some(items.result())), at))
-          }
-        }
-      case b => sys.error(s"unknown RESP type byte: ${b.toChar}")
-    }
+  /** One reply starting at `from`: the reply and the index just past
+    * it, or None when the buffer does not yet hold a complete reply
+    * (read more bytes and retry — the TCP-fragmentation contract).
+    * Malformed input throws IllegalArgumentException. A thin wrapper
+    * over a fresh [[RespReader]] capped at the bytes on hand, so a
+    * length header past the end of `buf` is an incomplete prefix. */
+  def decode(buf: Array[Byte], from: Int = 0): Option[(Reply, Int)] = {
+    val reader = new RespReader(buf.length - from)
+    val (values, fatal) = reader.feed(buf, from, buf.length - from)
+    values.headOption.orElse(
+      fatal.filter(_ != reader.capError).map(m => throw new IllegalArgumentException(m)))
   }
 
   /** Parse one stream entry `[id, [f1, v1, f2, v2, …]]` into the
@@ -183,6 +147,122 @@ object RespCodec {
         case other => sys.error(s"bad XREAD stream block: $other")
       }
     case other => sys.error(s"bad XREAD reply: $other")
+  }
+}
+
+/** The one incremental RESP2 reader: the server's command framer, the
+  * in-process loopback, the client and [[RespCodec.decode]] all parse
+  * through it. Every byte is consumed once — header bytes into a line
+  * buffer, bulk payloads arraycopy'd into arrays allocated only after
+  * the cap check — and open arrays sit on a heap stack bounded by
+  * [[RespCodec.MaxDepth]], so a fragment boundary anywhere costs
+  * nothing and no input can overflow the call stack.
+  *
+  * [[feed]] returns each top-level value the fragment completes, in
+  * order, with the offset just past it, plus an optional FATAL error
+  * (unframeable bytes, or the top-level value in flight passing
+  * `maxBytes`, headers included). Values completed before the error
+  * are still returned; after it the reader stays dead, because an
+  * unframed stream cannot resynchronize. */
+private[streaming] final class RespReader(maxBytes: Int) {
+  import RespCodec._
+
+  /** The fatal error of a value past the cap. */
+  val capError = s"frame exceeds $maxBytes bytes"
+
+  private final class Open(val items: Array[Reply]) { var at = 0 }
+  private val open = new Array[Open](MaxDepth)
+  private var depth = 0
+  private var mode = 0 // 0 type byte, 1 header line, 2 its LF, 3 line done, 4 payload, 5 CR, 6 LF
+  private var kind = 0 // the header's type byte
+  private var line = new Array[Byte](32)
+  private var lineLen = 0
+  private var payload: Array[Byte] = null
+  private var payloadAt = 0
+  private var inFlight = 0L // bytes of the top-level value so far
+  private var fatal: Option[String] = None
+
+  def feed(buf: Array[Byte], off: Int, len: Int): (Seq[(Reply, Int)], Option[String]) = {
+    if (fatal.nonEmpty) return (Vector.empty, fatal)
+    var done = Vector.empty[(Reply, Int)]
+    var i = off
+    val end = off + len
+    try while (i < end) {
+      val from = i
+      var value: Reply = null
+      if (mode == 0) {
+        val b = buf(i); i += 1
+        require(depth < MaxDepth, s"RESP nesting exceeds $MaxDepth levels")
+        require("+-:$*".indexOf(b) >= 0, s"unknown RESP type byte: ${b.toChar}")
+        kind = b; mode = 1
+      }
+      if (mode == 1) { // the line up to its CR, in one copy per fragment
+        val at = i
+        while (i < end && buf(i) != '\r' && buf(i) != '\n') i += 1
+        if (lineLen + i - at > line.length) line = java.util.Arrays.copyOf(line, 2 * (lineLen + i - at))
+        System.arraycopy(buf, at, line, lineLen, i - at)
+        lineLen += i - at
+        if (i < end) { require(buf(i) == '\r', "bare LF in header"); i += 1; mode = 2 }
+      }
+      if (mode == 2 && i < end) { require(buf(i) == '\n', "bare CR in header"); i += 1; mode = 3 }
+      if (mode == 4) { // payload: one arraycopy per fragment
+        val take = math.min(end - i, payload.length - payloadAt)
+        System.arraycopy(buf, i, payload, payloadAt, take)
+        payloadAt += take; i += take
+        if (payloadAt == payload.length) mode = 5
+      }
+      if (mode == 5 && i < end) { require(buf(i) == '\r', "bulk string not CRLF-terminated"); i += 1; mode = 6 }
+      if (mode == 6 && i < end) {
+        require(buf(i) == '\n', "bulk string not CRLF-terminated"); i += 1
+        value = complete(BulkReply(Some(payload))); payload = null
+      }
+      inFlight += i - from
+      if (mode == 3) value = header()
+      if (value != null) { done :+= ((value, i)); inFlight = 0 }
+      else if (inFlight > maxBytes) sys.error(capError)
+    } catch { case e: Exception => fatal = Some(String.valueOf(e.getMessage)) }
+    (done, fatal)
+  }
+
+  /** The value a completed header line makes, handed to [[complete]];
+    * a bulk or array header instead opens its payload or its array. */
+  private def header(): Reply = {
+    mode = 0
+    val text = new String(line, 0, lineLen, UTF_8)
+    lineLen = 0
+    if (kind == '+') return complete(SimpleReply(text))
+    if (kind == '-') return complete(ErrorReply(text))
+    val n = text.toLong
+    if (kind == ':') complete(IntReply(n))
+    else if (kind == '$') {
+      require(n >= -1, s"malformed bulk length: $n")
+      if (n == -1) return complete(BulkReply(None))
+      if (n > maxBytes - inFlight) sys.error(capError)
+      payload = new Array[Byte](n.toInt); payloadAt = 0
+      mode = if (n == 0) 5 else 4
+      null
+    } else {
+      require(n >= -1, s"malformed array length: $n")
+      if (n == -1) return complete(ArrayReply(None))
+      if (n > (maxBytes - inFlight) / 3) sys.error(capError) // an element takes >= 3 bytes
+      if (n == 0) complete(ArrayReply(Some(Vector.empty)))
+      else { open(depth) = new Open(new Array[Reply](n.toInt)); depth += 1; null }
+    }
+  }
+
+  /** Adds a finished value to the innermost open array, closing every
+    * array it fills; returns the top-level value it completes, or null. */
+  private def complete(r: Reply): Reply = {
+    mode = 0
+    var v = r
+    while (depth > 0) {
+      val a = open(depth - 1)
+      a.items(a.at) = v; a.at += 1
+      if (a.at < a.items.length) return null
+      depth -= 1; open(depth) = null
+      v = ArrayReply(Some(Vector.from(scala.collection.immutable.ArraySeq.unsafeWrapArray(a.items))))
+    }
+    v
   }
 }
 

@@ -29,6 +29,18 @@ final class RespLoopback(clock: Clock = SystemClock) {
   /** The log of a stream if it exists — a lookup never creates one. */
   private def existing(stream: String): Option[StreamLog] = synchronized(logs.get(stream))
 
+  /** What a read or delete sees: the stream's log, or for a missing key
+    * one never-written log that nothing adds to. Arguments and ids are
+    * validated exactly as on a real stream, the answers are Redis's for
+    * a missing key (XLEN 0, XRANGE empty, XDEL and XTRIM 0; XINFO STREAM,
+    * below, is the one deviation), and no stream is created — so a
+    * client naming random keys cannot grow [[logs]]. */
+  private val absent = new StreamLog(clock)
+  private def readable(stream: String): StreamLog = existing(stream).getOrElse(absent)
+
+  /** How many streams exist. */
+  private[streaming] def streamCount: Int = synchronized(logs.size)
+
   /** The backing log of a stream — the handoff point to the DSv2
     * source: register it with [[StreamLogRegistry]] and wire-produced
     * entries flow straight into a Structured Streaming query. */
@@ -53,16 +65,29 @@ final class RespLoopback(clock: Clock = SystemClock) {
   private def arity(args: Seq[String], n: Int): Unit = if (args.length < n)
     sys.error(s"wrong number of arguments for '${args.head.toLowerCase}' command")
 
-  /** One request→reply exchange on wire bytes. Decode failures (unknown
-    * type byte, bad lengths, non-bulk array elements) answer a RESP
-    * error like every other protocol fault — never a JVM exception,
-    * which behind a socket would kill the connection handler. */
-  def call(request: Array[Byte]): Array[Byte] =
-    encodeReply(
-      try RespCodec.decode(request) match {
-        case Some((ArrayReply(Some(parts)), _)) => execute(parts.map(_.text))
-        case _ => ErrorReply("ERR malformed command")
-      } catch { case _: Exception => ErrorReply("ERR malformed command") })
+  /** Wire bytes in, wire bytes out, exactly as one connection answers
+    * them: every command in `request` is executed and the replies come
+    * back concatenated, in order. Protocol faults answer RESP errors,
+    * never JVM exceptions; an incomplete trailing command gets no reply. */
+  def call(request: Array[Byte]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    serve(new RespCommandFramer(RespServer.MaxFrameBytes), request, 0, request.length, out)
+    out.toByteArray
+  }
+
+  /** Frame → execute → encode, the one step behind [[call]] and every
+    * [[RespServer]] connection: each command `framer` completes from
+    * the bytes is executed and its reply written to `out`. A framed but
+    * malformed command answers `ERR malformed command`; an unframeable
+    * stream answers its fatal error once and returns false, because the
+    * stream cannot be resynchronized — the connection closes. */
+  private[streaming] def serve(framer: RespCommandFramer, bytes: Array[Byte], off: Int, len: Int,
+      out: java.io.OutputStream): Boolean = {
+    val (commands, fatal) = framer.feed(bytes, off, len)
+    commands.foreach(c => out.write(encodeReply(c.fold(_ => ErrorReply("ERR malformed command"), execute))))
+    fatal.foreach(m => out.write(encodeReply(ErrorReply(m))))
+    fatal.isEmpty
+  }
 
   /** Execute one parsed command. Protocol errors come back as RESP
     * errors, never as exceptions across the wire boundary; messages
@@ -107,7 +132,7 @@ final class RespLoopback(clock: Clock = SystemClock) {
         scala.collection.immutable.ListMap(fields: _*), maxlen, approximate = approx)
       bulk(id)
 
-    case "XLEN" => IntReply(logOf(args(1)).len.toLong)
+    case "XLEN" => IntReply(readable(args(1)).len.toLong)
 
     case "XRANGE" =>
       // XRANGE key start end [COUNT n] — inclusive id range, '-'/'+'
@@ -117,7 +142,7 @@ final class RespLoopback(clock: Clock = SystemClock) {
         (args.length == 6 && args(4).equalsIgnoreCase("COUNT")),
         "expected XRANGE <key> <start> <end> [COUNT <n>]")
       val count = if (args.length == 6) args(5).toInt else Int.MaxValue
-      ArrayReply(Some(logOf(args(1)).range(args(2), args(3), count).toVector.map(entryReply)))
+      ArrayReply(Some(readable(args(1)).range(args(2), args(3), count).toVector.map(entryReply)))
 
     case "XREADGROUP" =>
       // XREADGROUP GROUP g c [COUNT n] [BLOCK ms] STREAMS s (>|0) —
@@ -179,10 +204,9 @@ final class RespLoopback(clock: Clock = SystemClock) {
     case "XCLAIM" =>
       // XCLAIM s g c minIdle id … → full entries of the claimed ids
       arity(args, 6)
-      val log = logOf(args(1))
-      val claimed = groupOf(args(1), args(2))
-        .claim(args.drop(5), args(3), args(4).toLong)
-      ArrayReply(Some(claimed.toVector.map(entryById(log, _))))
+      val g = groupOf(args(1), args(2))
+      val claimed = g.claim(args.drop(5), args(3), args(4).toLong)
+      ArrayReply(Some(claimed.toVector.map(entryById(g.log, _))))
 
     case "XAUTOCLAIM" =>
       // XAUTOCLAIM s g c minIdle start [COUNT n] → [cursor, entries]
@@ -190,13 +214,12 @@ final class RespLoopback(clock: Clock = SystemClock) {
       require(args.length == 6 ||
         (args.length == 8 && args(6).equalsIgnoreCase("COUNT")),
         "expected XAUTOCLAIM <key> <group> <consumer> <min-idle> <start> [COUNT <n>]")
-      val log = logOf(args(1))
       val g = groupOf(args(1), args(2))
       val (cursor, ids) =
         if (args.length == 6) g.autoClaim(args(3), args(4).toLong, args(5))
         else g.autoClaim(args(3), args(4).toLong, args(5), args(7).toInt)
       ArrayReply(Some(Vector(bulk(cursor),
-        ArrayReply(Some(ids.toVector.map(entryById(log, _)))))))
+        ArrayReply(Some(ids.toVector.map(entryById(g.log, _)))))))
 
     case "XGROUP" => args(1).toUpperCase match {
       case "CREATE" =>
@@ -236,8 +259,10 @@ final class RespLoopback(clock: Clock = SystemClock) {
         // along (entries-added, max-deleted-entry-id, first-entry,
         // last-entry — entries encoded like XRANGE rows, nil when the
         // stream is empty) so redis-py's dict parse sees the same keys
-        // against either server.
-        val log = logOf(args(2))
+        // against either server. A missing key answers the fields of an
+        // empty stream without creating one (Redis: ERR no such key), so
+        // S1's unconditional XINFO STREAM (`scaler.py:47`) reads zeros.
+        val log = readable(args(2))
         def entryOrNil(e: Option[StreamMessage]): Reply =
           e.map(entryReply).getOrElse(BulkReply(None))
         ArrayReply(Some(Vector(
@@ -253,7 +278,7 @@ final class RespLoopback(clock: Clock = SystemClock) {
 
     case "XDEL"  =>
       arity(args, 3)
-      IntReply(logOf(args(1)).delete(args.drop(2): _*).toLong)
+      IntReply(readable(args(1)).delete(args.drop(2): _*).toLong)
 
     case "XTRIM" =>
       // XTRIM s MAXLEN [~] n — MAXLEN is the only supported strategy;
@@ -263,7 +288,7 @@ final class RespLoopback(clock: Clock = SystemClock) {
         s"unsupported trim strategy: ${args(2)} (only MAXLEN)")
       require(args.length == 4 || (args.length == 5 && args(3) == "~"),
         "expected XTRIM <key> MAXLEN [~] <n>")
-      IntReply(logOf(args(1)).trim(args.last.toInt).toLong)
+      IntReply(readable(args(1)).trim(args.last.toInt).toLong)
 
     case other => ErrorReply(s"ERR unknown command: $other")
   }

@@ -9,12 +9,18 @@ import RespCodec._
 /** A real localhost TCP endpoint around [[RespLoopback]] — the last
   * piece of the reference's defining trait: a client speaking the wire
   * protocol to a server over a socket (`redis_streams/common.py:13-18`
-  * constructs exactly such a connection). [[RespCodec]] was built
-  * transport-agnostic and incremental for precisely this moment: the
-  * per-connection loop below feeds it raw TCP fragments and it yields
-  * complete commands as they frame up, so pipelining (several commands
+  * constructs exactly such a connection).
+  *
+  * One RESP parser serves both directions: [[RespReader]] (RespCodec.scala)
+  * consumes each byte once, whatever the fragmentation, and each user
+  * adds only its own rule — [[RespCommandFramer]] the inbound shape
+  * check (an array of bulk strings) and the server's 8 MiB command cap,
+  * [[RespClient]] a reply queue and its 512 MiB reply cap. The
+  * frame → execute → encode step is [[RespLoopback.serve]], shared with
+  * the in-process [[RespLoopback.call]], so a socket and an in-process
+  * call read commands by one grammar, and pipelining (several commands
   * in one segment) and fragmentation (one command across many
-  * segments) both fall out of the same decode loop with no extra code.
+  * segments) fall out of the same loop with no extra code.
   *
   * Concurrency: one daemon acceptor thread, one daemon handler thread
   * per connection. All command execution funnels into
@@ -82,19 +88,15 @@ final class RespServer(
   acceptor.setDaemon(true)
   acceptor.start()
 
-  /** One connection's lifetime: feed each TCP fragment to the
-    * incremental [[RespCommandFramer]] — every byte is consumed ONCE
-    * (headers into a line buffer, payloads arraycopy'd straight into
-    * their preallocated frames), so a 1 MiB command trickled one byte
-    * per segment costs O(n), not the O(n²) of re-append/re-decode —
-    * then execute and reply to each completed command in order
-    * (pipelining falls out of the loop for free).
-    *
-    * The in-flight command is HARD-CAPPED at [[RespServer.MaxFrameBytes]]
+  /** One connection's lifetime: each TCP fragment goes to the
+    * connection's [[RespCommandFramer]] through [[RespLoopback.serve]],
+    * which answers every command it completes, in order (pipelining
+    * falls out of the loop for free). The framer reads each byte once,
+    * so a 1 MiB command trickled one byte per segment costs O(n), and
+    * caps the in-flight command at [[RespServer.MaxFrameBytes]]
     * (Redis's proto-max-bulk-len analog): a client streaming a huge
-    * length header and trickling elements exhausts its cap, answers one
-    * ERR and loses the connection — never grows the heap until OOM
-    * (the same remote-crash class the decoder's nesting bound closes). */
+    * length header answers one ERR and loses the connection — it never
+    * grows the heap until OOM. */
   private def handle(sock: Socket): Unit = {
     val in = sock.getInputStream
     val out = new BufferedOutputStream(sock.getOutputStream)
@@ -104,21 +106,9 @@ final class RespServer(
       var open = true
       while (open) {
         val n = in.read(chunk)
-        if (n < 0) open = false
-        else {
-          val (commands, fatal) = framer.feed(chunk, 0, n)
-          commands.foreach {
-            case Right(args) =>
-              out.write(encodeReply(loopback.execute(args))) // execute never throws
-            case Left(_) => // framed but malformed: ERR, connection lives
-              out.write(encodeReply(ErrorReply("ERR malformed command")))
-          }
-          fatal.foreach { msg => // unframeable/oversized: cannot resync, drop it
-            out.write(encodeReply(ErrorReply(msg)))
-            open = false
-          }
-          out.flush()
-        }
+        // unframeable/oversized: answered, cannot resync — drop it
+        open = n >= 0 && loopback.serve(framer, chunk, 0, n, out)
+        out.flush()
       }
     } catch { case _: Exception => () } // peer reset — just clean up
     finally {
@@ -150,172 +140,78 @@ object RespServer {
   val DefaultMaxClients: Int = 64
 }
 
-/** Incremental framer for INBOUND RESP commands — the client→server
-  * half of the protocol, which is strictly `*N` arrays of `$len` bulk
-  * strings (the multibulk grammar; Redis itself answers "Protocol
-  * error: expected '$'" to anything else inbound, a stricter rule than
-  * the five-type REPLY grammar [[RespCodec.decode]] accepts). The
-  * restriction is what buys linearity: every byte is consumed exactly
-  * once — header bytes into a short line buffer, payload bytes
-  * arraycopy'd straight into the preallocated element — so state
-  * between fragments is O(current command), never re-scanned.
+/** The inbound shape check over [[RespReader]]: a command is an array
+  * of bulk strings (the multibulk grammar; Redis itself answers
+  * "Protocol error: expected '$'" to anything else inbound, a stricter
+  * rule than the five-type reply grammar the reader accepts).
   *
   * [[feed]] returns the commands completed by the fragment, each
   * `Right(args)` (well-framed) or `Left(reason)` (framed but
   * semantically malformed — null/empty array, null bulk element: the
   * caller answers ERR and keeps the connection), plus an optional
-  * FATAL error (unframeable stream or frame cap breach: the caller
-  * answers once and closes — resynchronizing an unframed stream is
-  * impossible). After a fatal the framer stays dead by design.
+  * FATAL error: `ERR protocol error` for an unframeable stream, a
+  * non-array command or a non-bulk element, and `ERR frame exceeds N
+  * bytes` for a command past the cap. The caller answers it once and
+  * closes; after a fatal the framer stays dead by design.
   */
 private[streaming] final class RespCommandFramer(maxFrameBytes: Int) {
-  import java.nio.charset.StandardCharsets.UTF_8
-
-  // ---- per-command state, reset by emit() ----
-  private var elemsLeft = 0                   // bulk elements still expected
-  private var badReason: String = null        // framed-but-malformed marker
-  private var parts = Vector.newBuilder[Array[Byte]]
-  private var commandBytes = 0L               // cap accounting, headers included
-
-  // ---- current header/payload cursor ----
-  private var mode = 0                        // 0=array type, 1=array len, 2=elem type, 3=bulk len, 4=payload, 5=payload CRLF
-  private val line = new java.lang.StringBuilder
-  private var sawCr = false
-  private var payload: Array[Byte] = null
-  private var payloadAt = 0
-  private var crlfAt = 0
+  private val reader = new RespReader(maxFrameBytes)
   private var dead = false
-
-  private def fail(msg: String): Nothing = { dead = true; sys.error(msg) }
-
-  /** One header-line byte; true once the CRLF completes the line.
-    * Accepts only the characters a length can contain — anything else
-    * is unframeable right away instead of at the parse. */
-  private def lineByte(b: Byte): Boolean = b match {
-    case '\r' =>
-      if (sawCr) fail("bare CR in length header")
-      sawCr = true; false
-    case '\n' =>
-      if (!sawCr) fail("bare LF in length header")
-      sawCr = false; true
-    case d if !sawCr && ((d >= '0' && d <= '9') || d == '-') =>
-      line.append(d.toChar); false
-    case other => fail(s"unexpected byte in length header: ${other.toChar}")
-  }
-
-  private def takeLine(): Long = {
-    val v = try java.lang.Long.parseLong(line.toString)
-            catch { case _: Exception => fail(s"malformed length header: $line") }
-    line.setLength(0)
-    v
-  }
 
   def feed(chunk: Array[Byte], off: Int, len: Int): (Seq[Either[String, Seq[String]]], Option[String]) = {
     if (dead) return (Seq.empty, Some("ERR protocol error"))
-    val done = Seq.newBuilder[Either[String, Seq[String]]]
-
-    def emit(): Unit = {
-      done += (if (badReason != null) Left(badReason)
-               else Right(parts.result().map(new String(_, UTF_8)).toSeq))
-      elemsLeft = 0; badReason = null; parts = Vector.newBuilder[Array[Byte]]
-      commandBytes = 0L; mode = 0
-    }
-
-    var i = off
-    val end = off + len
-    try {
-      while (i < end) {
-        // Headers advance byte-wise (they are a dozen bytes); payload
-        // advances in one arraycopy per fragment below.
-        if (mode == 4) {
-          val take = math.min(end - i, payload.length - payloadAt)
-          System.arraycopy(chunk, i, payload, payloadAt, take)
-          payloadAt += take; i += take; commandBytes += take
-          if (payloadAt == payload.length) { mode = 5; crlfAt = 0 }
-        } else {
-          val b = chunk(i); i += 1; commandBytes += 1
-          mode match {
-            case 0 => // start of a command: multibulk array type byte
-              if (b != '*') fail(s"expected '*', got '${b.toChar}'")
-              mode = 1
-            case 1 => // array count line
-              if (lineByte(b)) {
-                val n = takeLine()
-                if (n > Int.MaxValue) fail(s"unreasonable array length: $n")
-                if (n <= 0) { badReason = s"empty command array ($n)"; emit() }
-                else { elemsLeft = n.toInt; mode = 2 }
-              }
-            case 2 => // element type byte: inbound grammar demands '$'
-              if (b != '$') fail(s"expected '$$', got '${b.toChar}'")
-              mode = 3
-            case 3 => // bulk length line
-              if (lineByte(b)) {
-                val n = takeLine()
-                if (n < -1) fail(s"malformed bulk length: $n")
-                if (commandBytes + math.max(n, 0) > maxFrameBytes)
-                  fail(s"__CAP__ frame exceeds $maxFrameBytes bytes")
-                if (n == -1) { // null bulk element: framed, not a valid arg
-                  badReason = "null bulk in command"
-                  elemsLeft -= 1
-                  if (elemsLeft == 0) emit() else mode = 2
-                } else if (n == 0) { payload = new Array[Byte](0); payloadAt = 0; mode = 5; crlfAt = 0 }
-                else { payload = new Array[Byte](n.toInt); payloadAt = 0; mode = 4 }
-              }
-            case 5 => // payload's trailing CRLF
-              if (crlfAt == 0) {
-                if (b != '\r') fail("bulk payload not CRLF-terminated")
-                crlfAt = 1
-              } else {
-                if (b != '\n') fail("bulk payload not CRLF-terminated")
-                parts += payload; payload = null
-                elemsLeft -= 1
-                if (elemsLeft == 0) emit() else mode = 2
-              }
-            case other => fail(s"framer state corrupted: $other")
-          }
-        }
-        if (commandBytes > maxFrameBytes) fail(s"__CAP__ frame exceeds $maxFrameBytes bytes")
-      }
-      (done.result(), None)
-    } catch {
-      case e: Exception =>
-        dead = true
-        val m = String.valueOf(e.getMessage)
-        val fatal = if (m.contains("__CAP__")) m.replace("__CAP__ ", "ERR ")
-                    else "ERR protocol error"
-        (done.result(), Some(fatal))
-    }
+    val (values, fatal) = reader.feed(chunk, off, len)
+    val commands = values.iterator.map(_._1).map {
+      case ArrayReply(None) => Some(Left("null command array"))
+      case ArrayReply(Some(args)) if args.isEmpty => Some(Left("empty command array"))
+      case ArrayReply(Some(args)) if args.forall(_.isInstanceOf[BulkReply]) =>
+        Some(if (args.contains(BulkReply(None))) Left("null bulk in command") else Right(args.map(_.text)))
+      case _ => None // not a command: unframeable from here on
+    }.takeWhile(_.isDefined).flatten.toVector
+    val error =
+      if (commands.length < values.length) Some("ERR protocol error")
+      else fatal.map(m => if (m == reader.capError) s"ERR $m" else "ERR protocol error")
+    dead = error.isDefined
+    (commands, error)
   }
 }
 
 /** Minimal blocking RESP client — the role redis-py plays for the
   * reference (`common.py:13-18`): encode a command array, write it to
-  * the socket, incrementally decode one reply (re-reading while the
-  * buffer holds only a fragment). Test-path simplicity over pooling —
-  * one socket, one in-flight command. */
+  * the socket, read replies through one [[RespReader]] that consumes
+  * each byte once, so a reply of n bytes costs O(n) however the socket
+  * fragments it. The reply in flight is capped at
+  * [[RespClient.MaxReplyBytes]], so a hostile server cannot run the
+  * client out of memory. Test-path simplicity over pooling — one
+  * socket, one in-flight command. */
 final class RespClient(host: String, port: Int) extends AutoCloseable {
   private val sock = new Socket(host, port)
   private val in = sock.getInputStream
   private val out = sock.getOutputStream
-  private var buf = Array.emptyByteArray
+  private val reader = new RespReader(RespClient.MaxReplyBytes)
+  private val chunk = new Array[Byte](65536)
+  private val replies = mutable.Queue.empty[Reply]
+  private var fatal: Option[String] = None
+
+  private def take(bytes: Array[Byte], n: Int): Unit = {
+    val (values, f) = reader.feed(bytes, 0, n)
+    values.foreach(v => replies += v._1)
+    fatal = f
+  }
 
   /** Raw bytes out — lets tests exercise deliberate fragmentation and
     * pipelining below the command abstraction. */
   def send(bytes: Array[Byte]): Unit = { out.write(bytes); out.flush() }
 
-  /** One complete reply off the wire, blocking across fragments. */
+  /** The next reply: a queued one, else read until one completes. */
   def readReply(): Reply = {
-    var decoded = RespCodec.decode(buf)
-    val chunk = new Array[Byte](8192)
-    while (decoded.isEmpty) {
+    while (replies.isEmpty) {
+      fatal.foreach(m => throw new IllegalArgumentException(s"bad reply: $m"))
       val n = in.read(chunk)
       require(n >= 0, "connection closed mid-reply")
-      buf = buf ++ java.util.Arrays.copyOfRange(chunk, 0, n)
-      decoded = RespCodec.decode(buf)
+      take(chunk, n)
     }
-    val (reply, next) = decoded.get
-    buf = java.util.Arrays.copyOfRange(buf, next, buf.length)
-    reply
+    replies.dequeue()
   }
 
   /** One request→reply exchange. */
@@ -326,9 +222,9 @@ final class RespClient(host: String, port: Int) extends AutoCloseable {
 
   /** Whether the peer has closed: probes with one read. A byte that
     * arrives instead of EOF (an unread pipelined reply's first byte)
-    * is APPENDED to the decode buffer, not swallowed — the next
-    * readReply stays frame-aligned — and the probe timeout is restored
-    * afterwards so a later blocking readReply doesn't inherit a 2 s
+    * is fed to the reader, not swallowed — the next readReply stays
+    * frame-aligned — and the probe timeout is restored afterwards so a
+    * later blocking readReply doesn't inherit a 2 s
     * SocketTimeoutException. Only a probe TIMEOUT means "still open";
     * any other I/O failure (connection reset surfaces as a
     * SocketException, not a -1 read) is a dead connection. */
@@ -337,7 +233,7 @@ final class RespClient(host: String, port: Int) extends AutoCloseable {
     try {
       sock.setSoTimeout(2000)
       val b = in.read()
-      if (b >= 0) { buf = buf :+ b.toByte; false } else true
+      if (b >= 0) { take(Array(b.toByte), 1); false } else true
     }
     catch {
       case _: java.net.SocketTimeoutException => false
@@ -347,4 +243,11 @@ final class RespClient(host: String, port: Int) extends AutoCloseable {
   }
 
   override def close(): Unit = try sock.close() catch { case _: Exception => () }
+}
+
+object RespClient {
+  /** Hard cap on one in-flight reply's bytes: Redis's own
+    * proto-max-bulk-len, 512 MiB. The server's 8 MiB command cap cannot
+    * serve here — a 100k-entry XRANGE reply is 10-20 MB. */
+  val MaxReplyBytes: Int = 512 * 1024 * 1024
 }

@@ -153,4 +153,35 @@ class RespCodecSpec extends AnyFunSuite {
     val Some((r, _)) = decode(entry): @unchecked
     assert(parseEntry(r) == StreamMessage("42-0", Map("user" -> "alice", "act" -> "login")))
   }
+
+  test("a 1 MiB XRANGE-shaped reply fed one byte at a time decodes in linear time") {
+    // 10k entries of ~105 bytes: the reply-side twin of the framer's
+    // 1 MiB one-byte-per-feed spec in RespServerSpec
+    val reply = ArrayReply(Some(Vector.tabulate(10000) { i =>
+      ArrayReply(Some(Vector(bulk(s"1700000000000-$i"), ArrayReply(Some(Vector(
+        bulk("event_id"), bulk(i.toString), bulk("payload"), bulk("x" * 32)))))))
+    }))
+    val wire = encodeReply(reply)
+    assert(wire.length > 1000000 && wire.length < 1200000, s"${wire.length} bytes")
+    def run(): Double = {
+      val reader = new RespReader(RespClient.MaxReplyBytes)
+      var got = Vector.empty[(Reply, Int)]
+      val t0 = System.nanoTime()
+      var i = 0
+      while (i < wire.length) { // worst-case fragmentation: 1 byte per feed
+        val (done, fatal) = reader.feed(wire, i, 1)
+        if (fatal.nonEmpty) fail(s"unexpected fatal: $fatal")
+        got ++= done
+        i += 1
+      }
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(got.map(_._2) == Vector(wire.length))
+      assert(encodeReply(got.head._1).toSeq == wire.toSeq)
+      ms
+    }
+    (1 to 3).foreach(_ => run())
+    val elapsedMs = (1 to 5).map(_ => run()).min // min of 5 after 3 warm-ups
+    // re-appending and re-decoding from byte 0 is O(n^2): ~10^12 byte ops
+    assert(elapsedMs < 10000, f"1 MiB reply one byte at a time took $elapsedMs%.0f ms - not linear")
+  }
 }

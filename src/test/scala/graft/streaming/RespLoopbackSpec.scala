@@ -387,4 +387,48 @@ class RespLoopbackSpec extends AnyFunSuite {
     }
     assert(xrange("9-0", "9223372036854775807-9223372036854775807") == Seq(id))
   }
+
+  test("call answers every command of a request, by the socket's grammar") {
+    val lb = new RespLoopback(new ManualClock(10))
+    val out = lb.call(encodeStrings(StreamCommands.xadd("p", Seq("a" -> "1"))) ++
+      encodeStrings(StreamCommands.xadd("p", Seq("b" -> "2"))))
+    val Some((id1, n1)) = decode(out): @unchecked
+    val Some((id2, n2)) = decode(out, n1): @unchecked
+    assert(n2 == out.length, "the two replies must come back to back, nothing after")
+    assert(MsgId.lt(id1.text, id2.text))
+    assert(wire(lb, StreamCommands.xlen("p")) == IntReply(2))
+    // simple strings are not command arguments: the socket answers a
+    // protocol error, so the in-process call does too
+    assert(lb.call("*2\r\n+XLEN\r\n+p\r\n".getBytes("UTF-8")).toSeq ==
+      encodeReply(ErrorReply("ERR protocol error")).toSeq)
+  }
+
+  test("reads, deletes and claims on a missing key answer as Redis does and create no stream") {
+    val lb = new RespLoopback(new ManualClock(10))
+    wire(lb, StreamCommands.xadd("s", Seq("k" -> "v")))
+    val nogroup = ErrorReply("NOGROUP No such consumer group 'g' for key name 'ghost'")
+    Seq(
+      StreamCommands.xlen("ghost") -> IntReply(0),
+      StreamCommands.xrange("ghost") -> ArrayReply(Some(Vector())),
+      StreamCommands.xdel("ghost", Seq("1-0")) -> IntReply(0),
+      StreamCommands.xtrimMaxlen("ghost", 0, approximate = false) -> IntReply(0),
+      StreamCommands.xclaim("ghost", "g", "c", 0, Seq("1-0")) -> nogroup,
+      StreamCommands.xautoclaim("ghost", "g", "c", 0, "0-0", 10) -> nogroup).foreach {
+      case (cmd, want) =>
+        assert(lb.execute(cmd) == want, s"$cmd")
+        assert(lb.streamCount == 1, s"$cmd created a stream")
+    }
+    // XINFO STREAM answers an empty stream's fields without making one
+    val ArrayReply(Some(kv)) = wire(lb, StreamCommands.xinfoStream("ghost")): @unchecked
+    assert(kv(0).text == "length" && kv(1) == IntReply(0))
+    assert(lb.streamCount == 1, "XINFO STREAM created a stream")
+    // argument and id validation still run first, with the usual errors
+    assert(lb.execute(Seq("XRANGE", "ghost", "5--3", "+")) ==
+      ErrorReply("ERR Invalid stream ID specified as stream command argument"))
+    assert(lb.execute(Seq("XDEL", "ghost", "5")) ==
+      ErrorReply("ERR Invalid stream ID specified as stream command argument"))
+    assert(lb.execute(StreamCommands.xtrimMaxlen("ghost", -1, approximate = false)) ==
+      ErrorReply("ERR requirement failed: MAXLEN argument must be >= 0"))
+    assert(lb.streamCount == 1)
+  }
 }

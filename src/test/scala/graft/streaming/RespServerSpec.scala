@@ -286,4 +286,46 @@ class RespServerSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("a reply past MaxReplyBytes fails readReply with the cap error, its payload never allocated") {
+    // a hostile server: one 2 GiB bulk header, then it hangs up
+    val hostile = new java.net.ServerSocket(0, 1, java.net.InetAddress.getLoopbackAddress)
+    val peer = new Thread(() => {
+      val s = hostile.accept()
+      try { s.getOutputStream.write("$2147483647\r\n".getBytes("UTF-8")); s.getOutputStream.flush() }
+      finally s.close()
+    })
+    peer.start()
+    val client = new RespClient(hostile.getInetAddress.getHostAddress, hostile.getLocalPort)
+    try {
+      val e = intercept[IllegalArgumentException](client.readReply())
+      assert(e.getMessage.contains(s"frame exceeds ${RespClient.MaxReplyBytes} bytes"), e.getMessage)
+    } finally { client.close(); peer.join(5000); hostile.close() }
+  }
+
+  test("a client XRANGE of 100k entries costs at most 2x the server's execute + encode") {
+    withServer { (server, client) =>
+      // events-shaped entries (FIXTURES.md), as the backlog probe pulls them
+      val log = server.loopback.streamLog("big")
+      val types = Seq("view", "click", "purchase", "share")
+      (0 until 100000).foreach { i =>
+        log.add(scala.collection.immutable.ListMap("event_id" -> i.toString,
+          "ts" -> (1700000000000L + i * 37L).toString, "user_id" -> (i * 7919 % 5000).toString,
+          "event_type" -> types(i % 4), "value" -> f"${i % 997 * 0.37}%.2f",
+          "props" -> s"""{"k": ${i % 10}}"""))
+      }
+      val cmd = StreamCommands.xrange("big")
+      def minMs(f: => Unit): Double = { // min of 5 after 3 warm-ups
+        (1 to 3).foreach(_ => f)
+        (1 to 5).map { _ => val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e6 }.min
+      }
+      val serverMs = minMs(encodeReply(server.loopback.execute(cmd)))
+      val clientMs = minMs(client.call(cmd) match {
+        case ArrayReply(Some(entries)) => assert(entries.length == 100000)
+        case other                     => fail(s"bad XRANGE reply: ${other.getClass}")
+      })
+      assert(clientMs <= 2 * serverMs,
+        f"client XRANGE $clientMs%.0f ms vs server execute + encode $serverMs%.0f ms")
+    }
+  }
 }
