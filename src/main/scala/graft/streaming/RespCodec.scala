@@ -168,7 +168,7 @@ private[streaming] final class RespReader(maxBytes: Int) {
   import RespCodec._
 
   /** The fatal error of a value past the cap. */
-  val capError = s"frame exceeds $maxBytes bytes"
+  def capError: String = s"frame exceeds $maxBytes bytes"
 
   private final class Open(val items: Array[Reply]) { var at = 0 }
   private val open = new Array[Open](MaxDepth)
@@ -260,7 +260,7 @@ private[streaming] final class RespReader(maxBytes: Int) {
       a.items(a.at) = v; a.at += 1
       if (a.at < a.items.length) return null
       depth -= 1; open(depth) = null
-      v = ArrayReply(Some(Vector.from(scala.collection.immutable.ArraySeq.unsafeWrapArray(a.items))))
+      v = ArrayReply(Some(a.items.toVector))
     }
     v
   }

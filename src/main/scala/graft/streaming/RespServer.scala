@@ -106,7 +106,7 @@ final class RespServer(
       var open = true
       while (open) {
         val n = in.read(chunk)
-        // unframeable/oversized: answered, cannot resync — drop it
+        // false after a fatal reply: an unframed stream cannot resync
         open = n >= 0 && loopback.serve(framer, chunk, 0, n, out)
         out.flush()
       }
