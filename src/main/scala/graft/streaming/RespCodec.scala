@@ -110,12 +110,12 @@ object RespCodec {
     * (read more bytes and retry — the TCP-fragmentation contract).
     * Malformed input throws IllegalArgumentException. A thin wrapper
     * over a fresh [[RespReader]] capped at the bytes on hand, so a
-    * length header past the end of `buf` is an incomplete prefix. */
+    * length header past the end of `buf` is an incomplete prefix; it
+    * reads no byte past the first reply. */
   def decode(buf: Array[Byte], from: Int = 0): Option[(Reply, Int)] = {
     val reader = new RespReader(buf.length - from)
-    val (values, fatal) = reader.feed(buf, from, buf.length - from)
-    values.headOption.orElse(
-      fatal.filter(_ != reader.capError).map(m => throw new IllegalArgumentException(m)))
+    try Option(reader.next(buf, from, buf.length))
+    catch { case e: RuntimeException if e.getMessage == reader.capError => None }
   }
 
   /** Parse one stream entry `[id, [f1, v1, f2, v2, …]]` into the
@@ -156,7 +156,15 @@ object RespCodec {
   * buffer, bulk payloads arraycopy'd into arrays allocated only after
   * the cap check — and open arrays sit on a heap stack bounded by
   * [[RespCodec.MaxDepth]], so a fragment boundary anywhere costs
-  * nothing and no input can overflow the call stack.
+  * nothing and no input can overflow the call stack. An open array's
+  * element storage grows with the elements that arrive, never from the
+  * count in its header, so memory follows the bytes received: a short
+  * `*<huge>` header allocates nothing.
+  *
+  * With `commands` set the reader takes only the inbound grammar, an
+  * array of bulk strings (Redis answers "Protocol error: expected '$'"
+  * to anything else): any other type byte is fatal as it arrives, so
+  * a command in flight never holds a nested array or a reply type.
   *
   * [[feed]] returns each top-level value the fragment completes, in
   * order, with the offset just past it, plus an optional FATAL error
@@ -164,13 +172,16 @@ object RespCodec {
   * `maxBytes`, headers included). Values completed before the error
   * are still returned; after it the reader stays dead, because an
   * unframed stream cannot resynchronize. */
-private[streaming] final class RespReader(maxBytes: Int) {
+private[streaming] final class RespReader(maxBytes: Int, commands: Boolean = false) {
   import RespCodec._
 
   /** The fatal error of a value past the cap. */
   def capError: String = s"frame exceeds $maxBytes bytes"
 
-  private final class Open(val items: Array[Reply]) { var at = 0 }
+  private final class Open(val size: Int) {
+    var items = new Array[Reply](math.min(size, 16))
+    var at = 0
+  }
   private val open = new Array[Open](MaxDepth)
   private var depth = 0
   private var mode = 0 // 0 type byte, 1 header line, 2 its LF, 3 line done, 4 payload, 5 CR, 6 LF
@@ -184,16 +195,28 @@ private[streaming] final class RespReader(maxBytes: Int) {
 
   def feed(buf: Array[Byte], off: Int, len: Int): (Seq[(Reply, Int)], Option[String]) = {
     if (fatal.nonEmpty) return (Vector.empty, fatal)
-    var done = Vector.empty[(Reply, Int)]
-    var i = off
-    val end = off + len
-    try while (i < end) {
-      val from = i
-      var value: Reply = null
+    val done = Vector.newBuilder[(Reply, Int)]
+    try {
+      var value = next(buf, off, off + len)
+      while (value != null) { done += value; value = next(buf, value._2, off + len) }
+    } catch { case e: Exception => fatal = Some(String.valueOf(e.getMessage)) }
+    (done.result(), fatal)
+  }
+
+  /** Reads `buf` from `from` until one top-level value completes — it
+    * comes back with the offset just past it — or up to `end` (null).
+    * Malformed input throws IllegalArgumentException; a value past the
+    * cap throws a RuntimeException carrying [[capError]]. */
+  private[streaming] def next(buf: Array[Byte], from: Int, end: Int): (Reply, Int) = {
+    var i = from
+    var value: Reply = null
+    while (i < end && value == null) {
+      val start = i
       if (mode == 0) {
         val b = buf(i); i += 1
         require(depth < MaxDepth, s"RESP nesting exceeds $MaxDepth levels")
-        require("+-:$*".indexOf(b) >= 0, s"unknown RESP type byte: ${b.toChar}")
+        val types = if (!commands) "+-:$*" else if (depth == 0) "*" else "$"
+        require(types.indexOf(b) >= 0, s"unexpected RESP type byte: ${b.toChar}")
         kind = b; mode = 1
       }
       if (mode == 1) { // the line up to its CR, in one copy per fragment
@@ -216,12 +239,12 @@ private[streaming] final class RespReader(maxBytes: Int) {
         require(buf(i) == '\n', "bulk string not CRLF-terminated"); i += 1
         value = complete(BulkReply(Some(payload))); payload = null
       }
-      inFlight += i - from
+      inFlight += i - start
       if (mode == 3) value = header()
-      if (value != null) { done :+= ((value, i)); inFlight = 0 }
+      if (value != null) inFlight = 0
       else if (inFlight > maxBytes) sys.error(capError)
-    } catch { case e: Exception => fatal = Some(String.valueOf(e.getMessage)) }
-    (done, fatal)
+    }
+    if (value == null) null else (value, i)
   }
 
   /** The value a completed header line makes, handed to [[complete]];
@@ -246,7 +269,7 @@ private[streaming] final class RespReader(maxBytes: Int) {
       if (n == -1) return complete(ArrayReply(None))
       if (n > (maxBytes - inFlight) / 3) sys.error(capError) // an element takes >= 3 bytes
       if (n == 0) complete(ArrayReply(Some(Vector.empty)))
-      else { open(depth) = new Open(new Array[Reply](n.toInt)); depth += 1; null }
+      else { open(depth) = new Open(n.toInt); depth += 1; null }
     }
   }
 
@@ -257,8 +280,9 @@ private[streaming] final class RespReader(maxBytes: Int) {
     var v = r
     while (depth > 0) {
       val a = open(depth - 1)
+      if (a.at == a.items.length) a.items = java.util.Arrays.copyOf(a.items, math.min(a.size, 2 * a.at))
       a.items(a.at) = v; a.at += 1
-      if (a.at < a.items.length) return null
+      if (a.at < a.size) return null
       depth -= 1; open(depth) = null
       v = ArrayReply(Some(a.items.toVector))
     }

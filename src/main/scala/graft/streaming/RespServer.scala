@@ -142,37 +142,31 @@ object RespServer {
 
 /** The inbound shape check over [[RespReader]]: a command is an array
   * of bulk strings (the multibulk grammar; Redis itself answers
-  * "Protocol error: expected '$'" to anything else inbound, a stricter
-  * rule than the five-type reply grammar the reader accepts).
+  * "Protocol error: expected '$'" to anything else). The reader runs
+  * in its `commands` grammar, so a non-array command or a non-bulk
+  * element is fatal at its first byte and never collected.
   *
   * [[feed]] returns the commands completed by the fragment, each
   * `Right(args)` (well-framed) or `Left(reason)` (framed but
   * semantically malformed — null/empty array, null bulk element: the
   * caller answers ERR and keeps the connection), plus an optional
-  * FATAL error: `ERR protocol error` for an unframeable stream, a
-  * non-array command or a non-bulk element, and `ERR frame exceeds N
-  * bytes` for a command past the cap. The caller answers it once and
-  * closes; after a fatal the framer stays dead by design.
+  * FATAL error: `ERR protocol error` for an unframeable stream, and
+  * `ERR frame exceeds N bytes` for a command past the cap. The caller
+  * answers it once and closes; after a fatal the framer stays dead by
+  * design.
   */
 private[streaming] final class RespCommandFramer(maxFrameBytes: Int) {
-  private val reader = new RespReader(maxFrameBytes)
-  private var dead = false
+  private val reader = new RespReader(maxFrameBytes, commands = true)
 
   def feed(chunk: Array[Byte], off: Int, len: Int): (Seq[Either[String, Seq[String]]], Option[String]) = {
-    if (dead) return (Seq.empty, Some("ERR protocol error"))
     val (values, fatal) = reader.feed(chunk, off, len)
-    val commands = values.iterator.map(_._1).map {
-      case ArrayReply(None) => Some(Left("null command array"))
-      case ArrayReply(Some(args)) if args.isEmpty => Some(Left("empty command array"))
-      case ArrayReply(Some(args)) if args.forall(_.isInstanceOf[BulkReply]) =>
-        Some(if (args.contains(BulkReply(None))) Left("null bulk in command") else Right(args.map(_.text)))
-      case _ => None // not a command: unframeable from here on
-    }.takeWhile(_.isDefined).flatten.toVector
-    val error =
-      if (commands.length < values.length) Some("ERR protocol error")
-      else fatal.map(m => if (m == reader.capError) s"ERR $m" else "ERR protocol error")
-    dead = error.isDefined
-    (commands, error)
+    val commands = values.map(_._1 match {
+      case ArrayReply(Some(args)) if args.isEmpty => Left("empty command array")
+      case ArrayReply(Some(args)) if args.contains(BulkReply(None)) => Left("null bulk in command")
+      case ArrayReply(Some(args)) => Right(args.map(_.text))
+      case _ => Left("null command array")
+    })
+    (commands, fatal.map(m => if (m == reader.capError) s"ERR $m" else "ERR protocol error"))
   }
 }
 
@@ -181,9 +175,10 @@ private[streaming] final class RespCommandFramer(maxFrameBytes: Int) {
   * the socket, read replies through one [[RespReader]] that consumes
   * each byte once, so a reply of n bytes costs O(n) however the socket
   * fragments it. The reply in flight is capped at
-  * [[RespClient.MaxReplyBytes]], so a hostile server cannot run the
-  * client out of memory. Test-path simplicity over pooling — one
-  * socket, one in-flight command. */
+  * [[RespClient.MaxReplyBytes]], and the reader allocates for bytes
+  * received, never for a length header alone, so a hostile server
+  * cannot make the client allocate more than it sends. Test-path
+  * simplicity over pooling — one socket, one in-flight command. */
 final class RespClient(host: String, port: Int) extends AutoCloseable {
   private val sock = new Socket(host, port)
   private val in = sock.getInputStream

@@ -24,6 +24,29 @@ class RespServerSpec extends AnyFunSuite {
     case other         => other
   }
 
+  /** Bytes the calling thread allocates while running `f`. */
+  private def allocatedBy(f: => Unit): Long = {
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val id = Thread.currentThread.getId
+    val before = mx.getThreadAllocatedBytes(id)
+    f
+    mx.getThreadAllocatedBytes(id) - before
+  }
+
+  /** A hostile server: answers one connection with `bytes`, hangs up. */
+  private def withHostile(bytes: String)(f: RespClient => Unit): Unit = {
+    val hostile = new java.net.ServerSocket(0, 1, java.net.InetAddress.getLoopbackAddress)
+    val peer = new Thread(() => {
+      val s = hostile.accept()
+      try { s.getOutputStream.write(bytes.getBytes("UTF-8")); s.getOutputStream.flush() }
+      finally s.close()
+    })
+    peer.start()
+    val client = new RespClient(hostile.getInetAddress.getHostAddress, hostile.getLocalPort)
+    try f(client) finally { client.close(); peer.join(5000); hostile.close() }
+  }
+
   test("produce -> consume -> ack over a real TCP socket (test_producer.py:31-48 flow)") {
     withServer { (_, client) =>
       // producer.add({"source": ..., "value": "42"}) → id with '-'
@@ -289,18 +312,10 @@ class RespServerSpec extends AnyFunSuite {
 
   test("a reply past MaxReplyBytes fails readReply with the cap error, its payload never allocated") {
     // a hostile server: one 2 GiB bulk header, then it hangs up
-    val hostile = new java.net.ServerSocket(0, 1, java.net.InetAddress.getLoopbackAddress)
-    val peer = new Thread(() => {
-      val s = hostile.accept()
-      try { s.getOutputStream.write("$2147483647\r\n".getBytes("UTF-8")); s.getOutputStream.flush() }
-      finally s.close()
-    })
-    peer.start()
-    val client = new RespClient(hostile.getInetAddress.getHostAddress, hostile.getLocalPort)
-    try {
+    withHostile("$2147483647\r\n") { client =>
       val e = intercept[IllegalArgumentException](client.readReply())
       assert(e.getMessage.contains(s"frame exceeds ${RespClient.MaxReplyBytes} bytes"), e.getMessage)
-    } finally { client.close(); peer.join(5000); hostile.close() }
+    }
   }
 
   test("a client XRANGE of 100k entries costs at most 2x the server's execute + encode") {
@@ -315,17 +330,61 @@ class RespServerSpec extends AnyFunSuite {
           "props" -> s"""{"k": ${i % 10}}"""))
       }
       val cmd = StreamCommands.xrange("big")
-      def minMs(f: => Unit): Double = { // min of 5 after 3 warm-ups
-        (1 to 3).foreach(_ => f)
-        (1 to 5).map { _ => val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e6 }.min
-      }
-      val serverMs = minMs(encodeReply(server.loopback.execute(cmd)))
-      val clientMs = minMs(client.call(cmd) match {
+      def ms(f: => Unit): Double = { val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e6 }
+      def serverRun(): Double = ms(encodeReply(server.loopback.execute(cmd)))
+      def clientRun(): Double = ms(client.call(cmd) match {
         case ArrayReply(Some(entries)) => assert(entries.length == 100000)
         case other                     => fail(s"bad XRANGE reply: ${other.getClass}")
       })
+      // both sides in each round, first one then the other, so a busy
+      // stretch of a shared box lands on both; min of 5 after 3 warm-ups.
+      // A 4-core box measured the client at 1.3-1.7x the server.
+      val rounds = (1 to 8).map { k =>
+        if (k % 2 == 0) { val s = serverRun(); (s, clientRun()) }
+        else { val c = clientRun(); (serverRun(), c) }
+      }.drop(3)
+      val serverMs = rounds.map(_._1).min
+      val clientMs = rounds.map(_._2).min
       assert(clientMs <= 2 * serverMs,
         f"client XRANGE $clientMs%.0f ms vs server execute + encode $serverMs%.0f ms")
+    }
+  }
+
+  test("nested huge array headers allocate nothing: the server answers a protocol error") {
+    // 64 array headers of 2.8M elements each, 640 bytes in all: sizing
+    // element storage from the header would take ~1 GB on the server
+    val nested = "*2796000\r\n" * 64
+    withServer { (_, client) =>
+      client.send(nested.getBytes("UTF-8"))
+      assert(client.readReply() == ErrorReply("ERR protocol error"))
+      assert(client.isClosedByServer)
+    }
+    // the same bytes through the server's framer, in this thread (after
+    // one warm-up, so class loading is not counted): the second '*' is
+    // not a bulk element, fatal as it arrives
+    val wire = nested.getBytes("UTF-8")
+    new RespCommandFramer(RespServer.MaxFrameBytes).feed(wire, 0, wire.length)
+    val framer = new RespCommandFramer(RespServer.MaxFrameBytes)
+    val framerBytes = allocatedBy {
+      assert(framer.feed(wire, 0, wire.length) == ((Vector.empty, Some("ERR protocol error"))))
+    }
+    // the reply grammar nests them to MaxDepth, each open array empty
+    val deep = ("*178000000\r\n" * MaxDepth).getBytes("UTF-8")
+    val reader = new RespReader(RespClient.MaxReplyBytes)
+    val readerBytes = allocatedBy(assert(reader.feed(deep, 0, deep.length) == ((Vector.empty, None))))
+    // sized from the headers, either would take ~0.7 GB
+    assert(framerBytes < (16 << 20) && readerBytes < (16 << 20), s"framer $framerBytes, reader $readerBytes bytes")
+  }
+
+  test("a huge array header from the server allocates nothing until its elements arrive") {
+    // 178M elements pass the 512 MiB cap at 3 bytes each; an array of
+    // that many references would be ~0.7 GB
+    withHostile("*178000000\r\n:1\r\n") { client =>
+      val bytes = allocatedBy {
+        val e = intercept[IllegalArgumentException](client.readReply())
+        assert(e.getMessage.contains("connection closed mid-reply"), e.getMessage)
+      }
+      assert(bytes < (16 << 20), s"readReply allocated $bytes bytes")
     }
   }
 }
