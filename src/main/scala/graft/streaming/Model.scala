@@ -47,21 +47,12 @@ object StreamId {
   }
 }
 
-/** Message-id string helpers: `"<ms>-<seq>"`, ordered by (ms, seq) — the
-  * Redis stream id total order exploited by the scaler's interval
-  * arithmetic (reference `scaler.py:56-62`). Parsing and order are
+/** Message-id string helpers: `"<ms>-<seq>"`. Parsing and order are
   * [[StreamId]]'s. */
 object MsgId {
   val Zero = "0-0"
 
   def format(ms: Long, seq: Long): String = s"$ms-$seq"
-
-  def parse(id: String): (Long, Long) = { val s = StreamId(id); (s.ms, s.seq) }
-
-  val ordering: Ordering[String] = Ordering.by(StreamId(_: String))
-
-  def lt(a: String, b: String): Boolean = ordering.lt(a, b)
-  def lte(a: String, b: String): Boolean = ordering.lteq(a, b)
 }
 
 /** One pending-entries-list row: delivery state of a message owned by a

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.collection.immutable.ListMap
 
 /** RESP2 wire codec + Streams command builders — the layer between
   * this library and the wire (the reference speaks TCP via redis-py,
@@ -16,6 +17,11 @@ import java.nio.charset.StandardCharsets.UTF_8
   * users add only their own rule: [[RespCommandFramer]] the server's
   * inbound shape check and command cap, [[RespClient]] its reply cap,
   * and [[decode]] a one-reply wrapper over a fresh reader.
+  *
+  * Every byte of RESP is written by the one [[RespWriter]] below:
+  * [[RespLoopback]]'s dispatch writes each reply into it, stream
+  * entries straight from the log, and [[encode]], [[encodeStrings]]
+  * and [[encodeReply]] are walks over a fresh writer.
   *
   * Commands are RESP arrays of bulk strings; replies are the five
   * RESP2 types. [[StreamCommands]] builds exactly the command set the
@@ -48,51 +54,32 @@ object RespCodec {
   /** None = RESP null array (`*-1`). */
   final case class ArrayReply(items: Option[Vector[Reply]]) extends Reply
 
-  private val Crlf = Array[Byte]('\r', '\n')
-
   /** Encode one command as a RESP array of bulk strings. */
-  def encode(args: Seq[Array[Byte]]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write('*'); out.write(args.length.toString.getBytes(UTF_8)); out.write(Crlf)
-    args.foreach { a =>
-      out.write('$'); out.write(a.length.toString.getBytes(UTF_8)); out.write(Crlf)
-      out.write(a); out.write(Crlf)
-    }
-    out.toByteArray
-  }
+  def encode(args: Seq[Array[Byte]]): Array[Byte] =
+    args.foldLeft(new RespWriter().array(args.length))(_.bulk(_)).toByteArray
 
-  def encodeStrings(args: Seq[String]): Array[Byte] =
-    encode(args.map(_.getBytes(UTF_8)))
+  def encodeStrings(args: Seq[String]): Array[Byte] = writeCommand(args, new RespWriter).toByteArray
 
-  /** Encode a reply — the server half of the wire ([[RespLoopback]]);
-    * exact inverse of [[decode]] for every VALID reply shape. Simple
-    * and error strings are line-framed by the protocol, so embedded
-    * CR/LF (reachable through error messages that quote wire input —
-    * the classic RESP response-injection vector) are replaced with
-    * spaces rather than corrupting the framing; Redis itself forbids
-    * newlines in these types. */
+  /** A command as a RESP array of bulk strings, its arguments UTF-8
+    * straight into `w`. */
+  private[streaming] def writeCommand(args: Seq[String], w: RespWriter): RespWriter =
+    args.foldLeft(w.array(args.length))(_.bulk(_))
+
+  /** Encode a reply: the exact inverse of [[decode]] for every VALID
+    * reply shape, walked over a fresh [[RespWriter]]. */
   def encodeReply(r: Reply): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def line(s: String): Array[Byte] =
-      s.map(c => if (c == '\r' || c == '\n') ' ' else c).getBytes(UTF_8)
+    val w = new RespWriter
     def go(x: Reply): Unit = x match {
-      case SimpleReply(s) =>
-        out.write('+'); out.write(line(s)); out.write(Crlf)
-      case ErrorReply(m) =>
-        out.write('-'); out.write(line(m)); out.write(Crlf)
-      case IntReply(v) =>
-        out.write(':'); out.write(v.toString.getBytes(UTF_8)); out.write(Crlf)
-      case BulkReply(None) => out.write("$-1\r\n".getBytes(UTF_8))
-      case BulkReply(Some(b)) =>
-        out.write('$'); out.write(b.length.toString.getBytes(UTF_8)); out.write(Crlf)
-        out.write(b); out.write(Crlf)
-      case ArrayReply(None) => out.write("*-1\r\n".getBytes(UTF_8))
-      case ArrayReply(Some(items)) =>
-        out.write('*'); out.write(items.length.toString.getBytes(UTF_8)); out.write(Crlf)
-        items.foreach(go)
+      case SimpleReply(s)          => w.simple(s)
+      case ErrorReply(m)           => w.error(m)
+      case IntReply(v)             => w.int(v)
+      case BulkReply(None)         => w.nil()
+      case BulkReply(Some(b))      => w.bulk(b)
+      case ArrayReply(None)        => w.array(-1)
+      case ArrayReply(Some(items)) => w.array(items.length); items.foreach(go)
     }
     go(r)
-    out.toByteArray
+    w.toByteArray
   }
 
   /** A bulk-string reply from text. */
@@ -120,14 +107,15 @@ object RespCodec {
 
   /** Parse one stream entry `[id, [f1, v1, f2, v2, …]]` into the
     * library's normalized [[StreamMessage]] (the C6 normalization the
-    * reference does in `consumer.py:160-176`). A null field array
+    * reference does in `consumer.py:160-176`). The content keeps wire
+    * order, as Redis stores XADD fields verbatim. A null field array
     * (trimmed entry in an XCLAIM reply) yields an empty content map. */
   def parseEntry(r: Reply): StreamMessage = r match {
     case ArrayReply(Some(Vector(id, fields))) =>
       val content = fields match {
         case ArrayReply(Some(fv)) =>
           require(fv.length % 2 == 0, "odd field/value list")
-          fv.grouped(2).map { case Vector(f, v) => f.text -> v.text }.toMap
+          ListMap(fv.grouped(2).map { case Vector(f, v) => f.text -> v.text }.toSeq: _*)
         case ArrayReply(None) => Map.empty[String, String]
         case other            => sys.error(s"bad field list: $other")
       }
@@ -288,6 +276,131 @@ private[streaming] final class RespReader(maxBytes: Int, commands: Boolean = fal
     }
     v
   }
+}
+
+/** The one RESP2 writer: commands, replies and stream entries are all
+  * written through it, into one growable byte array. A length header
+  * is written as ASCII digits, with no `String`; an ASCII string is
+  * copied in the pass that checks it, any other is encoded to UTF-8
+  * once. Simple and error strings are line-framed by the protocol, so
+  * CR and LF in them (reachable through error messages that quote wire
+  * input — the classic RESP response-injection vector) become spaces
+  * in place; Redis itself forbids newlines in these types. Bulk
+  * payloads are never altered.
+  *
+  * A [[RespServer]] connection keeps one writer and [[reset]]s it after
+  * each fragment's replies go to the socket; [[reset]] drops a buffer
+  * that one large reply grew past [[RespWriter.MaxKept]], so an idle
+  * connection never holds a big XRANGE's bytes. */
+private[streaming] final class RespWriter {
+  import RespWriter._
+
+  private var buf = new Array[Byte](BaseSize)
+  private var at = 0
+
+  /** Bytes written since the last [[reset]]. */
+  def size: Int = at
+  private[streaming] def capacity: Int = buf.length
+
+  def toByteArray: Array[Byte] = java.util.Arrays.copyOf(buf, at)
+  def writeTo(out: java.io.OutputStream): Unit = out.write(buf, 0, at)
+
+  /** Drops every byte past `mark`, an earlier [[size]]. */
+  def truncate(mark: Int): Unit = at = mark
+
+  def reset(): Unit = {
+    at = 0
+    if (buf.length > MaxKept) buf = new Array[Byte](BaseSize)
+  }
+
+  def simple(s: String): RespWriter = line('+', s)
+  def error(s: String): RespWriter = line('-', s)
+  def int(v: Long): RespWriter = header(':', v)
+  def nil(): RespWriter = header('$', -1)
+
+  def bulk(b: Array[Byte]): RespWriter = {
+    header('$', b.length)
+    raw(b)
+    crlf()
+  }
+
+  def bulk(s: String): RespWriter = {
+    val mark = at
+    header('$', s.length)
+    if (ascii(s)) crlf() else { at = mark; bulk(s.getBytes(UTF_8)) }
+  }
+
+  /** An array header of `n` elements; -1 is the null array. */
+  def array(n: Int): RespWriter = header('*', n)
+
+  /** One stream entry, `[id, [f1, v1, f2, v2, …]]`, fields in the
+    * order the message holds them. */
+  def entry(m: StreamMessage): RespWriter = {
+    array(2).bulk(m.msgid).array(2 * m.content.size)
+    m.content.foreach { case (f, v) => bulk(f).bulk(v) }
+    this
+  }
+
+  private def line(kind: Char, s: String): RespWriter = {
+    put(kind)
+    val from = at
+    if (!ascii(s)) raw(s.getBytes(UTF_8))
+    // in UTF-8 the bytes CR and LF encode only those two characters
+    for (i <- from until at if buf(i) == '\r' || buf(i) == '\n') buf(i) = ' '
+    crlf()
+  }
+
+  private def header(kind: Char, v: Long): RespWriter = {
+    put(kind)
+    if (v < 0) put('-')
+    digits(if (v < 0) v else -v)
+    crlf()
+  }
+
+  /** The decimal digits of `-n`, for `n <= 0`: Long.MinValue has no
+    * positive. */
+  private def digits(n: Long): Unit = {
+    if (n <= -10) digits(n / 10)
+    put(('0' - n % 10).toChar)
+  }
+
+  /** Writes `s` one byte per char if it is all ASCII, and says whether
+    * it was; a string that is not leaves the writer as it was. */
+  private def ascii(s: String): Boolean = {
+    room(s.length)
+    var i = 0
+    while (i < s.length && s.charAt(i) < 0x80) { buf(at + i) = s.charAt(i).toByte; i += 1 }
+    if (i == s.length) at += i
+    i == s.length
+  }
+
+  private def raw(b: Array[Byte]): Unit = {
+    room(b.length)
+    System.arraycopy(b, 0, buf, at, b.length)
+    at += b.length
+  }
+
+  private def crlf(): RespWriter = {
+    put('\r')
+    put('\n')
+    this
+  }
+
+  private def put(c: Char): Unit = {
+    room(1)
+    buf(at) = c.toByte
+    at += 1
+  }
+
+  private def room(n: Int): Unit = if (n > buf.length - at)
+    buf = java.util.Arrays.copyOf(buf, math.max(2 * buf.length, at + n))
+}
+
+private[streaming] object RespWriter {
+  /** A fresh writer's buffer: a small command or reply fits in it. */
+  val BaseSize = 512
+  /** The largest buffer [[RespWriter.reset]] keeps for the next reply. */
+  val MaxKept: Int = 64 * 1024
 }
 
 /** Builders for the Streams command set the reference issues — each

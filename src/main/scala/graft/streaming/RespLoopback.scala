@@ -4,9 +4,10 @@ import scala.collection.mutable
 import RespCodec._
 
 /** In-process RESP endpoint: decode a command off the wire, execute it
-  * against the library's own [[StreamLog]]/[[ConsumerGroup]], encode
-  * the reply. [[RespServer]] wraps this in a real localhost TCP accept
-  * loop — the full client-socket-server path the reference runs on
+  * against the library's own [[StreamLog]]/[[ConsumerGroup]], and write
+  * the reply once, stream entries straight from the log, into a
+  * [[RespWriter]]. [[RespServer]] wraps this in a real localhost TCP
+  * accept loop — the full client-socket-server path the reference runs on
   * (`common.py:13-18`) — while the in-process [[call]] form keeps the
   * protocol tests transport-free and fast; the tests drive
   * produce→consume→ack→claim cycles through both.
@@ -32,9 +33,9 @@ final class RespLoopback(clock: Clock = SystemClock) {
   /** What a read or delete sees: the stream's log, or for a missing key
     * one never-written log that nothing adds to. Arguments and ids are
     * validated exactly as on a real stream, the answers are Redis's for
-    * a missing key (XLEN 0, XRANGE empty, XDEL and XTRIM 0; XINFO STREAM,
-    * below, is the one deviation), and no stream is created — so a
-    * client naming random keys cannot grow [[logs]]. */
+    * a missing key (XLEN 0, XRANGE empty, XDEL and XTRIM 0), and no
+    * stream is created — so a client naming random keys cannot grow
+    * [[logs]]. */
   private val absent = new StreamLog(clock)
   private def readable(stream: String): StreamLog = existing(stream).getOrElse(absent)
 
@@ -70,48 +71,63 @@ final class RespLoopback(clock: Clock = SystemClock) {
     * back concatenated, in order. Protocol faults answer RESP errors,
     * never JVM exceptions; an incomplete trailing command gets no reply. */
   def call(request: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    serve(new RespCommandFramer(RespServer.MaxFrameBytes), request, 0, request.length, out)
-    out.toByteArray
+    val w = new RespWriter
+    serve(new RespCommandFramer(RespServer.MaxFrameBytes), request, 0, request.length, w)
+    w.toByteArray
   }
 
-  /** Frame → execute → encode, the one step behind [[call]] and every
+  /** Frame → execute → write, the one step behind [[call]] and every
     * [[RespServer]] connection: each command `framer` completes from
-    * the bytes is executed and its reply written to `out`. A framed but
+    * the bytes is executed and its reply written to `w`. A framed but
     * malformed command answers `ERR malformed command`; an unframeable
     * stream answers its fatal error once and returns false, because the
     * stream cannot be resynchronized — the connection closes. */
   private[streaming] def serve(framer: RespCommandFramer, bytes: Array[Byte], off: Int, len: Int,
-      out: java.io.OutputStream): Boolean = {
+      w: RespWriter): Boolean = {
     val (commands, fatal) = framer.feed(bytes, off, len)
-    commands.foreach(c => out.write(encodeReply(c.fold(_ => ErrorReply("ERR malformed command"), execute))))
-    fatal.foreach(m => out.write(encodeReply(ErrorReply(m))))
+    commands.foreach(_.fold(_ => w.error("ERR malformed command"), respond(_, w)))
+    fatal.foreach(w.error)
     fatal.isEmpty
   }
 
-  /** Execute one parsed command. Protocol errors come back as RESP
-    * errors, never as exceptions across the wire boundary; messages
-    * that already carry a Redis error code (NOGROUP) keep it as their
-    * prefix, everything else gets the generic ERR. */
-  def execute(args: Seq[String]): Reply =
-    try dispatch(args)
+  /** Execute one parsed command and write its reply to `w`. Protocol
+    * errors come back as RESP errors, never as exceptions across the
+    * wire boundary: a command that throws has the bytes it wrote
+    * dropped and answers one error line instead. Messages that already
+    * carry a Redis error code (NOGROUP) keep it as their prefix,
+    * everything else gets the generic ERR. */
+  private[streaming] def respond(args: Seq[String], w: RespWriter): Unit = {
+    val mark = w.size
+    try dispatch(args, w)
     catch { case e: Exception =>
+      w.truncate(mark)
       val m = String.valueOf(e.getMessage)
-      ErrorReply(if (m.startsWith("NOGROUP")) m else s"ERR $m")
+      w.error(if (m.startsWith("NOGROUP")) m else s"ERR $m")
     }
+  }
 
-  private def entryReply(m: StreamMessage): Reply =
-    ArrayReply(Some(Vector(bulk(m.msgid),
-      ArrayReply(Some(m.content.toVector.flatMap(kv => Vector(bulk(kv._1), bulk(kv._2))))))))
+  /** Execute one parsed command for an in-process caller: its reply,
+    * written by [[respond]] and read back. */
+  def execute(args: Seq[String]): Reply = {
+    val w = new RespWriter
+    respond(args, w)
+    decode(w.toByteArray).get._1
+  }
 
-  /** Entry reply for a PEL id whose message may have been trimmed from
-    * the stream — Redis answers nil fields for those (the readOwn
-    * tombstone rule). */
-  private def entryById(log: StreamLog, id: String): Reply =
-    log.get(id).map(entryReply).getOrElse(
-      ArrayReply(Some(Vector(bulk(id), ArrayReply(None)))))
+  private def entries(w: RespWriter, ms: Seq[StreamMessage]): Unit = {
+    w.array(ms.length)
+    ms.foreach(w.entry)
+  }
 
-  private def dispatch(args: Seq[String]): Reply = args.head.toUpperCase match {
+  /** The entries of claimed PEL ids, whose messages may have been
+    * trimmed from the stream — Redis answers nil fields for those (the
+    * readOwn tombstone rule). */
+  private def claimed(w: RespWriter, log: StreamLog, ids: Seq[String]): Unit = {
+    w.array(ids.length)
+    ids.foreach(id => log.get(id).fold(w.array(2).bulk(id).array(-1))(w.entry))
+  }
+
+  private def dispatch(args: Seq[String], w: RespWriter): Unit = args.head.toUpperCase match {
     case "XADD" =>
       // XADD stream [MAXLEN [~] n] id field value … — both the
       // approximate ('~') and the exact trim forms are legal Redis.
@@ -130,9 +146,9 @@ final class RespLoopback(clock: Clock = SystemClock) {
       // ListMap preserves wire field order (the xadd builder contract)
       val id = logOf(stream).add(
         scala.collection.immutable.ListMap(fields: _*), maxlen, approximate = approx)
-      bulk(id)
+      w.bulk(id)
 
-    case "XLEN" => IntReply(readable(args(1)).len.toLong)
+    case "XLEN" => w.int(readable(args(1)).len.toLong)
 
     case "XRANGE" =>
       // XRANGE key start end [COUNT n] — inclusive id range, '-'/'+'
@@ -142,7 +158,7 @@ final class RespLoopback(clock: Clock = SystemClock) {
         (args.length == 6 && args(4).equalsIgnoreCase("COUNT")),
         "expected XRANGE <key> <start> <end> [COUNT <n>]")
       val count = if (args.length == 6) args(5).toInt else Int.MaxValue
-      ArrayReply(Some(readable(args(1)).range(args(2), args(3), count).toVector.map(entryReply)))
+      entries(w, readable(args(1)).range(args(2), args(3), count))
 
     case "XREADGROUP" =>
       // XREADGROUP GROUP g c [COUNT n] [BLOCK ms] STREAMS s (>|0) —
@@ -176,15 +192,14 @@ final class RespLoopback(clock: Clock = SystemClock) {
         case "0" => groupOf(stream, g).readOwn(c, count)
         case other => sys.error(s"unsupported XREADGROUP id: $other")
       }
-      if (msgs.isEmpty && args(i + 2) == ">") ArrayReply(None) // Redis nil on no data
-      else ArrayReply(Some(Vector(ArrayReply(Some(Vector(
-        bulk(stream), ArrayReply(Some(msgs.toVector.map(entryReply)))))))))
+      if (msgs.isEmpty && args(i + 2) == ">") w.array(-1) // Redis nil on no data
+      else entries(w.array(1).array(2).bulk(stream), msgs)
 
     case "XACK" =>
       arity(args, 4)
       val g = groupOf(args(1), args(2))
       args.drop(3).foreach(StreamId(_)) // like Redis: one bad id acks nothing
-      IntReply(args.drop(3).map(g.ack).sum.toLong)
+      w.int(args.drop(3).map(g.ack).sum.toLong)
 
     case "XPENDING" =>
       // range form: XPENDING s g min max count [consumer] →
@@ -197,16 +212,15 @@ final class RespLoopback(clock: Clock = SystemClock) {
       val rows = groupOf(args(1), args(2))
         .pendingRange(args(3), args(4), args(5).toInt, args.lift(6))
       val now = clock.nowMs
-      ArrayReply(Some(rows.toVector.map(e => ArrayReply(Some(Vector(
-        bulk(e.msgid), bulk(e.consumer),
-        IntReply(e.timeSinceDelivered(now)), IntReply(e.timesDelivered.toLong)))))))
+      w.array(rows.length)
+      rows.foreach(e => w.array(4).bulk(e.msgid).bulk(e.consumer)
+        .int(e.timeSinceDelivered(now)).int(e.timesDelivered.toLong))
 
     case "XCLAIM" =>
       // XCLAIM s g c minIdle id … → full entries of the claimed ids
       arity(args, 6)
       val g = groupOf(args(1), args(2))
-      val claimed = g.claim(args.drop(5), args(3), args(4).toLong)
-      ArrayReply(Some(claimed.toVector.map(entryById(g.log, _))))
+      claimed(w, g.log, g.claim(args.drop(5), args(3), args(4).toLong))
 
     case "XAUTOCLAIM" =>
       // XAUTOCLAIM s g c minIdle start [COUNT n] → [cursor, entries]
@@ -218,8 +232,7 @@ final class RespLoopback(clock: Clock = SystemClock) {
       val (cursor, ids) =
         if (args.length == 6) g.autoClaim(args(3), args(4).toLong, args(5))
         else g.autoClaim(args(3), args(4).toLong, args(5), args(7).toInt)
-      ArrayReply(Some(Vector(bulk(cursor),
-        ArrayReply(Some(ids.toVector.map(entryById(g.log, _)))))))
+      claimed(w.array(2).bulk(cursor), g.log, ids)
 
     case "XGROUP" => args(1).toUpperCase match {
       case "CREATE" =>
@@ -228,30 +241,31 @@ final class RespLoopback(clock: Clock = SystemClock) {
         // would need a from-now cursor it deliberately lacks.
         require(args(4) == "0-0" || args(4) == "0",
           s"only start id 0-0 is supported (the reference's form), got ${args(4)}")
-        ConsumerGroup.create(logOf(args(2)), args(3)); SimpleReply("OK")
-      case "DELCONSUMER" => IntReply(groupOf(args(2), args(3)).delConsumer(args(4)).toLong)
+        ConsumerGroup.create(logOf(args(2)), args(3)); w.simple("OK")
+      case "DELCONSUMER" => w.int(groupOf(args(2), args(3)).delConsumer(args(4)).toLong)
       case "DESTROY" =>
         // Redis replies with the number of groups destroyed: 1 or 0.
-        IntReply(if (consumerGroup(args(2), args(3)).exists(_.destroy())) 1L else 0L)
-      case other => ErrorReply(s"ERR unknown XGROUP subcommand: $other")
+        w.int(if (consumerGroup(args(2), args(3)).exists(_.destroy())) 1L else 0L)
+      case other => sys.error(s"unknown XGROUP subcommand: $other")
     }
 
     case "XINFO" => args(1).toUpperCase match {
       case "GROUPS" =>
         val gs = existing(args(2)).toVector.flatMap(_.groups)
-        ArrayReply(Some(gs.map(g => ArrayReply(Some(Vector(
-          bulk("name"), bulk(g.name),
-          bulk("consumers"), IntReply(g.consumers.size.toLong),
-          bulk("pending"), IntReply(g.pendingCount.toLong),
-          bulk("last-delivered-id"), bulk(g.lastDelivered)))))))
+        w.array(gs.length)
+        gs.foreach(g => w.array(8)
+          .bulk("name").bulk(g.name)
+          .bulk("consumers").int(g.consumers.size.toLong)
+          .bulk("pending").int(g.pendingCount.toLong)
+          .bulk("last-delivered-id").bulk(g.lastDelivered))
       case "CONSUMERS" =>
-        val g = groupOf(args(2), args(3))
-        ArrayReply(Some(g.consumerInfo.toVector.map { case (name, pending, idle) =>
-          ArrayReply(Some(Vector(
-            bulk("name"), bulk(name),
-            bulk("pending"), IntReply(pending.toLong),
-            bulk("idle"), IntReply(idle))))
-        }))
+        val rows = groupOf(args(2), args(3)).consumerInfo
+        w.array(rows.length)
+        rows.foreach { case (name, pending, idle) =>
+          w.array(6).bulk("name").bulk(name)
+            .bulk("pending").int(pending.toLong)
+            .bulk("idle").int(idle)
+        }
       case "STREAM" =>
         // XINFO STREAM s — flat key/value pair list like Redis. The
         // reference only consumes length + last-generated-id
@@ -259,26 +273,26 @@ final class RespLoopback(clock: Clock = SystemClock) {
         // along (entries-added, max-deleted-entry-id, first-entry,
         // last-entry — entries encoded like XRANGE rows, nil when the
         // stream is empty) so redis-py's dict parse sees the same keys
-        // against either server. A missing key answers the fields of an
-        // empty stream without creating one (Redis: ERR no such key), so
-        // S1's unconditional XINFO STREAM (`scaler.py:47`) reads zeros.
-        val log = readable(args(2))
-        def entryOrNil(e: Option[StreamMessage]): Reply =
-          e.map(entryReply).getOrElse(BulkReply(None))
-        ArrayReply(Some(Vector(
-          bulk("length"), IntReply(log.len.toLong),
-          bulk("last-generated-id"), bulk(log.lastGeneratedId),
-          bulk("max-deleted-entry-id"), bulk(log.maxDeletedEntryId),
-          bulk("entries-added"), IntReply(log.entriesAdded),
-          bulk("groups"), IntReply(log.groups.size.toLong),
-          bulk("first-entry"), entryOrNil(log.firstEntry),
-          bulk("last-entry"), entryOrNil(log.lastEntry))))
-      case other => ErrorReply(s"ERR unknown XINFO subcommand: $other")
+        // against either server. A missing key answers ERR no such key,
+        // as Redis does; every wire scaler creates its stream first
+        // (XGROUP CREATE … MKSTREAM), so S1 never sees it.
+        val log = existing(args(2)).getOrElse(sys.error("no such key"))
+        w.array(14)
+          .bulk("length").int(log.len.toLong)
+          .bulk("last-generated-id").bulk(log.lastGeneratedId)
+          .bulk("max-deleted-entry-id").bulk(log.maxDeletedEntryId)
+          .bulk("entries-added").int(log.entriesAdded)
+          .bulk("groups").int(log.groups.size.toLong)
+          .bulk("first-entry")
+        log.firstEntry.fold(w.nil())(w.entry)
+        w.bulk("last-entry")
+        log.lastEntry.fold(w.nil())(w.entry)
+      case other => sys.error(s"unknown XINFO subcommand: $other")
     }
 
     case "XDEL"  =>
       arity(args, 3)
-      IntReply(readable(args(1)).delete(args.drop(2): _*).toLong)
+      w.int(readable(args(1)).delete(args.drop(2): _*).toLong)
 
     case "XTRIM" =>
       // XTRIM s MAXLEN [~] n — MAXLEN is the only supported strategy;
@@ -288,8 +302,8 @@ final class RespLoopback(clock: Clock = SystemClock) {
         s"unsupported trim strategy: ${args(2)} (only MAXLEN)")
       require(args.length == 4 || (args.length == 5 && args(3) == "~"),
         "expected XTRIM <key> MAXLEN [~] <n>")
-      IntReply(readable(args(1)).trim(args.last.toInt).toLong)
+      w.int(readable(args(1)).trim(args.last.toInt).toLong)
 
-    case other => ErrorReply(s"ERR unknown command: $other")
+    case other => sys.error(s"unknown command: $other")
   }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.io.BufferedOutputStream
 import java.net.{InetAddress, ServerSocket, Socket, SocketException}
 import java.util.concurrent.atomic.AtomicBoolean
 import scala.collection.mutable
@@ -11,12 +10,15 @@ import RespCodec._
   * protocol to a server over a socket (`redis_streams/common.py:13-18`
   * constructs exactly such a connection).
   *
-  * One RESP parser serves both directions: [[RespReader]] (RespCodec.scala)
-  * consumes each byte once, whatever the fragmentation, and each user
-  * adds only its own rule — [[RespCommandFramer]] the inbound shape
-  * check (an array of bulk strings) and the server's 8 MiB command cap,
-  * [[RespClient]] a reply queue and its 512 MiB reply cap. The
-  * frame → execute → encode step is [[RespLoopback.serve]], shared with
+  * One RESP reader and one RESP writer (both in RespCodec.scala) serve
+  * both directions. [[RespReader]] consumes each byte once, whatever
+  * the fragmentation, and each user adds only its own rule —
+  * [[RespCommandFramer]] the inbound shape check (an array of bulk
+  * strings) and the server's 8 MiB command cap, [[RespClient]] a reply
+  * queue and its 512 MiB reply cap. [[RespWriter]] writes each reply
+  * once: a connection keeps one writer, the dispatch writes into it,
+  * and its bytes go to the socket in one write per fragment. The
+  * frame → execute → write step is [[RespLoopback.serve]], shared with
   * the in-process [[RespLoopback.call]], so a socket and an in-process
   * call read commands by one grammar, and pipelining (several commands
   * in one segment) and fragmentation (one command across many
@@ -24,7 +26,7 @@ import RespCodec._
   *
   * Concurrency: one daemon acceptor thread, one daemon handler thread
   * per connection. All command execution funnels into
-  * [[RespLoopback.execute]], whose engine objects ([[StreamLog]],
+  * [[RespLoopback.respond]], whose engine objects ([[StreamLog]],
   * [[ConsumerGroup]]) are internally synchronized — concurrent clients
   * interleave at command granularity exactly like Redis's own
   * single-threaded command loop.
@@ -90,25 +92,28 @@ final class RespServer(
 
   /** One connection's lifetime: each TCP fragment goes to the
     * connection's [[RespCommandFramer]] through [[RespLoopback.serve]],
-    * which answers every command it completes, in order (pipelining
-    * falls out of the loop for free). The framer reads each byte once,
-    * so a 1 MiB command trickled one byte per segment costs O(n), and
-    * caps the in-flight command at [[RespServer.MaxFrameBytes]]
-    * (Redis's proto-max-bulk-len analog): a client streaming a huge
-    * length header answers one ERR and loses the connection — it never
-    * grows the heap until OOM. */
+    * which writes the reply of every command it completes, in order,
+    * into the connection's [[RespWriter]] (pipelining falls out of the
+    * loop for free); the writer's bytes go to the socket in one write.
+    * The framer reads each byte once, so a 1 MiB command trickled one
+    * byte per segment costs O(n), and caps the in-flight command at
+    * [[RespServer.MaxFrameBytes]] (Redis's proto-max-bulk-len analog):
+    * a client streaming a huge length header answers one ERR and loses
+    * the connection — it never grows the heap until OOM. */
   private def handle(sock: Socket): Unit = {
     val in = sock.getInputStream
-    val out = new BufferedOutputStream(sock.getOutputStream)
+    val out = sock.getOutputStream
     val framer = new RespCommandFramer(RespServer.MaxFrameBytes)
+    val writer = new RespWriter
     val chunk = new Array[Byte](8192)
     try {
       var open = true
       while (open) {
         val n = in.read(chunk)
         // false after a fatal reply: an unframed stream cannot resync
-        open = n >= 0 && loopback.serve(framer, chunk, 0, n, out)
-        out.flush()
+        open = n >= 0 && loopback.serve(framer, chunk, 0, n, writer)
+        writer.writeTo(out)
+        writer.reset()
       }
     } catch { case _: Exception => () } // peer reset — just clean up
     finally {
@@ -171,12 +176,12 @@ private[streaming] final class RespCommandFramer(maxFrameBytes: Int) {
 }
 
 /** Minimal blocking RESP client — the role redis-py plays for the
-  * reference (`common.py:13-18`): encode a command array, write it to
-  * the socket, read replies through one [[RespReader]] that consumes
-  * each byte once, so a reply of n bytes costs O(n) however the socket
-  * fragments it. The reply in flight is capped at
-  * [[RespClient.MaxReplyBytes]], and the reader allocates for bytes
-  * received, never for a length header alone, so a hostile server
+  * reference (`common.py:13-18`): write a command array into its one
+  * [[RespWriter]] and that to the socket, read replies through one
+  * [[RespReader]] that consumes each byte once, so a reply of n bytes
+  * costs O(n) however the socket fragments it. The reply in flight is
+  * capped at [[RespClient.MaxReplyBytes]], and the reader allocates for
+  * bytes received, never for a length header alone, so a hostile server
   * cannot make the client allocate more than it sends. Test-path
   * simplicity over pooling — one socket, one in-flight command. */
 final class RespClient(host: String, port: Int) extends AutoCloseable {
@@ -184,6 +189,7 @@ final class RespClient(host: String, port: Int) extends AutoCloseable {
   private val in = sock.getInputStream
   private val out = sock.getOutputStream
   private val reader = new RespReader(RespClient.MaxReplyBytes)
+  private val writer = new RespWriter
   private val chunk = new Array[Byte](65536)
   private val replies = mutable.Queue.empty[Reply]
   private var fatal: Option[String] = None
@@ -211,7 +217,8 @@ final class RespClient(host: String, port: Int) extends AutoCloseable {
 
   /** One request→reply exchange. */
   def call(args: Seq[String]): Reply = {
-    send(RespCodec.encodeStrings(args))
+    writeCommand(args, writer).writeTo(out)
+    writer.reset()
     readReply()
   }
 

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import scala.collection.immutable.ListMap
 import RespCodec._
 
 /** The group port: the stream commands the reference roles issue, one
@@ -126,12 +125,7 @@ private[streaming] final class RespPort(
 
   // Field order kept as sent: a dead letter re-adds the body verbatim.
   def claim(consumer: String, minIdleMs: Long, ids: Seq[String]): Seq[StreamMessage] =
-    rows(call(StreamCommands.xclaim(stream, group, consumer, minIdleMs, ids))).map {
-      case ArrayReply(Some(Vector(id, ArrayReply(Some(fv))))) =>
-        StreamMessage(id.text, ListMap(fv.grouped(2).map { case Vector(k, v) => k.text -> v.text }.toSeq: _*))
-      case ArrayReply(Some(Vector(id, _))) => StreamMessage(id.text, Map.empty) // trimmed: nil fields
-      case other => sys.error(s"bad XCLAIM entry: $other")
-    }
+    rows(call(StreamCommands.xclaim(stream, group, consumer, minIdleMs, ids))).map(parseEntry)
 
   def delConsumer(consumer: String): Int =
     int(ok(call(StreamCommands.xgroupDelConsumer(stream, group, consumer)))).toInt

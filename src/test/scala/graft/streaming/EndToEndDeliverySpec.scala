@@ -97,7 +97,7 @@ class EndToEndDeliverySpec extends SparkTestBase {
 
       // The source's epoch commit (the offset-log ack boundary) must
       // have advanced past the first wave.
-      assert(MsgId.lte(ids.last, StreamLogRegistry.committedId(key)),
+      assert(StreamId(ids.last) <= StreamId(StreamLogRegistry.committedId(key)),
         "source commit must cover wave 1")
     } finally {
       q.stop()

@@ -94,4 +94,16 @@ class GroupPortSpec extends AnyFunSuite {
     assert(p.engine.scalerSignals == ((3, 4, 1)))
     assert(p.resp.scalerSignals == ((2, 4, 1)))
   }
+
+  test("an events-shaped entry read or claimed over RESP keeps its XADD field order") {
+    // six fields: a hash-ordered Map reorders more than four
+    val fields = Seq("event_id" -> "7", "ts" -> "1700000000259", "user_id" -> "4711",
+      "event_type" -> "click", "value" -> "2.59", "props" -> """{"k": 7}""")
+    val p = new Ports
+    WireReplies.ok(p.loopback.execute(StreamCommands.xadd(Stream, fields)))
+    val Seq(read) = p.resp.read("c1", 10, 0L, newOnly = true)
+    assert(read.content.toSeq == fields)
+    val Seq(claimed) = p.resp.claim("c2", 0L, Seq(read.msgid))
+    assert(claimed.content.toSeq == fields)
+  }
 }

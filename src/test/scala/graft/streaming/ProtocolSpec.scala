@@ -23,14 +23,14 @@ class ProtocolSpec extends AnyFunSuite {
     clock.advance(5)
     val id3 = log.add(Map("k" -> "v"))
     assert(id1.contains("-"))
-    assert(MsgId.lt(id1, id2) && MsgId.lt(id2, id3))
-    assert(MsgId.parse(id2) == (MsgId.parse(id1)._1, MsgId.parse(id1)._2 + 1))
+    assert(StreamId(id1) < StreamId(id2) && StreamId(id2) < StreamId(id3))
+    assert(StreamId(id2) == StreamId(StreamId(id1).ms, StreamId(id1).seq + 1))
   }
 
   test("ids keep monotonic even if clock stalls") {
     val (_, log) = fixture()
     val ids = (1 to 5).map(_ => log.add(Map("i" -> "x")))
-    assert(ids == ids.sorted(MsgId.ordering))
+    assert(ids == ids.sortBy(StreamId(_)))
   }
 
   test("a clock at 0 never mints the 0-0 sentinel (Redis forbids it; cursors skip it)") {
@@ -192,7 +192,7 @@ class ProtocolSpec extends AnyFunSuite {
     val (cur3, got3) = g.autoClaim("alive", minIdleMs = 1000, start = cur2, count = 2)
     assert(cur3 == "0-0" && got3.size == 1)
     val all = (got1 ++ got2 ++ got3)
-    assert(all == all.sorted(MsgId.ordering), "claims must advance in msgid order")
+    assert(all == all.sortBy(StreamId(_)), "claims must advance in msgid order")
     assert(g.pendingOf("alive").size == 5 && g.pendingOf("dead").isEmpty)
     // Redis requires COUNT > 0: count = 0 would return the scan start
     // as the cursor without progress — an infinite caller loop.
@@ -222,7 +222,7 @@ class ProtocolSpec extends AnyFunSuite {
       }
       assert(claimed.size == 17, s"batch=$batchSize claimed ${claimed.size}")
       assert(claimed.distinct.size == 17, "an entry was claimed twice")
-      assert(claimed == claimed.sorted(MsgId.ordering))
+      assert(claimed == claimed.sortBy(StreamId(_)))
       assert(g.pendingOf("dead").size == 6, "fresh entries must stay owned")
     }
   }

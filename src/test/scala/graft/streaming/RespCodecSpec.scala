@@ -184,4 +184,24 @@ class RespCodecSpec extends AnyFunSuite {
     // re-appending and re-decoding from byte 0 is O(n^2): ~10^12 byte ops
     assert(elapsedMs < 10000, f"1 MiB reply one byte at a time took $elapsedMs%.0f ms - not linear")
   }
+
+  test("integers and lengths are written as their decimal digits, Long.MinValue included") {
+    Seq(0L, 1L, 9L, 10L, 99L, 100L, -1L, -9L, -10L, Long.MaxValue, Long.MinValue).foreach { v =>
+      assert(new String(encodeReply(IntReply(v)), UTF_8) == s":$v\r\n")
+    }
+  }
+
+  test("a writer that grew past MaxKept goes back to its base buffer when it resets") {
+    val w = new RespWriter
+    assert(w.capacity == RespWriter.BaseSize)
+    w.bulk(new Array[Byte](1 << 20))
+    assert(w.size == (1 << 20) + 12 && w.capacity > (1 << 20))
+    w.reset()
+    assert(w.size == 0 && w.capacity == RespWriter.BaseSize)
+    // a reply under MaxKept keeps its buffer for the next one
+    w.bulk(new Array[Byte](4096))
+    val grown = w.capacity
+    w.reset()
+    assert(grown > RespWriter.BaseSize && w.capacity == grown)
+  }
 }

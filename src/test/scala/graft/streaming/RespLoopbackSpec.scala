@@ -23,7 +23,7 @@ class RespLoopbackSpec extends AnyFunSuite {
     val id1 = wire(lb, StreamCommands.xadd("jobs", Seq("task" -> "a", "n" -> "1"))).text
     clock.advance(5)
     val id2 = wire(lb, StreamCommands.xadd("jobs", Seq("task" -> "b", "n" -> "2"))).text
-    assert(MsgId.lt(id1, id2))
+    assert(StreamId(id1) < StreamId(id2))
     assert(wire(lb, StreamCommands.xlen("jobs")) == IntReply(2))
 
     wire(lb, StreamCommands.xgroupCreate("jobs", "g1"))
@@ -126,7 +126,9 @@ class RespLoopbackSpec extends AnyFunSuite {
       val ArrayReply(Some(kv)) = wire(lb, StreamCommands.xinfoStream("s")): @unchecked
       kv.grouped(2).map { case Vector(k, v) => k.text -> v }.toMap
     }
-    // never-written stream: zero everything, nil first/last entries
+    // never-written stream, made by XGROUP CREATE … MKSTREAM: zero
+    // everything, nil first/last entries
+    wire(lb, StreamCommands.xgroupCreate("s", "g"))
     val virgin = info()
     assert(virgin("entries-added") == IntReply(0))
     assert(virgin("max-deleted-entry-id").text == MsgId.Zero)
@@ -395,7 +397,7 @@ class RespLoopbackSpec extends AnyFunSuite {
     val Some((id1, n1)) = decode(out): @unchecked
     val Some((id2, n2)) = decode(out, n1): @unchecked
     assert(n2 == out.length, "the two replies must come back to back, nothing after")
-    assert(MsgId.lt(id1.text, id2.text))
+    assert(StreamId(id1.text) < StreamId(id2.text))
     assert(wire(lb, StreamCommands.xlen("p")) == IntReply(2))
     // simple strings are not command arguments: the socket answers a
     // protocol error, so the in-process call does too
@@ -418,9 +420,8 @@ class RespLoopbackSpec extends AnyFunSuite {
         assert(lb.execute(cmd) == want, s"$cmd")
         assert(lb.streamCount == 1, s"$cmd created a stream")
     }
-    // XINFO STREAM answers an empty stream's fields without making one
-    val ArrayReply(Some(kv)) = wire(lb, StreamCommands.xinfoStream("ghost")): @unchecked
-    assert(kv(0).text == "length" && kv(1) == IntReply(0))
+    // XINFO STREAM answers Redis's error without making a stream
+    assert(lb.execute(StreamCommands.xinfoStream("ghost")) == ErrorReply("ERR no such key"))
     assert(lb.streamCount == 1, "XINFO STREAM created a stream")
     // argument and id validation still run first, with the usual errors
     assert(lb.execute(Seq("XRANGE", "ghost", "5--3", "+")) ==
@@ -430,5 +431,46 @@ class RespLoopbackSpec extends AnyFunSuite {
     assert(lb.execute(StreamCommands.xtrimMaxlen("ghost", -1, approximate = false)) ==
       ErrorReply("ERR requirement failed: MAXLEN argument must be >= 0"))
     assert(lb.streamCount == 1)
+  }
+
+  test("call writes the bytes encodeReply makes of the same reply built by hand") {
+    val clock = new ManualClock(1000)
+    val lb = new RespLoopback(clock)
+    def arr(items: Reply*): Reply = ArrayReply(Some(items.toVector))
+    def entry(id: String, fv: String*): Reply = arr(bulk(id), arr(fv.map(bulk): _*))
+    def same(cmds: Seq[String]*)(want: Reply*): Unit = {
+      val got = lb.call(cmds.map(encodeStrings).reduce(_ ++ _))
+      assert(got.toSeq == want.map(encodeReply).reduce(_ ++ _).toSeq, s"$cmds")
+    }
+    wire(lb, StreamCommands.xgroupCreate("s", "g"))
+    same(StreamCommands.xrange("s"))(arr())
+    val id1 = wire(lb, StreamCommands.xadd("s", Seq("k" -> "v1", "n" -> "1"))).text
+    clock.advance(1)
+    // a non-ASCII value, and a value with CRLF inside, kept verbatim
+    val id2 = wire(lb, StreamCommands.xadd("s", Seq("name" -> "Zoë ✓ 日本", "raw" -> "a\r\nb"))).text
+    val (e1, e2) = (entry(id1, "k", "v1", "n", "1"), entry(id2, "name", "Zoë ✓ 日本", "raw", "a\r\nb"))
+    same(StreamCommands.xrange("s", count = Some(1)))(arr(e1))
+    same(StreamCommands.xrange("s"))(arr(e1, e2))
+    // XREADGROUP '>' with data, '>' with nothing (nil array), '0'
+    same(StreamCommands.xreadgroup("g", "c", "s", 10, 0))(arr(arr(bulk("s"), arr(e1, e2))))
+    same(StreamCommands.xreadgroup("g", "c", "s", 10, 0))(ArrayReply(None))
+    same(StreamCommands.xreadgroup("g", "c", "s", 10, 0, newOnly = false))(arr(arr(bulk("s"), arr(e1, e2))))
+    // a claimed id whose entry is gone answers nil fields
+    wire(lb, StreamCommands.xdel("s", Seq(id1)))
+    clock.advance(100)
+    val gone = arr(bulk(id1), ArrayReply(None))
+    same(StreamCommands.xclaim("s", "g", "c2", 50, Seq(id1, id2)))(arr(gone, e2))
+    clock.advance(100)
+    same(StreamCommands.xautoclaim("s", "g", "c3", 50, "0-0", 1))(arr(bulk(id2), arr(gone)))
+    same(StreamCommands.xinfoStream("s"))(arr(
+      bulk("length"), IntReply(1), bulk("last-generated-id"), bulk(id2),
+      bulk("max-deleted-entry-id"), bulk(id1), bulk("entries-added"), IntReply(2),
+      bulk("groups"), IntReply(1), bulk("first-entry"), e2, bulk("last-entry"), e2))
+    // an error line quoting CRLF has it scrubbed to spaces
+    same(Seq("a\r\nb"))(ErrorReply("ERR unknown command: A\r\nB"))
+    assert(lb.call(encodeStrings(Seq("a\r\nb"))).toSeq == "-ERR unknown command: A  B\r\n".getBytes("UTF-8").toSeq)
+    // the second of three pipelined commands fails: three whole replies
+    same(StreamCommands.xlen("s"), StreamCommands.xack("s", "g", Seq("5--3")), StreamCommands.xlen("s"))(
+      IntReply(1), ErrorReply("ERR Invalid stream ID specified as stream command argument"), IntReply(1))
   }
 }

@@ -116,7 +116,7 @@ class RespServerSpec extends AnyFunSuite {
         encodeStrings(StreamCommands.xlen("p")))
       val id1 = ok(client.readReply()).text
       val id2 = ok(client.readReply()).text
-      assert(MsgId.lt(id1, id2))
+      assert(StreamId(id1) < StreamId(id2))
       assert(ok(client.readReply()) == IntReply(2))
     }
   }

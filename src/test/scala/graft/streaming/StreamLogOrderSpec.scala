@@ -99,8 +99,8 @@ class StreamLogOrderSpec extends AnyFunSuite {
       case 0 => MsgId.Zero
       case 1 => log.lastGeneratedId
       case 2 => // never minted: a sequence number past any in its ms
-        val (ms, _) =
-          MsgId.parse(if (minted.isEmpty) MsgId.Zero else minted(rnd.nextInt(minted.size)))
+        val ms =
+          StreamId(if (minted.isEmpty) MsgId.Zero else minted(rnd.nextInt(minted.size))).ms
         MsgId.format(ms, 1000 + rnd.nextInt(5))
       case 3 => MsgId.format(clock.nowMs + 1 + rnd.nextInt(3), 0)
       case _ => if (minted.isEmpty) MsgId.Zero else minted(rnd.nextInt(minted.size))

@@ -33,7 +33,7 @@ class StreamLogSinkSpec extends SparkTestBase {
       assert(contents.map(_("i")).sorted == (1 to 6).map(_.toString).sorted)
       assert(contents.forall(c => c("doubled").toInt == c("i").toInt * 2))
       val ids = dst.range().map(_.msgid)
-      assert(ids == ids.sorted(MsgId.ordering), "sink must assign monotonic ids")
+      assert(ids == ids.sortBy(StreamId(_)), "sink must assign monotonic ids")
     } finally q.stop()
   }
 }

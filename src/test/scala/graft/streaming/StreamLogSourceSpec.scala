@@ -70,18 +70,18 @@ class StreamLogSourceSpec extends SparkTestBase {
       assert(batchSizes.sum == 10, s"lost or duplicated messages: $batchSizes")
       assert(batchSizes.count(_ == 3) >= 3, "expected three full batches of 3")
       assert(seen.distinct.size == 10, "exactly-once per epoch")
-      assert(seen.toSeq == seen.toSeq.sorted(MsgId.ordering), "delivery in id order")
+      assert(seen.toSeq == seen.toSeq.sortBy(StreamId(_)), "delivery in id order")
       // the final epoch's commit lands on the next trigger — require
       // progress, not the very last id yet
-      assert(MsgId.lt(MsgId.Zero, StreamLogRegistry.committedId(key)),
+      assert(StreamId(MsgId.Zero) < StreamId(StreamLogRegistry.committedId(key)),
         "epoch commit (ack boundary) must advance")
-      val wave1Last = seen.toSeq.sorted(MsgId.ordering).last
+      val wave1Last = seen.toSeq.sortBy(StreamId(_)).last
 
       // late arrivals are picked up by subsequent triggers
       (11 to 12).foreach { i => log.add(Map("i" -> i)); clock.advance(1) }
       q.processAllAvailable()
       assert(batchSizes.sum == 12)
-      assert(MsgId.lte(wave1Last, StreamLogRegistry.committedId(key)),
+      assert(StreamId(wave1Last) <= StreamId(StreamLogRegistry.committedId(key)),
         "commit must cover the first wave after the next trigger")
     } finally q.stop()
   }
@@ -147,7 +147,7 @@ class StreamLogSourceSpec extends SparkTestBase {
       val ids = distinctEpochs.flatten
       assert(ids.distinct.size == ids.size, "duplicate delivery outside the replayed epoch")
       assert(ids.size == 10, s"lost messages: got ${ids.size} of 10")
-      assert(ids == ids.sorted(MsgId.ordering), "delivery must follow id order")
+      assert(ids == ids.sortBy(StreamId(_)), "delivery must follow id order")
     } finally q2.stop()
   }
 

@@ -59,12 +59,12 @@ class StreamingScalerSpec extends SparkTestBase {
       gate.countDown()
       q.processAllAvailable()
       val dl2 = System.currentTimeMillis() + 20000
-      while (!MsgId.lte(ids(1), StreamLogRegistry.committedId(key)) &&
+      while (!(StreamId(ids(1)) <= StreamId(StreamLogRegistry.committedId(key))) &&
              System.currentTimeMillis() < dl2) {
         q.processAllAvailable(); Thread.sleep(25)
       }
       val acked = StreamLogRegistry.committedId(key)
-      assert(MsgId.lte(ids(1), acked), s"epoch-0 ack must have landed: $acked")
+      assert(StreamId(ids(1)) <= StreamId(acked), s"epoch-0 ack must have landed: $acked")
       val walDir = new java.io.File(ckpt, "offsets")
       val latestWal = walDir.listFiles().filter(_.getName.forall(_.isDigit))
         .maxBy(_.getName.toInt)

@@ -54,7 +54,7 @@ class WireE2ESpec extends AnyFunSuite {
         case other                     => fail(s"bad XRANGE reply: $other")
       }
       val all = ids(WireReplies.ok(client.call(StreamCommands.xrange(Stream))))
-      assert(all.length == 2 && MsgId.lt(all(0), all(1)))
+      assert(all.length == 2 && StreamId(all(0)) < StreamId(all(1)))
       // inclusive bounds: [id1, id2] returns both; [id2, id2] just one
       assert(ids(WireReplies.ok(client.call(
         StreamCommands.xrange(Stream, all(0), all(1))))) == all)
