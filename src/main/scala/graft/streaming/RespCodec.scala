@@ -288,27 +288,27 @@ private[streaming] final class RespReader(maxBytes: Int, commands: Boolean = fal
   * in place; Redis itself forbids newlines in these types. Bulk
   * payloads are never altered.
   *
-  * A [[RespServer]] connection keeps one writer and [[reset]]s it after
-  * each fragment's replies go to the socket; [[reset]] drops a buffer
-  * that one large reply grew past [[RespWriter.MaxKept]], so an idle
-  * connection never holds a big XRANGE's bytes. */
+  * A [[RespServer]] connection keeps one writer: [[writeTo]] hands its
+  * bytes to the socket and empties it, dropping a buffer that one large
+  * reply grew past [[RespWriter.MaxKept]], so an idle connection never
+  * holds a big XRANGE's bytes. */
 private[streaming] final class RespWriter {
   import RespWriter._
 
   private var buf = new Array[Byte](BaseSize)
   private var at = 0
 
-  /** Bytes written since the last [[reset]]. */
+  /** Bytes written so far: a mark [[truncate]] can go back to. */
   def size: Int = at
   private[streaming] def capacity: Int = buf.length
 
   def toByteArray: Array[Byte] = java.util.Arrays.copyOf(buf, at)
-  def writeTo(out: java.io.OutputStream): Unit = out.write(buf, 0, at)
 
-  /** Drops every byte past `mark`, an earlier [[size]]. */
   def truncate(mark: Int): Unit = at = mark
 
-  def reset(): Unit = {
+  /** Writes the bytes to `out` and empties the writer. */
+  def writeTo(out: java.io.OutputStream): Unit = {
+    out.write(buf, 0, at)
     at = 0
     if (buf.length > MaxKept) buf = new Array[Byte](BaseSize)
   }
@@ -317,21 +317,14 @@ private[streaming] final class RespWriter {
   def error(s: String): RespWriter = line('-', s)
   def int(v: Long): RespWriter = header(':', v)
   def nil(): RespWriter = header('$', -1)
-
-  def bulk(b: Array[Byte]): RespWriter = {
-    header('$', b.length)
-    raw(b)
-    crlf()
-  }
+  /** An array header of `n` elements; -1 is the null array. */
+  def array(n: Int): RespWriter = header('*', n)
+  def bulk(b: Array[Byte]): RespWriter = header('$', b.length).raw(b).crlf()
 
   def bulk(s: String): RespWriter = {
     val mark = at
-    header('$', s.length)
-    if (ascii(s)) crlf() else { at = mark; bulk(s.getBytes(UTF_8)) }
+    if (header('$', s.length).ascii(s)) crlf() else { at = mark; bulk(s.getBytes(UTF_8)) }
   }
-
-  /** An array header of `n` elements; -1 is the null array. */
-  def array(n: Int): RespWriter = header('*', n)
 
   /** One stream entry, `[id, [f1, v1, f2, v2, …]]`, fields in the
     * order the message holds them. */
@@ -342,9 +335,8 @@ private[streaming] final class RespWriter {
   }
 
   private def line(kind: Char, s: String): RespWriter = {
-    put(kind)
-    val from = at
-    if (!ascii(s)) raw(s.getBytes(UTF_8))
+    val from = at + 1
+    if (!put(kind).ascii(s)) raw(s.getBytes(UTF_8))
     // in UTF-8 the bytes CR and LF encode only those two characters
     for (i <- from until at if buf(i) == '\r' || buf(i) == '\n') buf(i) = ' '
     crlf()
@@ -374,22 +366,20 @@ private[streaming] final class RespWriter {
     i == s.length
   }
 
-  private def raw(b: Array[Byte]): Unit = {
+  private def raw(b: Array[Byte]): RespWriter = {
     room(b.length)
     System.arraycopy(b, 0, buf, at, b.length)
     at += b.length
-  }
-
-  private def crlf(): RespWriter = {
-    put('\r')
-    put('\n')
     this
   }
 
-  private def put(c: Char): Unit = {
+  private def crlf(): RespWriter = put('\r').put('\n')
+
+  private def put(c: Char): RespWriter = {
     room(1)
     buf(at) = c.toByte
     at += 1
+    this
   }
 
   private def room(n: Int): Unit = if (n > buf.length - at)
@@ -399,7 +389,8 @@ private[streaming] final class RespWriter {
 private[streaming] object RespWriter {
   /** A fresh writer's buffer: a small command or reply fits in it. */
   val BaseSize = 512
-  /** The largest buffer [[RespWriter.reset]] keeps for the next reply. */
+  /** The largest buffer [[RespWriter.writeTo]] keeps for the next
+    * bytes, and the most a connection holds before it writes out. */
   val MaxKept: Int = 64 * 1024
 }
 

@@ -72,20 +72,27 @@ final class RespLoopback(clock: Clock = SystemClock) {
     * never JVM exceptions; an incomplete trailing command gets no reply. */
   def call(request: Array[Byte]): Array[Byte] = {
     val w = new RespWriter
-    serve(new RespCommandFramer(RespServer.MaxFrameBytes), request, 0, request.length, w)
+    serve(new RespCommandFramer(RespServer.MaxFrameBytes), request, 0, request.length, w, _ => ())
     w.toByteArray
   }
 
   /** Frame → execute → write, the one step behind [[call]] and every
     * [[RespServer]] connection: each command `framer` completes from
-    * the bytes is executed and its reply written to `w`. A framed but
-    * malformed command answers `ERR malformed command`; an unframeable
-    * stream answers its fatal error once and returns false, because the
-    * stream cannot be resynchronized — the connection closes. */
+    * the bytes is executed and its reply written to `w`. Once a reply
+    * leaves `w` holding more than [[RespWriter.MaxKept]] bytes, `w` goes
+    * to `spill` (a connection writes it to its socket), so pipelined
+    * commands hold at most one large reply, not one per command. A
+    * framed but malformed command answers `ERR malformed command`; an
+    * unframeable stream answers its fatal error once and returns false,
+    * because the stream cannot be resynchronized — the connection
+    * closes. */
   private[streaming] def serve(framer: RespCommandFramer, bytes: Array[Byte], off: Int, len: Int,
-      w: RespWriter): Boolean = {
+      w: RespWriter, spill: RespWriter => Unit): Boolean = {
     val (commands, fatal) = framer.feed(bytes, off, len)
-    commands.foreach(_.fold(_ => w.error("ERR malformed command"), respond(_, w)))
+    commands.foreach { c =>
+      c.fold(_ => w.error("ERR malformed command"), respond(_, w))
+      if (w.size > RespWriter.MaxKept) spill(w)
+    }
     fatal.foreach(w.error)
     fatal.isEmpty
   }

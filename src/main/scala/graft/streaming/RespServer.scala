@@ -17,12 +17,13 @@ import RespCodec._
   * strings) and the server's 8 MiB command cap, [[RespClient]] a reply
   * queue and its 512 MiB reply cap. [[RespWriter]] writes each reply
   * once: a connection keeps one writer, the dispatch writes into it,
-  * and its bytes go to the socket in one write per fragment. The
-  * frame → execute → write step is [[RespLoopback.serve]], shared with
-  * the in-process [[RespLoopback.call]], so a socket and an in-process
-  * call read commands by one grammar, and pipelining (several commands
-  * in one segment) and fragmentation (one command across many
-  * segments) fall out of the same loop with no extra code.
+  * and its bytes go to the socket in one write per fragment, or as
+  * soon as they pass 64 KiB. The frame → execute → write step is
+  * [[RespLoopback.serve]], shared with the in-process
+  * [[RespLoopback.call]], so a socket and an in-process call read
+  * commands by one grammar, and pipelining (several commands in one
+  * segment) and fragmentation (one command across many segments) fall
+  * out of the same loop with no extra code.
   *
   * Concurrency: one daemon acceptor thread, one daemon handler thread
   * per connection. All command execution funnels into
@@ -94,7 +95,10 @@ final class RespServer(
     * connection's [[RespCommandFramer]] through [[RespLoopback.serve]],
     * which writes the reply of every command it completes, in order,
     * into the connection's [[RespWriter]] (pipelining falls out of the
-    * loop for free); the writer's bytes go to the socket in one write.
+    * loop for free); the writer's bytes go to the socket in one write
+    * per fragment, or sooner once they pass [[RespWriter.MaxKept]], so a
+    * client that pipelines large reads and does not read the replies is
+    * held back by TCP, not by the server's heap.
     * The framer reads each byte once, so a 1 MiB command trickled one
     * byte per segment costs O(n), and caps the in-flight command at
     * [[RespServer.MaxFrameBytes]] (Redis's proto-max-bulk-len analog):
@@ -111,9 +115,8 @@ final class RespServer(
       while (open) {
         val n = in.read(chunk)
         // false after a fatal reply: an unframed stream cannot resync
-        open = n >= 0 && loopback.serve(framer, chunk, 0, n, writer)
+        open = n >= 0 && loopback.serve(framer, chunk, 0, n, writer, _.writeTo(out))
         writer.writeTo(out)
-        writer.reset()
       }
     } catch { case _: Exception => () } // peer reset — just clean up
     finally {
@@ -218,7 +221,6 @@ final class RespClient(host: String, port: Int) extends AutoCloseable {
   /** One request→reply exchange. */
   def call(args: Seq[String]): Reply = {
     writeCommand(args, writer).writeTo(out)
-    writer.reset()
     readReply()
   }
 

@@ -191,17 +191,18 @@ class RespCodecSpec extends AnyFunSuite {
     }
   }
 
-  test("a writer that grew past MaxKept goes back to its base buffer when it resets") {
+  test("a writer that grew past MaxKept goes back to its base buffer when it writes out") {
     val w = new RespWriter
+    val sink = java.io.OutputStream.nullOutputStream()
     assert(w.capacity == RespWriter.BaseSize)
     w.bulk(new Array[Byte](1 << 20))
     assert(w.size == (1 << 20) + 12 && w.capacity > (1 << 20))
-    w.reset()
+    w.writeTo(sink)
     assert(w.size == 0 && w.capacity == RespWriter.BaseSize)
     // a reply under MaxKept keeps its buffer for the next one
     w.bulk(new Array[Byte](4096))
     val grown = w.capacity
-    w.reset()
-    assert(grown > RespWriter.BaseSize && w.capacity == grown)
+    w.writeTo(sink)
+    assert(grown > RespWriter.BaseSize && w.size == 0 && w.capacity == grown)
   }
 }

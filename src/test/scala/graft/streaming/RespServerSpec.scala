@@ -350,6 +350,55 @@ class RespServerSpec extends AnyFunSuite {
     }
   }
 
+  test("pipelined large XRANGEs are written out as they go: a client that does not read holds the server back") {
+    withServer { (server, _) =>
+      // 512 entries of a 1000-byte value: each reply is about 520 KB
+      val log = server.loopback.streamLog("big")
+      (0 until 512).foreach(i => log.add(Map("i" -> i.toString, "v" -> "x" * 1000)))
+      val commands = 64
+      val request = Array.fill(commands)(encodeStrings(StreamCommands.xrange("big"))).flatten
+      val sock = new java.net.Socket()
+      try {
+        sock.setReceiveBufferSize(64 << 10) // no receive-side autotuning
+        sock.connect(new java.net.InetSocketAddress(server.host, server.port))
+        sock.getOutputStream.write(request) // about 2.6 KB: one read on the server
+        sock.getOutputStream.flush()
+        val mx = java.lang.management.ManagementFactory.getThreadMXBean
+          .asInstanceOf[com.sun.management.ThreadMXBean]
+        val name = s"resp-conn-${sock.getLocalPort}"
+        def handler = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread]).find(_.getName == name)
+        val deadline = System.nanoTime() + 5000000000L
+        while (handler.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+        val id = handler.getOrElse(fail(s"no thread $name")).getId
+        // the handler works until the socket buffers are full, then blocks
+        var last = -1L
+        var now = mx.getThreadAllocatedBytes(id)
+        while (now != last) { last = now; Thread.sleep(300); now = mx.getThreadAllocatedBytes(id) }
+        // 64 replies held at once are about 33 MB in the writer, and the
+        // handler allocated 74 MB while it doubled; written out as they
+        // go, the kernel's buffers (a few MB) hold back the rest, and the
+        // handler allocated 10.5 MB (4-core box, 4 MB send buffer cap)
+        assert(now < (32 << 20), s"the handler allocated $now bytes while the client read nothing")
+        // every reply still arrives, whole and in order
+        val reader = new RespReader(RespClient.MaxReplyBytes)
+        val chunk = new Array[Byte](65536)
+        var got = 0
+        while (got < commands) {
+          val n = sock.getInputStream.read(chunk)
+          assert(n > 0, s"connection closed after $got replies")
+          val (values, fatal) = reader.feed(chunk, 0, n)
+          assert(fatal.isEmpty, fatal)
+          values.foreach {
+            case (ArrayReply(Some(entries)), _) =>
+              assert(entries.length == 512 && parseEntry(entries.last).content("v").length == 1000)
+              got += 1
+            case (other, _) => fail(s"bad XRANGE reply: ${other.getClass}")
+          }
+        }
+      } finally sock.close()
+    }
+  }
+
   test("nested huge array headers allocate nothing: the server answers a protocol error") {
     // 64 array headers of 2.8M elements each, 640 bytes in all: sizing
     // element storage from the header would take ~1 GB on the server
